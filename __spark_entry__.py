@@ -1728,29 +1728,31 @@ def q_text_index_suggest(spark, sf):
 
 
 def q_text_index_suggest_maint(spark, sf):
-    """The terms rollup's EXACT-DELTA maintenance under the oracle: build
-    on 90% of the corpus, in-place-upsert the missing 10%, delete a slice
-    and re-add it — the mutations net to the full corpus, so the oracle
-    is the same scan-time df-ranked replay, but any drift in the
-    per-term added/removed deltas (`_advance_terms_rollup`) would
+    """Autocomplete over a maintained index under the oracle: build on 90%
+    of the corpus, segmented-upsert the missing 10%, delete a slice and
+    re-add it — the mutations net to the full corpus, so the oracle is
+    the same scan-time df-ranked replay, but any drift in the live
+    per-term df recount across segments (`live_prefix_slice`) would
     hash-mismatch here."""
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
-        delete_from_text_index,
         suggest_from_index,
-        upsert_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        delete_from_text_index_segmented,
+        upsert_text_index_segmented,
     )
 
     docs = _docs(spark, sf).select("doc_id", "text")
     root = tempfile.mkdtemp(prefix="adls_txtsugm_")
     try:
         build_text_index(docs.where(F.col("doc_id") % 10 != 0), root, n_buckets=64)
-        upsert_text_index(
+        upsert_text_index_segmented(
             spark, root, docs.where(F.col("doc_id") % 10 == 0), n_buckets=64
         )
         victims = docs.where(F.col("doc_id") % 17 == 0)
-        delete_from_text_index(spark, root, victims.select("doc_id"), n_buckets=64)
-        upsert_text_index(spark, root, victims, n_buckets=64)
+        delete_from_text_index_segmented(spark, root, victims.select("doc_id"))
+        upsert_text_index_segmented(spark, root, victims, n_buckets=64)
         return _persisted(spark, suggest_from_index(spark, root, "s", k=10))
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -1871,14 +1873,16 @@ def q_search_synonyms(spark, sf):
 
 
 def q_text_index_upsert_topk(spark, sf):
-    """MergeOrUpload into the saved inverted index (sources/text_index.py):
+    """MergeOrUpload into the saved inverted index (sources/text_segments.py):
     build on doc_id>=10, insert docs 0-9 and replace docs 10-14 with new
-    text (their old postings must vanish), then answer BM25 top-k from the
-    upserted layout.  Oracle: the bm25 replay over the merged corpus."""
+    text (their old postings must drop out), then answer BM25 top-k from
+    the upserted layout.  Oracle: the bm25 replay over the merged corpus."""
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
         query_text_index,
-        upsert_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        upsert_text_index_segmented,
     )
 
     docs = _docs(spark, sf).select("doc_id", "text")
@@ -1891,7 +1895,7 @@ def q_text_index_upsert_topk(spark, sf):
     root = tempfile.mkdtemp(prefix="adls_txtups_")
     try:
         build_text_index(base, root, n_buckets=64)
-        upsert_text_index(spark, root, delta, n_buckets=64)
+        upsert_text_index_segmented(spark, root, delta, n_buckets=64)
         out = query_text_index(spark, root, SEARCH_TERMS, k=20, n_buckets=64)
         return _persisted(spark, out)
     finally:
@@ -2033,10 +2037,9 @@ def q_text_index_lsm_topk(spark, sf):
     build on doc_id>=10, then THREE stacked O(batch) segments — upsert
     (insert 0-9, replace 10-14), delete 15-19, upsert re-adding doc 15
     with fresh text — and answer BM25 top-k through the last-writer-wins
-    resolution.  Unlike the in-place `text_index_upsert_topk`, nothing
-    existing is rewritten: each mutation writes only its batch (the scale
-    path for Zipf text, where any batch's terms touch ~every bucket —
-    measured in BENCH_sf1_r07.json).  Oracle: the bm25 replay over the
+    resolution.  Nothing existing is rewritten: each mutation writes only
+    its batch (the scale path for Zipf text, where any batch's terms touch
+    ~every bucket — measured in BENCH_sf1_r07.json).  Oracle: the bm25 replay over the
     logical corpus (>=20 original, 0-9 inserted, 10-14 replaced, 16-19
     deleted, 15 revived)."""
     from azuredatalakeindexer_spark.sources.text_index import (
@@ -2075,10 +2078,11 @@ def q_text_index_lsm_topk(spark, sf):
 
 def q_stream_text_index(spark, sf):
     """Continuously-maintained inverted index: drain document arrivals
-    (availableNow, 1 file per trigger → build + 3 upsert micro-batches)
-    into the saved text index, then answer BM25 top-k from it.  The
-    upsert is LWW per doc and batch-split-invariant, so the result equals
-    the scan-time bm25 over the whole corpus — the oracle replays that."""
+    (availableNow, 1 file per trigger → build + 3 segmented upsert
+    micro-batches) into the saved text index, then answer BM25 top-k from
+    it with the segments still live.  The upsert is LWW per doc and
+    batch-split-invariant, so the result equals the scan-time bm25 over
+    the whole corpus — the oracle replays that."""
     from azuredatalakeindexer_spark.sources.text_index import (
         query_text_index,
         run_stream_text_index,
@@ -2108,14 +2112,12 @@ def q_stream_text_index(spark, sf):
 
 
 def q_stream_text_index_lsm(spark, sf):
-    """Segmented streaming index maintenance: the same document-arrival
-    drain as `stream_text_index`, but every post-build micro-batch is an
-    O(batch) LSM segment (`text_segments.upsert_text_index_segmented`)
-    with `compact_every=2` folding mid-stream — the scale-correct shape
-    for continuous text ingestion (in-place rewrites grow linearly with
-    index size: BENCH_sf10_r07.json).  LWW per doc keeps it
-    batch-split-invariant, so the oracle is the same scan-time bm25
-    replay."""
+    """Segmented streaming index maintenance with compaction: the same
+    document-arrival drain as `stream_text_index` (every post-build
+    micro-batch an O(batch) LSM segment,
+    `text_segments.upsert_text_index_segmented`), with `compact_every=2`
+    folding mid-stream.  LWW per doc keeps it batch-split-invariant, so
+    the oracle is the same scan-time bm25 replay."""
     from azuredatalakeindexer_spark.sources.text_index import (
         query_text_index,
         run_stream_text_index,
@@ -2135,7 +2137,6 @@ def q_stream_text_index_lsm(spark, sf):
             os.path.join(root, "ckpt"),
             n_buckets=64,
             max_files_per_trigger=1,
-            segmented=True,
             compact_every=2,
         )
         out = query_text_index(
@@ -2153,15 +2154,17 @@ def q_text_index_delete_topk(spark, sf):
     over documents with doc_id >= 10."""
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
-        delete_from_text_index,
         query_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        delete_from_text_index_segmented,
     )
 
     root = tempfile.mkdtemp(prefix="adls_txtdel_")
     try:
         build_text_index(_docs(spark, sf), root, n_buckets=64)
         ids = spark.range(0, 10).withColumnRenamed("id", "doc_id")
-        delete_from_text_index(spark, root, ids, n_buckets=64)
+        delete_from_text_index_segmented(spark, root, ids)
         out = query_text_index(spark, root, SEARCH_TERMS, k=20, n_buckets=64)
         return _persisted(spark, out)
     finally:
@@ -2595,8 +2598,8 @@ def q_text_index_profile_phrase_pos(spark, sf):
     the substring-matching ``"stored"`` default.  One third of the
     corpus arrives as a pending LSM SEGMENT (positions ride the
     segmented tier too, r13) so the adjacency check exercises the
-    doc-level LWW resolution of POSITIONAL rows; the in-place positional
-    lifecycle is driver-gated by `text_index_profile_near`."""
+    doc-level LWW resolution of POSITIONAL rows; the positional
+    upsert + delete lifecycle is driver-gated by `text_index_profile_near`."""
     from azuredatalakeindexer_spark.sources.profile_index import (
         build_profile_index,
         simple_query_profile_from_index,
@@ -2637,19 +2640,21 @@ def q_text_index_profile_near(spark, sf):
     served FROM the positional multi-field index (r13 — VERDICT r12
     stretch-#8, the last text-surface query type not composed with
     profiles): the index is built with ``positions=True`` (per-field
-    Lucene-style positional postings), exercised through the full
-    IN-PLACE maintenance lifecycle — an upsert inserts one third of the
-    corpus (positions regenerated for the batch, preserved for the
-    rest), a delete removes the ``doc_id % 7 == 0`` docs — and then
+    Lucene-style positional postings), exercised through the segmented
+    maintenance lifecycle — an upsert inserts one third of the corpus
+    (positions regenerated for the batch, preserved for the rest), a
+    delete removes the ``doc_id % 7 == 0`` docs — and then
     ``merge NEAR/2 stream`` (ordered) must hold in at least one weighted
     field while the two terms rank through both fields with index-global
     stats.  The oracle replays the multi-field profile over the LOGICAL
     post-maintenance corpus re-cut to the position-pair allowed set."""
     from azuredatalakeindexer_spark.sources.profile_index import (
         build_profile_index,
-        delete_from_profile_index,
         near_profile_from_index,
-        upsert_profile_index,
+    )
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        delete_from_profile_index_segmented,
+        upsert_profile_index_segmented,
     )
 
     docs = _docs(spark, sf)
@@ -2663,10 +2668,10 @@ def q_text_index_profile_near(spark, sf):
             n_buckets=64,
             positions=True,
         )
-        upsert_profile_index(
+        upsert_profile_index_segmented(
             spark, root, docs.where(F.col("doc_id") % 3 == 0)
         ).count()
-        delete_from_profile_index(
+        delete_from_profile_index_segmented(
             spark, root, docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
         )
         out = near_profile_from_index(
@@ -2738,8 +2743,9 @@ def q_text_index_profile_lsm(spark, sf):
     segments (upsert segment + tombstone segment), then the scoring
     profile served WITH THE SEGMENTS STILL PENDING — doc-level
     last-writer-wins resolution across base + segments, exact per-field
-    stats advanced per op.  Identical logical corpus to the in-place
-    entry, so the oracle is the same scan-time profile replay."""
+    stats advanced per op.  Identical logical corpus to
+    `text_index_profile_upsert`, so the oracle is the same scan-time
+    profile replay."""
     from azuredatalakeindexer_spark.sources.profile_index import (
         build_profile_index,
         query_profile_index,
@@ -2786,7 +2792,7 @@ def q_stream_highlight_lsm(spark, sf):
     (r10 — closes VERDICT r9 missing-#1: docstore × segmented-LSM
     composition): the document stream drains availableNow into a
     docstore-backed segmented index (`run_stream_text_index(
-    segmented=True, store_text=True)`, compact_every=3 folding
+    store_text=True)`, compact_every=3 folding
     mid-stream), leaving live segments whose per-segment docstores the
     serve path must resolve by the max-segment rule
     (`text_segments.live_docstore_slice`) — then `highlight_from_index`
@@ -2812,7 +2818,6 @@ def q_stream_highlight_lsm(spark, sf):
             os.path.join(root, "ckpt"),
             n_buckets=64,
             max_files_per_trigger=1,
-            segmented=True,
             compact_every=3,
             store_text=True,
         )
@@ -2831,19 +2836,21 @@ def q_stream_highlight_lsm(spark, sf):
 
 
 def q_text_index_profile_upsert(spark, sf):
-    """Multi-field index MAINTENANCE lifecycle (`sources/profile_index.py::
-    upsert_profile_index` / `delete_from_profile_index`, r9): MergeOrUpload
-    a rewrite batch (docs ≡ 0 mod 4 — new text, source flipped to src1,
-    n_chars +10), delete docs ≡ 0 mod 7, then serve the scoring profile
-    from the maintained index.  Affected postings buckets and doclens /
-    docvals dbuckets only, per-field stats recomputed, all under one
+    """Multi-field index MAINTENANCE lifecycle (`sources/profile_segments.py::
+    upsert_profile_index_segmented` / `delete_from_profile_index_segmented`):
+    MergeOrUpload a rewrite batch (docs ≡ 0 mod 4 — new text, source
+    flipped to src1, n_chars +10), delete docs ≡ 0 mod 7, then serve the
+    scoring profile from the maintained index.  Each op writes one O(batch)
+    segment and advances the per-field stats exactly, under one
     staged-commit journal.  The oracle replays the scan-time profile over
     the logical post-maintenance corpus."""
     from azuredatalakeindexer_spark.sources.profile_index import (
         build_profile_index,
-        delete_from_profile_index,
         query_profile_index,
-        upsert_profile_index,
+    )
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        delete_from_profile_index_segmented,
+        upsert_profile_index_segmented,
     )
 
     docs = _docs(spark, sf)
@@ -2862,8 +2869,8 @@ def q_text_index_profile_upsert(spark, sf):
             F.lit("src1").alias("source"),
             (F.col("n_chars") + 10).alias("n_chars"),
         )
-        upsert_profile_index(spark, root, delta).count()
-        delete_from_profile_index(
+        upsert_profile_index_segmented(spark, root, delta).count()
+        delete_from_profile_index_segmented(
             spark, root, docs.select("doc_id").where(F.col("doc_id") % 7 == 0)
         )
         out = query_profile_index(
@@ -3765,10 +3772,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_index_profile_fuzzy": q_text_index_profile_fuzzy,
         "text_index_profile_wildcard": q_text_index_profile_wildcard,
         "stream_profile_facets_filtered": q_stream_profile_facets_filtered,
-        # -- CHANGED this round (r11): every text/profile build & upsert
-        # -- now derives doclens (dl + victim-directory bucket set) from
+        # -- every text/profile build & upsert derives doclens (dl) from
         # -- the postings relation the same job already materializes —
-        # -- one tokenize + one hash pass per build (r10 verdict wrong-#1)
+        # -- one tokenize pass per build
         "text_index_profile_topk": q_text_index_profile_topk,
         "text_index_profile_upsert": q_text_index_profile_upsert,
         "text_index_profile_filtered": q_text_index_profile_filtered,
@@ -5960,7 +5966,7 @@ def oracle_sql() -> dict[str, str]:
 
     # NEAR composed with the field-weighted profile (r13): positives
     # {merge, stream} rank through both weighted fields over the LOGICAL
-    # post-maintenance corpus (doc_id % 7 != 0 after the in-place
+    # post-maintenance corpus (doc_id % 7 != 0 after the segmented
     # delete); the allowed set is docs where an ordered merge..stream
     # position pair within slop=2 (p2 > p1 AND p2 <= p1 + 3) exists in
     # at least one weighted field — the same position-list replay as
@@ -6143,9 +6149,9 @@ def oracle_sql() -> dict[str, str]:
       WHERE round(total, 6) > 0
       ORDER BY score DESC, doc_id LIMIT 20
     """
-    # the segmented (LSM) maintenance path applies the SAME batches and
-    # serves with doc-level last-writer-wins resolution — identical
-    # logical corpus, so its oracle IS the in-place entry's replay
+    # text_index_profile_lsm applies the SAME batches and serves with the
+    # segments still pending — identical logical corpus, so its oracle IS
+    # text_index_profile_upsert's replay
     sqls["text_index_profile_lsm"] = sqls["text_index_profile_upsert"]
     # the streaming drain is batch-split-invariant (doc-level LWW) over
     # the full corpus — same replay as the one-shot profile build+serve

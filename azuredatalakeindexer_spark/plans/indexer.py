@@ -75,8 +75,21 @@ def run_document_indexer(
     """Run the full §3.1 pipeline over a JSON lake directory."""
     paths = list_paths(path_index, options)
     paths_count = paths.count()
+    if paths_count == 0:
+        # nothing passed the watermark: no lake read runs, so the observed
+        # read metrics would never be filled in — report an empty run
+        return IndexerResult(
+            merged=existing_index,
+            paths_count=0,
+            document_read_count=0,
+            document_read_failed_count=0,
+            processed_count=0,
+            created_count=0,
+            modified_count=0,
+            failed_too_large_count=0,
+        )
 
-    docs = read_json_documents(spark, lake_root, TEST_INDEX_SCHEMA)
+    docs =read_json_documents(spark, lake_root, TEST_INDEX_SCHEMA)
     # metric names must be unique per session → suffix each run
     import uuid
 

@@ -34,6 +34,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from azuredatalakeindexer_spark.functions.localrel import tiny_df
+from azuredatalakeindexer_spark.sources.staging import _hadoop_fs, hadoop_path_exists
 from azuredatalakeindexer_spark.operators.similarity import (
     assign_cells,
     cosine_expr,
@@ -585,21 +586,6 @@ def delete_from_ivf_index(
     )
     commit.promote()
     return int(n_removed)
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the Hadoop FS API — works for any
-    URI scheme the cluster can reach (file://, abfss://, s3a://, hdfs://),
-    unlike ``os.path``, which silently answers False for remote URIs."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(hpath))
 
 
 def _any_partition_dirs(spark: SparkSession, base_path: str, part_col: str) -> bool:
@@ -1452,7 +1438,7 @@ def run_stream_pq_index(
     stream — the same watch→upsert loop as ``run_stream_ann_index``
     (reference §3.1 + T1) for the compressed index, completing the
     streaming-maintenance symmetry: every persisted layout this engine
-    serves (text in-place, text LSM, IVF, IVF-PQ) now has batch AND
+    serves (text LSM, profile LSM, IVF, IVF-PQ) now has batch AND
     streaming maintenance.
 
     ``availableNow`` drains the backlog and terminates (T7); the first

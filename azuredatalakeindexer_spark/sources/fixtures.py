@@ -125,7 +125,7 @@ def build_path_index(orders: DataFrame) -> DataFrame:
 
     One lake file per order; ``lastModified`` (the incremental watermark
     column, PathIndexModel.cs:24-25) is the order date so watermark filters
-    select deterministic subsets.
+    select deterministic slices of the lake.
     """
     # NB: no ensure_parallelism here — the key derivation is ~µs/row, and a
     # repartition shuffle costs more than single-split evaluation (measured)

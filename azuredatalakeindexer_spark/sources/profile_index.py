@@ -46,8 +46,9 @@ is a tiny aggregate of that same relation; doclens/docvals join by doc
 key on the candidate set only; the top-k is TakeOrderedAndProject.  The
 corpus is never rescanned.
 
-Maintenance (upsert/delete) follows the single-field in-place ops'
-affected-partition discipline under the same staged-commit journal
+Maintenance (upsert/delete) writes O(batch) segments and
+``compact_profile_index`` folds them back (``sources/profile_segments.py``),
+under the same staged-commit journal as the single-field index
 (``sources/staging.py``).
 """
 
@@ -60,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from azuredatalakeindexer_spark.functions.localrel import tiny_df
 from azuredatalakeindexer_spark.functions.text import portable_hash64, tokens
+from azuredatalakeindexer_spark.sources.staging import _hadoop_fs, hadoop_path_exists
 from azuredatalakeindexer_spark.sources.text_index import _py_bucket, _sqld, _sqlstr
 
 
@@ -209,17 +211,17 @@ def build_profile_index(
     reference marks fields retrievable, `IndexModels/TextIndexModel.cs:
     24-34`) and what ``simple_query_profile_from_index`` evaluates
     PHRASE predicates against (substring semantics need stored text).
-    All maintenance ops — in-place and segmented — advance it.
+    Every segmented upsert advances it, and compaction folds it.
 
     ``positions=True`` stores per-field positional postings (sorted
     1-based token positions) so NEAR/proximity and token-adjacency
     phrase predicates compose with scoring profiles
     (``near_profile_from_index``, ``phrase_mode="positions"``, r13) —
     the profile twin of ``build_text_index(positions=True)``.  Positions
-    ride EVERY maintenance path: in-place upsert/delete preserve the
-    column, segmented upserts regenerate it for the batch, tombstone
-    deletes are position-free by construction, and compaction folds the
-    live lists back into the base — same contract as the text surface.
+    ride the maintenance path: segmented upserts regenerate them for the
+    batch, tombstone deletes are position-free by construction, and
+    compaction folds the live lists back into the base — same contract as
+    the text surface.
     """
     if not field_cols:
         raise ValueError("build_profile_index needs at least one field")
@@ -230,12 +232,10 @@ def build_profile_index(
     postings = _postings_rows(stacked, id_col, n_buckets, positions=positions)
 
     def _postings_chain() -> None:
-        # the DEPENDENT chain: postings on disk → per-(doc, field) dl +
-        # victim-directory bucket set DERIVED from the postings just
-        # written (narrow read-back) plus an id-only corpus projection
-        # crossed with the static field list for the zero-token rows —
-        # one tokenize pass, one hash pass total (r10 verdict wrong-#1:
-        # the old `_buckets_expr` doclens pass doubled the build cost).
+        # the DEPENDENT chain: postings on disk → per-(doc, field) dl
+        # DERIVED from the postings just written (narrow read-back) plus
+        # an id-only corpus projection crossed with the static field list
+        # for the zero-token rows — one tokenize pass total.
         # The doclens rows are checkpointed ONCE (per-doc rows — corpus-
         # count-sized, orders smaller than the postings) so the doclens
         # write and the fieldstats rollup both consume the materialized
@@ -326,7 +326,6 @@ def _read_meta(spark: SparkSession, path: str) -> tuple[int, list[str], list[str
     prefers the ``meta.json`` sidecar (driver-side FS read, no Spark
     job); falls back to the parquet ``meta`` relation for indexes built
     before the sidecar."""
-    from azuredatalakeindexer_spark.sources.ann_index import _hadoop_fs
     from azuredatalakeindexer_spark.sources.staging import _read_file
 
     fs, hpath = _hadoop_fs(spark, f"{path}/meta.json")
@@ -707,20 +706,6 @@ def facets_from_index(
     return facet_counts(vals, list(facet_cols), top_n=top_n)
 
 
-def _require_unsegmented_profile(spark: SparkSession, path: str, op: str) -> None:
-    """The in-place maintenance ops rewrite base partitions directly and
-    would silently ignore LSM segments layered on top; force a compaction
-    first rather than corrupt the merged view."""
-    from azuredatalakeindexer_spark.sources.profile_segments import list_segments
-
-    if list_segments(spark, path):
-        raise ValueError(
-            f"{op}: index at {path} has LSM segments; run "
-            "compact_profile_index() first or use the *_segmented "
-            "maintenance ops"
-        )
-
-
 def _dedupe_profile_delta(delta: DataFrame, id_col: str, cols) -> DataFrame:
     """One deterministic row per id within an upsert batch: max over the
     row's (field, attr) struct — the multi-column mirror of
@@ -730,519 +715,6 @@ def _dedupe_profile_delta(delta: DataFrame, id_col: str, cols) -> DataFrame:
         F.max(F.struct(*[F.col(c) for c in cols])).alias("_v")
     )
     return packed.select(id_col, *[F.col(f"_v.{c}").alias(c) for c in cols])
-
-
-def upsert_profile_index(
-    spark: SparkSession,
-    path: str,
-    delta: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    broadcast_ids: bool = True,
-) -> DataFrame:
-    """MergeOrUpload into the saved multi-field index — the reference's
-    batch-upsert contract (`AzureSearchIndexer/BatchingUploader.cs:34`)
-    for the profile-serving layout: new documents inserted, existing ones
-    replaced across EVERY searchable field and persisted attribute.
-    Returns ``(id_col, status)`` with 201=created / 200=modified.
-
-    Cost shape mirrors ``upsert_text_index``: the delta is tokenized and
-    aggregated batch-sized; victims are located via a column-pruned
-    (id, bucket) postings projection; ONLY affected postings buckets and
-    affected doclens/docvals dbuckets are rewritten — all staged and
-    promoted by one journaled rename pass (``sources/staging.py``), with
-    the per-field stats recomputed from the post-merge doclens under the
-    same commit.  After the upsert, ``query_profile_index`` answers
-    bit-identically to a fresh build over (base ∖ replaced) ∪ delta
-    (test-pinned; the oracle replays the scan-time profile on that
-    logical corpus).
-
-    ``broadcast_ids=False`` switches every delta-id lookup (victims,
-    statuses, keep anti-joins) to shuffled joins for rebuild-sized
-    batches whose id set is not driver-broadcastable — the same contract
-    as ``upsert_text_index(broadcast_ids=False)``.
-    """
-    from azuredatalakeindexer_spark.sources.staging import (
-        StagedCommit,
-        recover_for_maintenance,
-    )
-
-    recover_for_maintenance(spark, path)
-    _require_unsegmented_profile(spark, path, "upsert_profile_index")
-    n_buckets, idx_fields, idx_attrs = _read_meta(spark, path)
-    # a column may be both searchable and an attribute (e.g. source):
-    # dedupe the struct's column list or the unpack is ambiguous
-    cols = list(dict.fromkeys(list(idx_fields) + list(idx_attrs)))
-    from azuredatalakeindexer_spark.sources.text_index import (
-        _lens_from_postings,
-        _victim_buckets,
-    )
-
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-
-    postings_path = f"{path}/postings"
-    # Layer 0: the batch checkpoint and the two layout schema probes
-    # (parquet footers — driver-side listing + footer reads, no Spark
-    # job) are mutually independent; overlap them (r14) instead of
-    # serializing two directory opens behind the batch materialization.
-    deduped, has_bsets, has_pos = run_concurrent(
-        lambda: _dedupe_profile_delta(delta, id_col, cols).localCheckpoint(),
-        lambda: "buckets" in spark.read.parquet(f"{path}/doclens").columns,
-        lambda: "pos" in spark.read.parquet(postings_path).columns,
-    )
-    # stacked is consumed only by new_postings/new_lens, which are
-    # themselves checkpointed — re-deriving it from the checkpointed
-    # deduped batch inside those jobs is cheaper than a third
-    # batch-sized materialization (r10 fixed-overhead trim)
-    stacked = _stack_fields(deduped, idx_fields, id_col)
-    delta_ids = deduped.select(id_col)
-    dkeys = F.broadcast(delta_ids) if broadcast_ids else delta_ids
-    pcols = ["term", id_col, "field", "tf"] + (["pos"] if has_pos else []) + [
-        "bucket"
-    ]
-
-    # The pre-write critical path is latency-bound sequential driver
-    # actions (same r12 finding as upsert_text_index) — layer by data
-    # dependency and run each layer's independent members concurrently.
-    #
-    # Layer 1: the delta postings checkpoint and the batch's id-hash
-    # partition list.
-    new_postings, daffected = run_concurrent(
-        lambda: _postings_rows(
-            stacked, id_col, n_buckets, positions=has_pos
-        ).localCheckpoint(),
-        lambda: [
-            r["b"]
-            for r in deduped.select(
-                F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("b")
-            )
-            .distinct()
-            .collect()
-        ],
-    )
-
-    # Layer 2: three mutually independent chains over layer-1 outputs.
-    def _chain_affected():
-        # victim buckets via the doclens bucket-set column (dbucket-pruned
-        # read, O(batch buckets)); legacy indexes without the column fall
-        # back to the full column-pruned postings projection (r9 wrong-#3)
-        vic_buckets = _victim_buckets(spark, path, dkeys, daffected, id_col)
-        if vic_buckets is None:
-            victims = (
-                spark.read.parquet(postings_path)
-                .select(id_col, "bucket")
-                .join(dkeys, id_col, "left_semi")
-            )
-            return [
-                r["bucket"]
-                for r in new_postings.select("bucket")
-                .union(victims.select("bucket"))
-                .distinct()
-                .collect()
-            ]
-        new_buckets = [
-            r["bucket"] for r in new_postings.select("bucket").distinct().collect()
-        ]
-        return sorted(set(new_buckets) | set(vic_buckets))
-
-    def _chain_doclens():
-        # dl + bucket set derived from the CHECKPOINTED delta postings plus
-        # the batch's (id, field) pairs for zero-token rows — no second
-        # tokenize or hash pass over the batch (r10 verdict wrong-#1)
-        pairs = deduped.select(
-            F.col(id_col),
-            F.explode(F.array(*[F.lit(f) for f in idx_fields])).alias("field"),
-        )
-        new_lens = _lens_from_postings(
-            new_postings, pairs, id_col, n_buckets, per_field=True, bsets=has_bsets
-        ).localCheckpoint()
-        dkeep = (
-            spark.read.parquet(f"{path}/doclens")
-            .where(F.col("dbucket").isin(daffected))
-            .join(dkeys, id_col, "left_anti")
-            .select(
-                id_col,
-                "field",
-                "dl",
-                *(["buckets"] if has_bsets else []),
-                "dbucket",
-            )
-        )
-        dmerged = dkeep.unionByName(new_lens).localCheckpoint()
-        return new_lens, dmerged
-
-    def _chain_statuses():
-        existing = (
-            spark.read.parquet(f"{path}/doclens")
-            .where(F.col("dbucket").isin(daffected))
-            .select(id_col)
-            .join(dkeys, id_col, "left_semi")
-            .distinct()
-            .withColumn("_old", F.lit(1))
-        )
-        return delta_ids.join(
-            F.broadcast(existing) if broadcast_ids else existing, id_col, "left"
-        ).select(
-            id_col,
-            F.when(F.col("_old").isNotNull(), F.lit(200))
-            .otherwise(F.lit(201))
-            .alias("status"),
-        ).localCheckpoint()
-
-    affected, (new_lens, dmerged), statuses = run_concurrent(
-        _chain_affected, _chain_doclens, _chain_statuses
-    )
-
-    commit = StagedCommit(spark, path)
-
-    # every tier's staged write derives from checkpointed batch-sized
-    # frames or pre-promote live reads no other tier moves — five
-    # mutually independent actions, submitted concurrently so their
-    # scheduling + dynamic-partition commit latencies overlap
-    # (run_concurrent); promote stays one sequential rename pass
-    def _w_postings() -> None:
-        keep = (
-            spark.read.parquet(postings_path)
-            .where(F.col("bucket").isin(affected))
-            .join(dkeys, id_col, "left_anti")
-            .select(*pcols)
-        )
-        # single evaluation: the merge writes straight to the stage dir
-        # (its only consumer), and the surviving bucket set is read off
-        # the staged directory names — no checkpoint, no collect job
-        merged = keep.unionByName(new_postings.select(*pcols))
-        merged.repartition("bucket").sortWithinPartitions("term").write.partitionBy(
-            "bucket"
-        ).parquet(commit.stage("postings"))
-        from azuredatalakeindexer_spark.sources.ann_index import (
-            _partition_dir_names,
-        )
-
-        present = [
-            int(n.split("=", 1)[1])
-            for n in _partition_dir_names(spark, commit.stage("postings"), "bucket")
-        ]
-        for b in affected:
-            if b in present:
-                commit.swap(f"postings/bucket={b}", f"postings/bucket={b}")
-            else:
-                commit.remove(f"postings/bucket={b}")
-
-    def _w_doclens() -> None:
-        dmerged.repartition("dbucket").write.partitionBy("dbucket").parquet(
-            commit.stage("doclens")
-        )
-        for b in daffected:
-            # every delta dbucket carries its own delta rows, so none empties
-            commit.swap(f"doclens/dbucket={b}", f"doclens/dbucket={b}")
-
-    def _w_fieldstats() -> None:
-        # per-field stats from the POST-state doclens (unaffected live
-        # rows ∪ the staged merge — the live read happens pre-promote)
-        stats_src = (
-            spark.read.parquet(f"{path}/doclens")
-            .where(~F.col("dbucket").isin(daffected))
-            .select(id_col, "field", "dl", "dbucket")
-            .unionByName(dmerged.select(id_col, "field", "dl", "dbucket"))
-        )
-        _write_fieldstats_from(stats_src, path, target=commit.stage("fieldstats"))
-        commit.swap("fieldstats", "fieldstats")
-
-    def _w_docvals() -> None:
-        new_vals = deduped.select(
-            F.col(id_col), *idx_attrs, _dbucket(id_col, n_buckets)
-        )
-        vkeep = (
-            spark.read.parquet(f"{path}/docvals")
-            .where(F.col("dbucket").isin(daffected))
-            .join(dkeys, id_col, "left_anti")
-            .select(id_col, *idx_attrs, "dbucket")
-        )
-        # single consumer (this write, pre-promote, against the still-live
-        # base) — a localCheckpoint here would be a pure extra
-        # materialization
-        vkeep.unionByName(new_vals).repartition("dbucket").write.partitionBy(
-            "dbucket"
-        ).parquet(commit.stage("docvals"))
-        for b in daffected:
-            commit.swap(f"docvals/dbucket={b}", f"docvals/dbucket={b}")
-
-    def _w_docstore() -> None:
-        # docstore (stored per-field texts, phrase-enabled indexes):
-        # replace the delta docs' rows in their own dbuckets under the
-        # same journal — identical partition discipline to docvals
-        new_store = _stack_stored(deduped, idx_fields, id_col, n_buckets)
-        skeep = (
-            spark.read.parquet(f"{path}/docstore")
-            .where(F.col("dbucket").isin(daffected))
-            .join(dkeys, id_col, "left_anti")
-            .select(id_col, "field", "text", "dbucket")
-        )
-        # single consumer (this write, pre-promote) — no checkpoint
-        skeep.unionByName(new_store).repartition("dbucket").write.partitionBy(
-            "dbucket"
-        ).parquet(commit.stage("docstore"))
-        for b in daffected:
-            commit.swap(f"docstore/dbucket={b}", f"docstore/dbucket={b}")
-
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
-
-    run_concurrent(
-        _w_postings,
-        _w_doclens,
-        _w_fieldstats,
-        _w_docvals if idx_attrs else None,
-        _w_docstore if hadoop_path_exists(spark, f"{path}/docstore") else None,
-    )
-    commit.promote()
-    return statuses
-
-
-def delete_from_profile_index(
-    spark: SparkSession,
-    path: str,
-    doc_ids: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    broadcast_ids: bool = True,
-) -> int:
-    """Remove documents from the saved multi-field index — the deleted-
-    blob contract (J2) for the profile-serving layout: victims leave
-    every tier (postings across all fields, doclens, docvals) under ONE
-    promotion journal, per-field stats recomputed from the survivors.
-    Returns the number of documents removed; absent ids are a no-op.
-    Deleting the last document drops doclens/docvals to typed 0-row
-    unpartitioned sentinels (a partitioned dir with zero data files
-    cannot be re-read); ``upsert_profile_index`` is not sentinel-routing
-    (rebuild with ``build_profile_index`` after a delete-all — the
-    in-place single-field index carries that path; here it would
-    duplicate it for no serving win).
-    """
-    from azuredatalakeindexer_spark.sources.ann_index import _partition_dir_names
-    from azuredatalakeindexer_spark.sources.staging import (
-        StagedCommit,
-        recover_for_maintenance,
-    )
-
-    recover_for_maintenance(spark, path)
-    _require_unsegmented_profile(spark, path, "delete_from_profile_index")
-    n_buckets, idx_fields, idx_attrs = _read_meta(spark, path)
-
-    doclens_path = f"{path}/doclens"
-    postings_path = f"{path}/postings"
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.text_index import _victim_buckets
-
-    # Layered like delete_from_text_index (r12): the pre-write critical
-    # path is latency-bound sequential driver actions — run each layer's
-    # independent members concurrently.
-    #
-    # Layer 1 (r14 fold): ONE job checkpoints the distinct ids WITH their
-    # dbucket column, so the dead ids' own partition list (statically
-    # prunes the victim lookup and the doclens rewrite) is a collect off
-    # the checkpoint, not a second scan of the caller's relation; the
-    # doclens schema probe (parquet footers, driver-side) overlaps it.
-    def _ckpt_ids():
-        frame = (
-            doc_ids.select(id_col)
-            .distinct()
-            .withColumn(
-                "_db", F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets))
-            )
-            .localCheckpoint()
-        )
-        dbs = [r["_db"] for r in frame.select("_db").distinct().collect()]
-        return frame.select(id_col), dbs
-
-    (ids, id_dbuckets), full_lens = run_concurrent(
-        _ckpt_ids, lambda: spark.read.parquet(doclens_path)
-    )
-    keys = F.broadcast(ids) if broadcast_ids else ids
-    survivors = full_lens.join(keys, id_col, "left_anti")
-    has_bsets = "buckets" in full_lens.columns
-    # No-op fast path FIRST (ADVICE r12): an idempotent redelivery of
-    # absent ids answers from ONE dbucket-pruned victim probe — the
-    # survivors emptiness scan and the postings chain never launch.  The
-    # probe also yields daffected and n_removed for the real path (ids
-    # map to exactly one dbucket, so the per-dbucket distinct counts sum
-    # exactly).
-    vrows = (
-        full_lens.where(F.col("dbucket").isin(id_dbuckets))
-        .select(id_col, "dbucket")
-        .join(keys, id_col, "left_semi")
-        .groupBy("dbucket")
-        .agg(F.countDistinct(id_col).alias("n"))
-        .collect()
-    )
-    daffected = [r["dbucket"] for r in vrows]
-    n_removed = int(sum(r["n"] for r in vrows))
-    if not daffected:
-        # none of the ids exist: every tier is untouched — idempotent
-        # no-op, and no StagedCommit was opened so no staging dir or
-        # lease is left
-        return 0
-
-    # Layer 2: the postings-side and doclens-side survivor chains.
-    def _chain_postings():
-        # victim buckets via the doclens bucket-set column (dbucket-
-        # pruned); legacy fallback scans the full column-pruned postings
-        # projection
-        vic_buckets = _victim_buckets(spark, path, keys, id_dbuckets, id_col)
-        if vic_buckets is None:
-            victims = (
-                spark.read.parquet(postings_path)
-                .select(id_col, "bucket")
-                .join(keys, id_col, "left_semi")
-            )
-            affected = [
-                r["bucket"] for r in victims.select("bucket").distinct().collect()
-            ]
-        else:
-            affected = sorted(vic_buckets)
-        keep = None
-        present: list = []
-        if affected:
-            old_postings = spark.read.parquet(postings_path)
-            # preserve the pos column on positional profile indexes
-            kcols = ["term", id_col, "field", "tf"] + (
-                ["pos"] if "pos" in old_postings.columns else []
-            ) + ["bucket"]
-            keep = (
-                old_postings.where(F.col("bucket").isin(affected))
-                .join(keys, id_col, "left_anti")
-                .select(*kcols)
-                .localCheckpoint()
-            )
-            present = [
-                r["bucket"] for r in keep.select("bucket").distinct().collect()
-            ]
-        return affected, keep, present
-
-    def _chain_doclens():
-        dkeep = (
-            full_lens.where(F.col("dbucket").isin(daffected))
-            .join(keys, id_col, "left_anti")
-            .select(
-                id_col,
-                "field",
-                "dl",
-                *(["buckets"] if has_bsets else []),
-                "dbucket",
-            )
-            .localCheckpoint()
-        )
-        dpresent = [
-            r["dbucket"] for r in dkeep.select("dbucket").distinct().collect()
-        ]
-        return dkeep, dpresent
-
-    # Layer 2: the emptied-index probe and the two survivor chains are
-    # mutually independent — submit concurrently.
-    index_emptied, (affected, keep, present), (dkeep, dpresent) = (
-        run_concurrent(
-            lambda: survivors.isEmpty(), _chain_postings, _chain_doclens
-        )
-    )
-    commit = StagedCommit(spark, path)
-
-    # survivor relations checkpointed, present/dpresent collected — the
-    # tier writes below are mutually independent; submit concurrently
-    def _w_postings() -> None:
-        survivors_elsewhere = bool(
-            set(_partition_dir_names(spark, postings_path, "bucket"))
-            - {f"bucket={b}" for b in affected}
-        )
-        if index_emptied or (not present and not survivors_elsewhere):
-            keep.write.parquet(commit.stage("postings"))
-            commit.swap("postings", "postings")
-            return
-        if present:
-            keep.repartition("bucket").sortWithinPartitions(
-                "term"
-            ).write.partitionBy("bucket").parquet(commit.stage("postings"))
-        for b in affected:
-            if b in present:
-                commit.swap(f"postings/bucket={b}", f"postings/bucket={b}")
-            else:
-                commit.remove(f"postings/bucket={b}")
-
-    def _w_doclens() -> None:
-        if index_emptied:
-            dkeep.write.parquet(commit.stage("doclens"))
-            commit.swap("doclens", "doclens")
-            return
-        if dpresent:
-            dkeep.repartition("dbucket").write.partitionBy("dbucket").parquet(
-                commit.stage("doclens")
-            )
-        for b in daffected:
-            if b in dpresent:
-                commit.swap(f"doclens/dbucket={b}", f"doclens/dbucket={b}")
-            else:
-                commit.remove(f"doclens/dbucket={b}")
-
-    def _w_fieldstats() -> None:
-        # per-field stats over ALL survivors (aggregated pre-promote)
-        _write_fieldstats_from(survivors, path, target=commit.stage("fieldstats"))
-        commit.swap("fieldstats", "fieldstats")
-
-    def _w_docvals() -> None:
-        # single consumer (the staged write) — no checkpoint needed
-        vkeep = (
-            spark.read.parquet(f"{path}/docvals")
-            .where(F.col("dbucket").isin(daffected))
-            .join(keys, id_col, "left_anti")
-            .select(id_col, *idx_attrs, "dbucket")
-        )
-        if index_emptied:
-            vkeep.write.parquet(commit.stage("docvals"))
-            commit.swap("docvals", "docvals")
-            return
-        if dpresent:
-            vkeep.repartition("dbucket").write.partitionBy("dbucket").parquet(
-                commit.stage("docvals")
-            )
-        for b in daffected:
-            if b in dpresent:
-                commit.swap(f"docvals/dbucket={b}", f"docvals/dbucket={b}")
-            else:
-                commit.remove(f"docvals/dbucket={b}")
-
-    def _w_docstore() -> None:
-        # single consumer (the staged write) — no checkpoint needed
-        skeep = (
-            spark.read.parquet(f"{path}/docstore")
-            .where(F.col("dbucket").isin(daffected))
-            .join(keys, id_col, "left_anti")
-            .select(id_col, "field", "text", "dbucket")
-        )
-        if index_emptied:
-            skeep.write.parquet(commit.stage("docstore"))
-            commit.swap("docstore", "docstore")
-            return
-        if dpresent:
-            skeep.repartition("dbucket").write.partitionBy("dbucket").parquet(
-                commit.stage("docstore")
-            )
-        for b in daffected:
-            if b in dpresent:
-                commit.swap(f"docstore/dbucket={b}", f"docstore/dbucket={b}")
-            else:
-                commit.remove(f"docstore/dbucket={b}")
-
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
-
-    run_concurrent(
-        _w_postings if affected else None,
-        _w_doclens,
-        _w_fieldstats,
-        _w_docvals if idx_attrs else None,
-        _w_docstore if hadoop_path_exists(spark, f"{path}/docstore") else None,
-    )
-    commit.promote()
-    return int(n_removed)
 
 
 def synonyms_profile_from_index(
@@ -1528,10 +1000,6 @@ def simple_query_profile_from_index(
                 allowed = _pos_slice(positives).select(id_col).distinct()
             allowed = allowed.join(ids_p, id_col, "left_anti")
     elif req_phrases or exc_phrases:
-        from azuredatalakeindexer_spark.sources.ann_index import (
-            hadoop_path_exists,
-        )
-
         if not hadoop_path_exists(spark, f"{path}/docstore"):
             raise ValueError(
                 f"simple_query_profile_from_index: index at {path} has no "
@@ -1824,10 +1292,10 @@ def _profile_vocab_pairs(
     VERDICT r13 stretch-#7; the text surface's twin is the ``terms``
     rollup / :func:`text_segments.live_term_slice` pair).
 
-    - **Unsegmented index** (fresh build, in-place-maintained, or
-      post-compaction): one postings scan with the field IN-list and the
-      term predicate pushed into the term-sorted bucket files — cost is
-      |vocabulary slice under the predicate|, never corpus-sized.
+    - **Unsegmented index** (fresh build or post-compaction): one
+      postings scan with the field IN-list and the term predicate pushed
+      into the term-sorted bucket files — cost is |vocabulary slice under
+      the predicate|, never corpus-sized.
     - **Segmented (LSM) index**: the slice is recounted exactly from live
       postings across base + segments with doc-level last-writer-wins
       liveness (:func:`profile_segments.live_field_term_slice`).
@@ -2121,8 +1589,6 @@ def highlight_profile_from_index(
     slice resolves per (id, field) by the max-segment rule over the SAME
     candidate-restricted rows.
     """
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
-
     if not hadoop_path_exists(spark, f"{path}/docstore"):
         raise ValueError(
             f"highlight_profile_from_index: index at {path} has no "

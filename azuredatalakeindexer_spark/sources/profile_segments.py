@@ -1,13 +1,12 @@
-"""Segmented (LSM) maintenance for the multi-field profile index —
-the scale ingest path (r10, closes VERDICT r9 missing-#1's second half:
-"the profile index has only in-place maintenance").
+"""Segmented (LSM) maintenance — the one way the multi-field profile
+index changes after its build.
 
 The reference's architecture is a continuous watch-lake → upsert-index
-loop (`DatalakePathIndexerFunc/PathIndexerFunc.cs:18-36`); at 100 TB the
-in-place profile upserts' affected-bucket rewrites grow with index size
-(the same crossover `BENCH_sf10_r07.json` measured for the single-field
-text index), so the multi-field index gets the same LSM tier the text
-index has (`sources/text_segments.py`):
+loop (`DatalakePathIndexerFunc/PathIndexerFunc.cs:18-36`); rewriting the
+postings buckets a batch touches would grow with index size (the crossover
+`BENCH_sf10_r07.json` measured for the single-field text index), so the
+multi-field index is maintained through the same LSM tier as the text
+index (`sources/text_segments.py`):
 
 - `upsert_profile_index_segmented` — the batch lands as an immutable
   O(batch) segment ``segments/seg=K/{postings,doclens,docvals}``;
@@ -34,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from azuredatalakeindexer_spark.functions.localrel import tiny_df
+from azuredatalakeindexer_spark.sources.staging import hadoop_path_exists
 from azuredatalakeindexer_spark.sources.text_segments import (
     BASE_SEG,
     _read_or_empty,
@@ -47,8 +47,6 @@ def _read_or_empty_like(spark: SparkSession, p: str, like: DataFrame) -> DataFra
     """Read a maybe-absent segment relation typed EXACTLY like the base
     relation (attribute columns carry arbitrary user types — a guessed
     string schema would break the union)."""
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
-
     if hadoop_path_exists(spark, p):
         return spark.read.parquet(p)
     return spark.createDataFrame([], like.schema)
@@ -337,10 +335,10 @@ def upsert_profile_index_segmented(
 ) -> DataFrame:
     """MergeOrUpload into the multi-field index as a NEW SEGMENT —
     O(batch) writes, nothing rewritten.  Returns ``(id_col, status)``
-    with 201=created / 200=modified (same contract as the in-place
-    ``upsert_profile_index``; queries answer identically after either —
-    test-pinned).  One batch-sized alive-lookup (dbucket-pruned doclens
-    slices + tombstones) yields statuses AND the exact per-field stats
+    with 201=created / 200=modified; queries afterwards answer identically
+    to a fresh ``build_profile_index`` of the logical corpus (test-pinned).
+    One batch-sized alive-lookup (dbucket-pruned doclens slices +
+    tombstones) yields statuses AND the exact per-field stats
     deltas; the segment postings/doclens/docvals and the refreshed
     fieldstats promote under one journal.
 
@@ -373,11 +371,11 @@ def upsert_profile_index_segmented(
 
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 
-    # Layer 0 (r14, same shape as the in-place upsert): the batch
-    # checkpoint, the positional-column schema probe (parquet footers,
-    # driver-side — positional profile indexes version their pos lists
-    # through the segments too, r13: the batch's postings regenerate
-    # positions, the doc-level max-segment rule serves the live lists)
+    # Layer 0 (r14): the batch checkpoint, the positional-column schema
+    # probe (parquet footers, driver-side — positional profile indexes
+    # version their pos lists through the segments too, r13: the batch's
+    # postings regenerate positions, the doc-level max-segment rule
+    # serves the live lists)
     # and the segment listing are mutually independent — overlap them.
     # A drain carrying ``_known`` (r15) resolved them once and skips the
     # re-probes.
@@ -400,16 +398,15 @@ def upsert_profile_index_segmented(
     # checkpointed — re-deriving it from the checkpointed deduped batch
     # inside that job is cheaper than a second batch-sized
     # materialization (r10 fixed-overhead trim); new_lens then derives
-    # from the CHECKPOINTED postings (dl = sum(tf), bucket set =
-    # collect_set) so the batch is tokenized and hashed exactly once
-    # (r10 verdict wrong-#1)
+    # from the CHECKPOINTED postings (dl = sum(tf)) so the batch is
+    # tokenized exactly once
     stacked = _stack_fields(deduped, idx_fields, id_col)
     pairs = deduped.select(
         F.col(id_col),
         F.explode(F.array(*[F.lit(f) for f in idx_fields])).alias("field"),
     )
-    # Layer 1 (r12, same layering as the in-place ops): the delta
-    # postings checkpoint and the batch's id-hash partition list.  The
+    # Layer 1 (r12): the delta postings checkpoint and the batch's
+    # id-hash partition list.  The
     # dbucket set is computed from the checkpointed batch directly — it
     # equals new_lens's (every batch id keeps a doclens row, zero-token
     # docs included via the pairs left join), without waiting for the
@@ -486,8 +483,6 @@ def upsert_profile_index_segmented(
     # field texts through the segments too: the batch's rows land in
     # seg=K/docstore and the max-segment rule serves the live version
     # until compaction folds them into the base
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
-
     has_store = (
         known["has_store"]
         if "has_store" in known
@@ -721,22 +716,9 @@ def compact_profile_index(
     alll = lparts[0]
     for p in lparts[1:]:
         alll = alll.unionByName(p)
-    # per-(id, field) bucket sets from the RESOLVED postings, never from
-    # carried columns: an r9-built (pre-bucket-set) index's rows would
-    # otherwise land as empty sets and silently break later victim
-    # lookups — deriving from merged also upgrades legacy indexes
-    bsets = merged.groupBy(id_col, "field").agg(
-        F.array_sort(F.collect_set("bucket")).alias("buckets")
-    )
     lens = (
         alll.join(alive, [id_col, "seg"])
         .select(id_col, "field", "dl")
-        .join(bsets, [id_col, "field"], "left")
-        .withColumn(
-            "buckets",
-            F.coalesce(F.col("buckets"), F.array().cast("array<bigint>")),
-        )
-        .select(id_col, "field", "dl", "buckets")
         .withColumn(
             "dbucket", F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets))
         )
@@ -744,7 +726,6 @@ def compact_profile_index(
     )
 
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
 
     commit = StagedCommit(spark, path)
     merged_empty, lens_empty = run_concurrent(
@@ -923,7 +904,6 @@ def run_stream_profile_index(
     last-writer-wins makes the drain batch-split-invariant: 1 or N
     micro-batches serve bit-identical profiles (test-pinned; the oracle
     is the scan-time profile replay)."""
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
     from azuredatalakeindexer_spark.sources.profile_index import (
         build_profile_index,
     )

@@ -1,11 +1,11 @@
 """Staged two-phase commit for persisted-index maintenance writes.
 
-WHY.  The incremental maintenance ops (text in-place upsert/delete, LSM
-segment writes + compaction, IVF upsert/delete) used to rewrite live
-partition directories in place: a crash mid-sequence could leave a
-partially-rewritten index — some bucket directories new, some old, stats
-inconsistent with postings.  The fix is the standard two-phase layout
-every table format (Delta/Iceberg/Hive-ACID) builds on:
+WHY.  The incremental maintenance ops (LSM segment writes + compaction,
+IVF/PQ upsert/delete) used to rewrite live partition directories in
+place: a crash mid-sequence could leave a partially-rewritten index —
+some bucket directories new, some old, stats inconsistent with postings.
+The fix is the standard two-phase layout every table format
+(Delta/Iceberg/Hive-ACID) builds on:
 
 1. **Stage**: every new or rewritten directory is written under
    ``<root>/.staging-<id>/`` — the live index is never touched while any
@@ -70,13 +70,18 @@ class ConcurrentMaintenanceError(RuntimeError):
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) via the Hadoop FS API (any URI scheme) — local
-    replica of ``ann_index._hadoop_fs`` to keep this module import-cycle
-    free (ann_index itself stages through this module)."""
+    """(FileSystem, Path) for ``path`` via the Hadoop FS API — works for any
+    URI scheme the cluster can reach (file://, abfss://, s3a://, hdfs://),
+    unlike ``os.path``, which silently answers False for remote URIs."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, hpath
+
+
+def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = _hadoop_fs(spark, path)
+    return bool(fs.exists(hpath))
 
 
 STAGING_PREFIX = ".staging-"

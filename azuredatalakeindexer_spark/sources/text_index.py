@@ -16,12 +16,15 @@ into a saved inverted file:
   statistics (``sum_dl`` is the exact bigint the segmented maintenance
   path advances incrementally — see ``text_segments.py``);
 - ``<path>/terms`` — the ``(term, df)`` vocabulary rollup,
-  range-partitioned AND sorted by term, written by build/compaction and
-  advanced by the same exact-delta discipline as ``sum_dl`` on the
-  in-place maintenance ops.  This is the relation interactive
-  autocomplete serves from (``suggest_from_index``): vocabulary-sized
+  range-partitioned AND sorted by term, written by build and by
+  compaction.  This is the relation interactive autocomplete serves from
+  (``suggest_from_index``) while no segments are live: vocabulary-sized
   (orders of magnitude under the postings) and term-ordered, so a prefix
   probe touches only the row groups covering that prefix range.
+
+The index changes only through the segmented ops in ``text_segments.py``
+(an upsert or delete writes one O(batch) segment; ``compact_text_index``
+folds segments back into this base layout).
 
 A query computes its terms' buckets DRIVER-SIDE (the same md5-derived
 portable hash, so no Spark job is needed to locate them) and reads only
@@ -48,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from azuredatalakeindexer_spark.functions.localrel import tiny_df
 from azuredatalakeindexer_spark.functions.text import portable_hash64, tokens
+from azuredatalakeindexer_spark.sources.staging import hadoop_path_exists
 
 
 def _py_bucket(term: str, n_buckets: int) -> int:
@@ -135,32 +139,11 @@ def _lens_from_postings(
     n_buckets: int,
     *,
     per_field: bool = False,
-    bsets: bool = True,
 ) -> DataFrame:
     """The doclens relation DERIVED from the postings relation the same
     build/upsert already materializes — ``dl = sum(tf)`` (``tokens()``
     drops empty strings, so the per-doc tf sum IS the token count,
-    bit-identical to ``size(_toks)``) and the victim-directory bucket set
-    = ``collect_set(bucket)``: zero additional hashing.
-
-    The ``buckets`` column is the per-doc victim directory (r9 verdict
-    wrong-#3 / missing-#2), stored as an ARRAY COLUMN on the doclens
-    relation rather than a separate directory: doclens is already
-    id-hash-partitioned, already read dbucket-pruned by every maintenance
-    op, and already rewritten under the same journal — so the bucket sets
-    ride along for free (and query-side doclens scans column-prune the
-    array away).  A maintenance batch learns which postings buckets hold a
-    replaced doc's STALE rows by exploding this column over the batch
-    ids' dbucket partitions — O(batch buckets) — instead of projecting
-    the ENTIRE postings relation per batch (at 10⁹ docs that scan
-    dominates).
-
-    Until r10 the column was computed by a per-token
-    ``pmod(portable_hash64(t))`` transform over the doclens token arrays —
-    a SECOND hash-the-corpus pass riding every doclens write, which
-    doubled profile/text index build cost (r10 verdict wrong-#1).
-    ``compact_text_index`` has used the postings-side ``collect_set``
-    derivation since r10; this helper makes build and upsert match it.
+    bit-identical to ``size(_toks)``): no second tokenize pass.
 
     ``all_keys`` supplies the complete (id[, field]) key set so zero-token
     documents keep their ``dl=0`` rows — those rows carry liveness,
@@ -168,48 +151,12 @@ def _lens_from_postings(
     would silently drop them and skew BM25's idf).
     """
     keys = [id_col] + (["field"] if per_field else [])
-    derived = postings_df.groupBy(*keys).agg(
-        F.sum("tf").cast("int").alias("dl"),
-        F.array_sort(F.collect_set("bucket")).alias("buckets"),
-    )
+    derived = postings_df.groupBy(*keys).agg(F.sum("tf").cast("int").alias("dl"))
     return all_keys.join(derived, keys, "left").select(
         *keys,
         F.coalesce(F.col("dl"), F.lit(0)).alias("dl"),
-        *(
-            [
-                F.coalesce(
-                    F.col("buckets"), F.array().cast("array<bigint>")
-                ).alias("buckets")
-            ]
-            if bsets
-            else []
-        ),
         F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("dbucket"),
     )
-
-
-def _victim_buckets(
-    spark: SparkSession,
-    path: str,
-    dkeys: DataFrame,
-    delta_dbuckets: list,
-    id_col: str,
-) -> list | None:
-    """The postings buckets holding stale rows of the batch's ids, from a
-    statically dbucket-pruned doclens read (see ``_lens_from_postings``) — or
-    None when the index predates the bucket-set column (callers fall back
-    to the full column-pruned postings projection: correct, O(index))."""
-    lens = spark.read.parquet(f"{path}/doclens")
-    if "buckets" not in lens.columns:
-        return None
-    return [
-        r["b"]
-        for r in lens.where(F.col("dbucket").isin(delta_dbuckets))
-        .join(dkeys, id_col, "left_semi")
-        .select(F.explode("buckets").alias("b"))
-        .distinct()
-        .collect()
-    ]
 
 
 def _write_terms_rollup(
@@ -236,60 +183,6 @@ def _rebuild_terms_rollup(spark: SparkSession, path: str, id_col: str) -> None:
     _write_terms_rollup(
         spark, path, postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     )
-
-
-def _advance_terms_rollup(
-    spark: SparkSession,
-    path: str,
-    added: DataFrame | None,
-    removed: DataFrame | None,
-    id_col: str,
-    target: str | None = None,
-    rebuild_from: DataFrame | None = None,
-) -> None:
-    """Advance ``<path>/terms`` by the exact per-term delta — the same
-    discipline the 1-row stats use for ``sum_dl``.  ``added`` / ``removed``
-    are ``(term, n)`` counts of inserted / vanished (term, doc) pairs
-    (batch-sized: victims' old postings and the delta's new postings).
-    ``target`` redirects the write (staged commits).  Falls back to a full
-    rebuild for a pre-rollup index — from ``rebuild_from`` (a
-    postings-shaped frame reflecting the POST-op state) when staging means
-    the live postings aren't promoted yet."""
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
-
-    if not hadoop_path_exists(spark, f"{path}/terms"):
-        if rebuild_from is not None:
-            _write_terms_rollup(
-                spark,
-                path,
-                rebuild_from.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
-                target=target,
-            )
-        else:
-            _rebuild_terms_rollup(spark, path, id_col)
-        return
-    old = spark.read.parquet(f"{path}/terms")
-    net = None
-    if added is not None:
-        net = added.select("term", F.col("n").cast("bigint").alias("_d"))
-    if removed is not None:
-        neg = removed.select("term", (-F.col("n")).cast("bigint").alias("_d"))
-        net = neg if net is None else net.unionByName(neg)
-    if net is None:
-        return
-    delta = net.groupBy("term").agg(F.sum("_d").alias("_d"))
-    merged = (
-        old.join(delta, "term", "full_outer")
-        .select(
-            "term",
-            (F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("_d"), F.lit(0))).alias("df"),
-        )
-        .where(F.col("df") > 0)
-        # the rollup is an input of its own overwrite — materialize first
-        # (vocabulary-sized; same pattern as the postings merges)
-        .localCheckpoint()
-    )
-    _write_terms_rollup(spark, path, merged, target=target)
 
 
 def _dedupe_delta(delta: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -323,7 +216,6 @@ def build_text_index(
     n_buckets: int = 64,
     positions: bool = False,
     store_text: bool = False,
-    _bsets: bool = True,
 ) -> None:
     """Write the inverted index for ``docs`` under ``path``.
 
@@ -347,9 +239,8 @@ def build_text_index(
     `IndexModels/TextIndexModel.cs:24-34`).  It is what
     ``highlight_from_index`` fetches top-k texts from BY ID (static
     dbucket pruning + pushed id IN-list) so highlighting never rescans
-    the corpus.  The in-place maintenance ops advance it under the same
-    commit journal; the SEGMENTED ops refuse a docstore-backed index
-    (in-place maintenance is the highlight-enabled path).
+    the corpus.  The segmented upsert writes each batch's texts into its
+    segment's docstore, and compaction folds them back into the base.
     """
     toks = tokens(F.col(text_col))
     base = docs.select(F.col(id_col), toks.alias("_toks"))
@@ -358,20 +249,13 @@ def build_text_index(
     def _postings_chain() -> None:
         # the DEPENDENT chain.  Postings first — term-sorted within each
         # bucket's files so pushed term predicates (IN-lists, startswith)
-        # prune row groups via min/max stats.  Then doclens (dl,
-        # victim-directory bucket set) DERIVED from the postings just
-        # written — a narrow (id, tf, bucket) read-back — plus an id-only
-        # column-pruned corpus projection for the zero-token rows: the
-        # corpus is tokenized ONCE (the postings pass) and the bucket hash
-        # computed ONCE (r10 verdict wrong-#1: the old `_buckets_expr`
-        # doclens pass re-tokenized and re-hashed the whole corpus,
-        # doubling build cost).  The (term, df) autocomplete rollup is a
+        # prune row groups via min/max stats.  Then doclens (dl) DERIVED
+        # from the postings just written — a narrow (id, tf) read-back —
+        # plus an id-only column-pruned corpus projection for the
+        # zero-token rows: the corpus is tokenized ONCE (the postings
+        # pass).  The (term, df) autocomplete rollup is a
         # vocabulary-sized read-back of the same written postings,
         # independent of doclens — nested overlap.
-        # _bsets=False writes the legacy (pre-victim-directory) doclens
-        # layout; only tools/bench_vdir_scale.py uses it, to keep the
-        # column's build cost measured (r10 verdict next-#1: "build cost
-        # can never regress unmeasured again")
         postings.repartition("bucket").sortWithinPartitions("term").write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(f"{path}/postings")
@@ -386,7 +270,6 @@ def build_text_index(
             docs.select(F.col(id_col)),
             id_col,
             n_buckets,
-            bsets=_bsets,
         ).localCheckpoint()
         run_concurrent(
             lambda: doclens.repartition("dbucket")
@@ -496,388 +379,6 @@ def _check_n_buckets(spark: SparkSession, path: str, n_buckets: int, op: str) ->
         )
 
 
-def _require_unsegmented(spark: SparkSession, path: str, op: str) -> None:
-    """The in-place maintenance ops rewrite base partitions directly and
-    would silently ignore LSM segments layered on top; force a compaction
-    first rather than corrupt the merged view."""
-    from azuredatalakeindexer_spark.sources.text_segments import list_segments
-
-    if list_segments(spark, path):
-        raise ValueError(
-            f"{op}: index at {path} has LSM segments; run "
-            "compact_text_index() first or use the *_segmented maintenance ops"
-        )
-
-
-def upsert_text_index(
-    spark: SparkSession,
-    path: str,
-    delta: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-    broadcast_ids: bool = True,
-    _known: "dict | None" = None,
-) -> DataFrame:
-    """MergeOrUpload into the saved inverted index: new documents are
-    inserted, existing ones replaced (their OLD postings disappear even
-    for terms the new text no longer contains) — the reference's
-    continuous watch-lake→upsert-index loop (§3.1 + T1) applied to the
-    full-text index this engine maintains instead of the search service.
-    Returns ``(id_col, status)`` with 201=created / 200=modified.
-
-    ``_known`` (private contract of ``run_stream_text_index``): layout
-    facts the CALLER has already established and owns for the duration —
-    ``recovered`` (this drain already ran recovery and every promote since
-    completed in-process), ``unsegmented``/``n_buckets_ok`` (guards
-    verified), ``has_store`` (docstore tier present).  A streaming drain
-    lands dozens of batches against a directory it exclusively owns
-    (single-writer lease); re-probing the same immutable facts per batch
-    is pure fixed latency (VERDICT r14 next-#1: hoist per-batch fixed
-    work out of the foreachBatch landing).  Callers other than the drain
-    leave it None and every probe runs.
-
-    Cost shape, deliberately NOT a rebuild:
-
-    - delta tokenization + (term, doc) aggregate: batch-sized;
-    - victim lookup: one column-pruned (id, bucket) projection scan of the
-      postings semi-joined against the broadcast delta-id set — finds the
-      buckets holding stale postings of replaced docs (their old terms may
-      hash anywhere).  At 100 TB keep a doc→buckets directory relation
-      beside the index, as with the IVF key→cell map;
-    - rewrite: ONLY affected postings buckets (new terms' ∪ victims') and
-      affected doclens id-buckets — staged under ``<path>/.staging-*`` and
-      promoted by journaled renames (``sources/staging.py``): a
-      pre-journal crash leaves the old index serving bit-identical
-      results, a mid-promotion one rolls forward deterministically from
-      the journal (next op, post-lease-expiry query probe, or
-      ``recover_index``);
-    - stats: recomputed from the post-merge doclens (a metadata-sized
-      aggregate) and swapped in with the same commit.
-
-    ``broadcast_ids=False`` switches every delta-id lookup (victims,
-    statuses, keep/dkeep anti-joins) to a shuffled join for bulk
-    rebuild-sized batches whose id set is not driver-broadcastable —
-    the same contract as ``delete_from_text_index(broadcast_ids=False)``
-    and ``merge_upsert(broadcast_batch_keys=False)``.
-
-    After the upsert, queries answer bit-identically to a fresh
-    ``build_text_index`` over (base ∖ replaced) ∪ delta — test-pinned and
-    replayed by the DuckDB oracle.
-    """
-    from azuredatalakeindexer_spark.sources.staging import (
-        StagedCommit,
-        recover_for_maintenance,
-    )
-
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-
-    known = _known or {}
-    if not known.get("recovered"):
-        recover_for_maintenance(spark, path)
-    toks = tokens(F.col(text_col))
-    # ONE batch materialization carries both consumers' columns: the
-    # deduped (id, text) rows the docstore tier re-writes and the
-    # tokenized (id, _toks) rows everything else derives from (r12: two
-    # separate checkpoints paid the fixed job latency twice)
-    ck = (
-        _dedupe_delta(delta, id_col, text_col)
-        .select(F.col(id_col), F.col(text_col), toks.alias("_toks"))
-        .localCheckpoint()
-    )
-    deduped = ck.select(F.col(id_col), F.col(text_col))
-    base = ck.select(F.col(id_col), F.col("_toks"))
-    postings_path = f"{path}/postings"
-    doclens_path = f"{path}/doclens"
-    old_postings = spark.read.parquet(postings_path)
-    vcols = _postings_cols(old_postings, id_col)  # carries pos on positional indexes
-    delta_ids = base.select(id_col)
-    dkeys = F.broadcast(delta_ids) if broadcast_ids else delta_ids
-
-    # Every driver-side action below is latency-bound, not compute-bound,
-    # at batch scale — the pre-write critical path is SEQUENTIAL fixed
-    # job latencies (r12: ~14 of them, over half the measured upsert
-    # wall).  Layer them by data dependency and run each layer's
-    # independent members concurrently (run_concurrent), exactly like the
-    # staged writes below.
-    #
-    # Layer 1 — everything that needs only the checkpointed batch:
-    # the delta postings checkpoint, the batch's id-hash partition list
-    # (prunes the doclens alive-lookup, the vdir victim lookup, and every
-    # id-keyed tier rewrite below), and the two emptiness probes.  The
-    # two layout GUARDS (segment listing, stats n_buckets pin) are
-    # read-only and independent of the batch chain — they ride the same
-    # concurrent layer (r15) instead of stacking two serial fixed
-    # latencies ahead of the first real job; nothing is staged until the
-    # whole layer (guards included) has passed.  A drain that already
-    # verified them skips both (``_known``).
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
-
-    (
-        new_postings,
-        delta_dbuckets,
-        base_empty,
-        doclens_empty,
-        _g1,
-        _g2,
-        has_store,
-    ) = run_concurrent(
-        lambda: _postings_from(
-            base, id_col, n_buckets, positions="pos" in vcols
-        ).localCheckpoint(),
-        lambda: [
-            r["b"]
-            for r in base.select(
-                F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("b")
-            )
-            .distinct()
-            .collect()
-        ],
-        # delete-all left a 0-row sentinel layout; gate doclens on ITS OWN
-        # emptiness, not the postings-derived one: a base whose surviving
-        # docs are all zero-token has empty postings but non-empty doclens,
-        # and a whole-dir swap there would drop rows in unaffected dbuckets
-        lambda: old_postings.isEmpty(),
-        lambda: spark.read.parquet(doclens_path).isEmpty(),
-        lambda: (
-            None
-            if known.get("unsegmented")
-            else _require_unsegmented(spark, path, "upsert_text_index")
-        ),
-        lambda: (
-            None
-            if known.get("n_buckets_ok")
-            else _check_n_buckets(spark, path, n_buckets, "upsert_text_index")
-        ),
-        lambda: (
-            known["has_store"]
-            if "has_store" in known
-            else hadoop_path_exists(spark, f"{path}/docstore")
-        ),
-    )
-
-    # Layer 2 — three mutually independent chains over layer-1 outputs.
-    def _chain_postings():
-        # victims carry term as well as bucket: the same column-pruned
-        # scan yields the affected buckets AND the per-term removal counts
-        # the terms-rollup delta needs (no extra pass).  The doclens
-        # bucket-set column statically prunes the scan to the buckets
-        # actually holding stale postings of the batch's ids (O(batch
-        # buckets)); legacy indexes without one fall back to the full
-        # postings projection.
-        vic_buckets = _victim_buckets(spark, path, dkeys, delta_dbuckets, id_col)
-        vsrc = (
-            old_postings
-            if vic_buckets is None
-            else old_postings.where(F.col("bucket").isin(vic_buckets))
-        )
-        victims = (
-            vsrc.select("term", id_col, "bucket")
-            .join(dkeys, id_col, "left_semi")
-            .localCheckpoint()
-        )
-        affected = [
-            r["bucket"]
-            for r in new_postings.select("bucket")
-            .union(victims.select("bucket"))
-            .distinct()
-            .collect()
-        ]
-        keep = (
-            spark.read.parquet(postings_path)
-            .where(F.col("bucket").isin(affected))
-            .join(dkeys, id_col, "left_anti")
-            .select(*vcols, "bucket")
-        )
-        merged = keep.unionByName(
-            new_postings.select(*vcols, "bucket")
-        ).localCheckpoint()
-        return victims, affected, merged
-
-    def _chain_doclens():
-        # dl + bucket set derived from the CHECKPOINTED delta postings
-        # (see _lens_from_postings) — no second hash pass over the batch's
-        # tokens.  has_bsets mirrors the victim chain's detection but is
-        # read from the relation directly so the chains stay independent.
-        has_bsets = "buckets" in spark.read.parquet(doclens_path).columns
-        new_lens = _lens_from_postings(
-            new_postings, delta_ids, id_col, n_buckets, bsets=has_bsets
-        ).localCheckpoint()
-        daffected = [
-            r["dbucket"] for r in new_lens.select("dbucket").distinct().collect()
-        ]
-        dkeep = (
-            spark.read.parquet(doclens_path)
-            .where(F.col("dbucket").isin(daffected))
-            .join(dkeys, id_col, "left_anti")
-            .select(id_col, "dl", *(["buckets"] if has_bsets else []), "dbucket")
-        )
-        dmerged = dkeep.unionByName(new_lens).localCheckpoint()
-        return new_lens, daffected, dmerged
-
-    def _chain_statuses():
-        # statuses are judged from the DOCLENS side, not the postings
-        # victims: every existing doc has a doclens row, but a zero-token
-        # doc has no postings and a postings-side lookup would misreport
-        # its replacement as 201-created (the segmented path already
-        # judges from doclens — same contract, test-pinned equal).
-        existing_ids = (
-            spark.read.parquet(doclens_path)
-            .where(F.col("dbucket").isin(delta_dbuckets))
-            .select(id_col)
-            .join(dkeys, id_col, "left_semi")
-        )
-        _old_ids = existing_ids.withColumn("_old", F.lit(1))
-        return delta_ids.join(
-            F.broadcast(_old_ids) if broadcast_ids else _old_ids,
-            id_col,
-            "left",
-        ).select(
-            id_col,
-            F.when(F.col("_old").isNotNull(), F.lit(200))
-            .otherwise(F.lit(201))
-            .alias("status"),
-        ).localCheckpoint()
-
-    (victims, affected, merged), (new_lens, daffected, dmerged), statuses = (
-        run_concurrent(_chain_postings, _chain_doclens, _chain_statuses)
-    )
-
-    # every relation's new version is STAGED under <path>/.staging-<id>
-    # and promoted by one journaled rename pass at the end — a crash at
-    # any earlier point leaves the live index byte-identical (the staged
-    # dir is invisible to readers and GC'd by the next maintenance op)
-    commit = StagedCommit(spark, path)
-
-    # every tier's staged write now derives from CHECKPOINTED batch-sized
-    # frames (merged / dmerged / deduped / victims) or pre-promote live
-    # reads that no other tier moves — five mutually independent actions,
-    # submitted concurrently so their scheduling + dynamic-partition
-    # commit latencies overlap instead of stacking (run_concurrent); the
-    # per-tier swaps are recorded inside each thunk (disjoint live paths,
-    # so journal order is irrelevant) and promote stays a single
-    # sequential rename pass at the end
-    def _w_postings() -> None:
-        merged.repartition("bucket").sortWithinPartitions("term").write.partitionBy(
-            "bucket"
-        ).parquet(commit.stage("postings"))
-        if base_empty:
-            # whole-dir swap replaces the unpartitioned sentinel with a
-            # clean partitioned layout
-            commit.swap("postings", "postings")
-            return
-        # stage only the affected buckets; at promote time present buckets
-        # swap in and a victim bucket whose postings ALL belonged to
-        # replaced docs whose new terms hash elsewhere (zero survivors)
-        # is removed.  Surviving buckets read off the staged directory
-        # names — the write just enumerated them, so no extra collect job
-        from azuredatalakeindexer_spark.sources.ann_index import (
-            _partition_dir_names,
-        )
-
-        present = [
-            int(n.split("=", 1)[1])
-            for n in _partition_dir_names(spark, commit.stage("postings"), "bucket")
-        ]
-        for b in affected:
-            if b in present:
-                commit.swap(f"postings/bucket={b}", f"postings/bucket={b}")
-            else:
-                commit.remove(f"postings/bucket={b}")
-
-    def _w_doclens() -> None:
-        dmerged.repartition("dbucket").write.partitionBy("dbucket").parquet(
-            commit.stage("doclens")
-        )
-        if doclens_empty:
-            commit.swap("doclens", "doclens")
-        else:
-            # every daffected dbucket carries new_lens rows, so none empties
-            for b in daffected:
-                commit.swap(f"doclens/dbucket={b}", f"doclens/dbucket={b}")
-
-    def _w_docstore() -> None:
-        # docstore (retrievable text, highlight-enabled indexes): replace
-        # the delta docs' rows in their own dbuckets under the same
-        # journal — identical partition discipline to doclens (same
-        # id-hash key); single consumer (this write, pre-promote, against
-        # the still-live base) so no checkpoint
-        new_store = deduped.select(
-            F.col(id_col),
-            F.col(text_col).alias("text"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("dbucket"),
-        )
-        skeep = (
-            spark.read.parquet(f"{path}/docstore")
-            .where(F.col("dbucket").isin(daffected))
-            .join(dkeys, id_col, "left_anti")
-            .select(id_col, "text", "dbucket")
-        )
-        skeep.unionByName(new_store).repartition("dbucket").write.partitionBy(
-            "dbucket"
-        ).parquet(commit.stage("docstore"))
-        if doclens_empty:
-            commit.swap("docstore", "docstore")
-        else:
-            # every delta dbucket holds its own delta rows, so none empties
-            for b in daffected:
-                commit.swap(f"docstore/dbucket={b}", f"docstore/dbucket={b}")
-
-    def _w_stats() -> None:
-        # stats from the POST-state doclens: unaffected live rows ∪ the
-        # staged merge (the live read happens pre-promote and those rows
-        # don't move)
-        stats_src = (
-            dmerged.select(id_col, "dl", "dbucket")
-            if doclens_empty
-            else spark.read.parquet(doclens_path)
-            .where(~F.col("dbucket").isin(daffected))
-            .select(id_col, "dl", "dbucket")
-            .unionByName(dmerged.select(id_col, "dl", "dbucket"))
-        )
-        _write_stats_from(
-            spark, path, stats_src, n_buckets, target=commit.stage("stats")
-        )
-        commit.swap("stats", "stats")
-
-    def _w_terms() -> None:
-        # exact (term, df) delta: the delta's new pairs minus the victims'
-        # old pairs — both batch-sized frames already materialized above.
-        # The pre-rollup rebuild derives from the post-state postings
-        # (unaffected live buckets ∪ the staged merge)
-        rebuild_src = (
-            merged.select("term")
-            if base_empty
-            else spark.read.parquet(postings_path)
-            .where(~F.col("bucket").isin(affected))
-            .select("term")
-            .unionByName(merged.select("term"))
-        )
-        _advance_terms_rollup(
-            spark,
-            path,
-            added=new_postings.groupBy("term").agg(F.count(F.lit(1)).alias("n")),
-            removed=victims.groupBy("term").agg(F.count(F.lit(1)).alias("n")),
-            id_col=id_col,
-            target=commit.stage("terms"),
-            rebuild_from=rebuild_src,
-        )
-        commit.swap("terms", "terms")
-
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-
-    run_concurrent(
-        _w_postings,
-        _w_doclens,
-        _w_docstore if has_store else None,
-        _w_stats,
-        _w_terms,
-    )
-    commit.promote()
-    return statuses
-
-
 def query_text_index(
     spark: SparkSession,
     path: str,
@@ -906,7 +407,7 @@ def query_text_index(
     candidate-sized regardless of how wide the filter itself is;
     ``broadcast_filter=False`` switches to a shuffled semi-join when the
     filter's id set is not driver-broadcastable (same contract as the
-    maintenance paths' ``broadcast_ids``).
+    segmented delete's ``broadcast_ids``).
 
     Scale: the postings scan is |docs containing a query term| rows after
     static bucket pruning + term pushdown; df per term is a tiny aggregate
@@ -1054,7 +555,6 @@ def simple_query_from_index(
     Phrase-only queries (no positive term) stay scan-time-only — there is
     nothing for the index to rank."""
     from azuredatalakeindexer_spark.operators.search import parse_simple_query
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
     from azuredatalakeindexer_spark.sources.text_segments import (
         BASE_SEG,
         _read_or_empty,
@@ -1244,7 +744,6 @@ def run_stream_text_index(
     id_col: str = "doc_id",
     n_buckets: int = 64,
     max_files_per_trigger: int = 1,
-    segmented: bool = False,
     compact_every: int | None = None,
     positions: bool = False,
     store_text: bool = False,
@@ -1255,30 +754,22 @@ def run_stream_text_index(
     is a MergeOrUpload delta into the saved layout.
 
     ``availableNow`` drains the backlog and terminates (T7); the first
-    batch builds the index, every later batch upserts.  Because the
-    upsert is last-write-wins per document and touches only affected
-    bucket partitions, the result is batch-split-invariant: draining in
-    1 or N micro-batches yields a bit-identical index to one batch build
-    over the whole corpus (test-pinned; the oracle is the scan-time bm25
-    replay).
-
-    ``segmented=True`` switches later batches to the LSM path
-    (`text_segments.upsert_text_index_segmented`) — each micro-batch is an
-    O(batch) segment write instead of an affected-bucket rewrite, the
-    scale-correct shape for continuous text ingestion (the in-place
-    rewrite grows linearly with index size: `BENCH_sf10_r07.json`).
+    batch builds the index, every later batch lands as an O(batch) LSM
+    segment (`text_segments.upsert_text_index_segmented`).
     ``compact_every=N`` folds segments back into the base whenever N have
     accumulated (the LSM amortization; None = leave compaction to the
-    caller).  Batch-split invariance holds identically — LWW per doc.
+    caller).  Because the upsert is last-write-wins per document, the
+    result is batch-split-invariant: draining in 1 or N micro-batches
+    answers queries bit-identically to one batch build over the whole
+    corpus (test-pinned; the oracle is the scan-time bm25 replay).
 
     ``store_text=True`` builds the docstore (retrievable-field) tier on
-    the first batch; later batches keep it current automatically — the
-    in-place upsert merges it, the segmented upsert writes per-segment
-    docstores served by the max-segment rule (``live_docstore_slice``)
-    and folded at compaction — so ``highlight_from_index`` serves
-    continuously from a streaming-maintained LSM index.
+    the first batch; later batches keep it current automatically — each
+    segment carries its batch's docstore, served by the max-segment rule
+    (``live_docstore_slice``) and folded at compaction — so
+    ``highlight_from_index`` serves continuously from a
+    streaming-maintained index.
     """
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
     from azuredatalakeindexer_spark.sources.text_segments import (
         BASE_SEG,
         compact_text_index,
@@ -1299,10 +790,9 @@ def run_stream_text_index(
     # recovery done, guards verified, docstore/positional tiers present,
     # the live segment list — are carried across batches instead of
     # re-probed inside every ``handle``.  ``state["known"]`` stays None
-    # for a RESUMED drain against a pre-existing index until the first
-    # landing has run its own probes; batch-split invariance is untouched
-    # (the carried facts are exactly what the per-batch probes would
-    # return — test-pinned).
+    # for a RESUMED drain against a pre-existing index (full per-batch
+    # probes); batch-split invariance is untouched (the carried facts are
+    # exactly what the per-batch probes would return — test-pinned).
     state: dict = {"built": False, "known": None}
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
@@ -1325,7 +815,6 @@ def run_stream_text_index(
             # this drain just built the layout with these exact arguments
             state["known"] = {
                 "recovered": True,
-                "unsegmented": True,
                 "n_buckets_ok": True,
                 "has_store": store_text,
                 "has_pos": positions,
@@ -1334,52 +823,31 @@ def run_stream_text_index(
             return
         state["built"] = True
         known = state["known"]
-        if segmented:
-            upsert_text_index_segmented(
-                batch.sparkSession,
-                index_dir,
-                batch,
-                text_col=text_col,
-                id_col=id_col,
-                n_buckets=n_buckets,
-                _known=known,
-            ).count()
-            if known is not None:
-                segs = known["segments"]
-                known["segments"] = segs + [(segs[-1] if segs else BASE_SEG) + 1]
-                n_segs = len(known["segments"])
-            else:
-                n_segs = (
-                    len(list_segments(batch.sparkSession, index_dir))
-                    if compact_every
-                    else 0
-                )
-            if compact_every and n_segs >= compact_every:
-                compact_text_index(
-                    batch.sparkSession, index_dir, id_col=id_col, n_buckets=n_buckets
-                )
-                if known is not None:
-                    known["segments"] = []
+        upsert_text_index_segmented(
+            batch.sparkSession,
+            index_dir,
+            batch,
+            text_col=text_col,
+            id_col=id_col,
+            n_buckets=n_buckets,
+            _known=known,
+        ).count()
+        if known is not None:
+            segs = known["segments"]
+            known["segments"] = segs + [(segs[-1] if segs else BASE_SEG) + 1]
+            n_segs = len(known["segments"])
         else:
-            upsert_text_index(
-                batch.sparkSession,
-                index_dir,
-                batch,
-                text_col=text_col,
-                id_col=id_col,
-                n_buckets=n_buckets,
-                _known=known,
+            n_segs = (
+                len(list_segments(batch.sparkSession, index_dir))
+                if compact_every
+                else 0
             )
-            if known is None:
-                # the landing just ran recovery and both guards against
-                # this directory; those facts now hold for the rest of
-                # the drain (the in-place upsert cannot create segments
-                # or change the n_buckets pin)
-                state["known"] = {
-                    "recovered": True,
-                    "unsegmented": True,
-                    "n_buckets_ok": True,
-                }
+        if compact_every and n_segs >= compact_every:
+            compact_text_index(
+                batch.sparkSession, index_dir, id_col=id_col, n_buckets=n_buckets
+            )
+            if known is not None:
+                known["segments"] = []
 
     q = (
         stream.writeStream.foreachBatch(handle)
@@ -1388,290 +856,6 @@ def run_stream_text_index(
         .start()
     )
     q.awaitTermination()
-
-
-def delete_from_text_index(
-    spark: SparkSession,
-    path: str,
-    doc_ids: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-    broadcast_ids: bool = True,
-) -> int:
-    """Remove documents from the saved inverted index — the reference's
-    deleted-blob handling (J2, `PathIndexerFunc.cs` BlobDeleted path)
-    applied to the in-engine search index.  Returns the number of
-    documents actually removed.
-
-    Same affected-partition shape as the upsert: victims are located via
-    the column-pruned (term, id, bucket) projection semi-joined against
-    the id set, only their buckets (postings AND doclens) are rewritten
-    with the victims anti-joined out, and the 1-row stats refresh from the
-    post-delete doclens.  All new directory versions are staged under
-    ``<path>/.staging-*`` and promoted by journaled renames
-    (``sources/staging.py``) — a pre-journal crash leaves the old index
-    serving bit-identical results, and a mid-promotion crash rolls
-    forward deterministically (next maintenance op, post-lease-expiry
-    query probe, or ``recover_index``); a bucket whose survivors are
-    empty is removed at promote time.  Removal is counted from the doclens side
-    (every doc has a doclens row; a zero-token doc has no postings).
-    Deleting an absent id is a no-op (idempotent — redelivered delete
-    events are harmless).
-
-    ``broadcast_ids=True`` is the incremental default.  For bulk purges
-    whose id set is not driver-broadcastable (~10⁷ ids for a 1% batch of a
-    10⁹-doc corpus) pass ``False``: every victim lookup / anti-join becomes
-    a shuffled join, mirroring ``merge_upsert(broadcast_batch_keys=False)``.
-    """
-    from azuredatalakeindexer_spark.sources.ann_index import _partition_dir_names
-    from azuredatalakeindexer_spark.sources.staging import (
-        StagedCommit,
-        recover_for_maintenance,
-    )
-
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-
-    recover_for_maintenance(spark, path)
-    _require_unsegmented(spark, path, "delete_from_text_index")
-    _check_n_buckets(spark, path, n_buckets, "delete_from_text_index")
-    ids = doc_ids.select(id_col).distinct().localCheckpoint()
-    keys = F.broadcast(ids) if broadcast_ids else ids
-
-    doclens_path = f"{path}/doclens"
-    postings_path = f"{path}/postings"
-    full_lens = spark.read.parquet(doclens_path)
-    old_postings = spark.read.parquet(postings_path)
-    vcols = _postings_cols(old_postings, id_col)  # carries pos on positional indexes
-    has_bsets = "buckets" in full_lens.columns
-
-    # The pre-write critical path is latency-bound sequential driver
-    # actions (same r12 finding as the upsert) — layer by dependency and
-    # run each layer's independent members concurrently.
-    #
-    # Layer 1: the dead ids' own dbuckets (computable from the ids alone —
-    # statically prune BOTH the victim lookup and the doclens rewrite) and
-    # the survivor stats (must reflect ALL surviving docs; aggregated
-    # before the rewrite so a fully-emptied doclens layout never has to be
-    # re-read).
-    id_dbuckets, _srow = run_concurrent(
-        lambda: [
-            r["b"]
-            for r in ids.select(
-                F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("b")
-            )
-            .distinct()
-            .collect()
-        ],
-        lambda: full_lens.join(keys, id_col, "left_anti")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
-        )
-        .first(),
-    )
-    # n_docs == 0 means EVERY document was deleted: both relations end up
-    # row-free, and a partitioned layout with zero data files cannot be
-    # re-read (schema inference fails) — replace it with a typed 0-row
-    # unpartitioned sentinel instead; upsert routes back to the static
-    # build write when it sees the empty base
-    index_emptied = _srow["n_docs"] == 0
-
-    commit = StagedCommit(spark, path)
-
-    # Layer 2: the postings-side and doclens-side survivor chains are
-    # mutually independent given the layer-1 outputs.
-    def _chain_postings():
-        # victims carry term too: the same scan feeds the affected-bucket
-        # list and the per-term removal counts for the terms-rollup delta.
-        # The doclens bucket-set column statically prunes the scan to the
-        # buckets actually holding the dead ids' postings (legacy indexes
-        # fall back to the full projection).
-        vic_buckets = _victim_buckets(spark, path, keys, id_dbuckets, id_col)
-        vsrc = (
-            old_postings
-            if vic_buckets is None
-            else old_postings.where(F.col("bucket").isin(vic_buckets))
-        )
-        victims = (
-            vsrc.select("term", id_col, "bucket")
-            .join(keys, id_col, "left_semi")
-            .localCheckpoint()
-        )
-        affected = [
-            r["bucket"] for r in victims.select("bucket").distinct().collect()
-        ]
-        keep = None
-        present: list = []
-        if affected:
-            keep = (
-                spark.read.parquet(postings_path)
-                .where(F.col("bucket").isin(affected))
-                .join(keys, id_col, "left_anti")
-                .select(*vcols, "bucket")
-                .localCheckpoint()
-            )
-            present = [r["bucket"] for r in keep.select("bucket").distinct().collect()]
-        return victims, affected, keep, present
-
-    def _chain_doclens():
-        dvictims = (
-            full_lens.where(F.col("dbucket").isin(id_dbuckets))
-            .select(id_col, "dbucket")
-            .join(keys, id_col, "left_semi")
-        )
-        daffected = [
-            r["dbucket"] for r in dvictims.select("dbucket").distinct().collect()
-        ]
-        n_removed = dvictims.select(id_col).distinct().count()
-        dkeep = None
-        dpresent: list = []
-        if daffected:
-            dkeep = (
-                spark.read.parquet(doclens_path)
-                .where(F.col("dbucket").isin(daffected))
-                .join(keys, id_col, "left_anti")
-                .select(
-                    id_col,
-                    "dl",
-                    *(["buckets"] if has_bsets else []),
-                    "dbucket",
-                )
-                .localCheckpoint()
-            )
-            dpresent = [
-                r["dbucket"] for r in dkeep.select("dbucket").distinct().collect()
-            ]
-        return daffected, n_removed, dkeep, dpresent
-
-    (victims, affected, keep, present), (daffected, n_removed, dkeep, dpresent) = (
-        run_concurrent(_chain_postings, _chain_doclens)
-    )
-
-    # the survivor relations are checkpointed and the present/dpresent
-    # bucket sets collected — the four tier writes below are mutually
-    # independent, so submit them concurrently (run_concurrent) and let
-    # promote stay one sequential rename pass
-    def _w_postings() -> None:
-        survivors_elsewhere = bool(
-            set(_partition_dir_names(spark, postings_path, "bucket"))
-            - {f"bucket={b}" for b in affected}
-        )
-        if index_emptied or (not present and not survivors_elsewhere):
-            # every doc deleted — or every token-bearing doc deleted while
-            # zero-token docs remain: the layout would lose its last data
-            # file, so stage the typed 0-row unpartitioned sentinel
-            # (upsert routes back through the static build write on it)
-            keep.write.parquet(commit.stage("postings"))
-            commit.swap("postings", "postings")
-            return
-        if present:
-            keep.repartition("bucket").sortWithinPartitions("term").write.partitionBy(
-                "bucket"
-            ).parquet(commit.stage("postings"))
-        for b in affected:
-            if b in present:
-                commit.swap(f"postings/bucket={b}", f"postings/bucket={b}")
-            else:
-                commit.remove(f"postings/bucket={b}")
-
-    def _w_doclens() -> None:
-        if index_emptied:
-            dkeep.write.parquet(commit.stage("doclens"))
-            commit.swap("doclens", "doclens")
-            return
-        if dpresent:
-            dkeep.repartition("dbucket").write.partitionBy("dbucket").parquet(
-                commit.stage("doclens")
-            )
-        for b in daffected:
-            if b in dpresent:
-                commit.swap(f"doclens/dbucket={b}", f"doclens/dbucket={b}")
-            else:
-                commit.remove(f"doclens/dbucket={b}")
-
-    def _w_docstore() -> None:
-        # docstore (retrievable text): victims leave their dbuckets under
-        # the same journal; emptied dbuckets are removed; delete-all drops
-        # to the typed 0-row unpartitioned sentinel like doclens.  Single
-        # consumer (the staged write) — no checkpoint needed
-        skeep = (
-            spark.read.parquet(f"{path}/docstore")
-            .where(F.col("dbucket").isin(daffected))
-            .join(keys, id_col, "left_anti")
-            .select(id_col, "text", "dbucket")
-        )
-        if index_emptied:
-            skeep.write.parquet(commit.stage("docstore"))
-            commit.swap("docstore", "docstore")
-            return
-        # docstore rows mirror doclens rows id-for-id, so the same
-        # dbuckets survive (dpresent) and the same ones empty
-        if dpresent:
-            skeep.repartition("dbucket").write.partitionBy("dbucket").parquet(
-                commit.stage("docstore")
-            )
-        for b in daffected:
-            if b in dpresent:
-                commit.swap(f"docstore/dbucket={b}", f"docstore/dbucket={b}")
-            else:
-                commit.remove(f"docstore/dbucket={b}")
-
-    def _w_stats_terms() -> None:
-        # the survivor stats row was collected in layer 1 — land it
-        # driver-side (r14; see write_meta_parquet)
-        from azuredatalakeindexer_spark.functions.localrel import (
-            write_meta_parquet,
-        )
-
-        write_meta_parquet(
-            spark,
-            [(_srow["n_docs"], _srow["avgdl"], int(_srow["sum_dl"]), n_buckets)],
-            "n_docs bigint, avgdl double, sum_dl bigint, n_buckets int",
-            commit.stage("stats"),
-        )
-        commit.swap("stats", "stats")
-        if index_emptied:
-            spark.createDataFrame([], "term string, df bigint").write.parquet(
-                commit.stage("terms")
-            )
-        else:
-            # post-state postings for the pre-rollup rebuild fallback:
-            # unaffected live buckets ∪ the staged survivors
-            rebuild_src = (
-                old_postings.where(~F.col("bucket").isin(affected)).select("term")
-                if not affected
-                else old_postings.where(~F.col("bucket").isin(affected))
-                .select("term")
-                .unionByName(keep.select("term"))
-            )
-            _advance_terms_rollup(
-                spark,
-                path,
-                added=None,
-                removed=victims.groupBy("term").agg(F.count(F.lit(1)).alias("n")),
-                id_col=id_col,
-                target=commit.stage("terms"),
-                rebuild_from=rebuild_src,
-            )
-        commit.swap("terms", "terms")
-
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
-
-    run_concurrent(
-        _w_postings if affected else None,
-        _w_doclens if daffected else None,
-        (
-            _w_docstore
-            if daffected and hadoop_path_exists(spark, f"{path}/docstore")
-            else None
-        ),
-        _w_stats_terms,
-    )
-    commit.promote()
-    return int(n_removed)
 
 
 def query_phrase_index(
@@ -1922,8 +1106,8 @@ def suggest_from_index(
     term-asc ties; test-pinned equal), but neither the corpus text nor the
     postings are touched in the common case:
 
-    - **Unsegmented index** (fresh build, in-place-maintained, or
-      post-compaction — the steady state): one scan of ``<path>/terms``,
+    - **Unsegmented index** (fresh build or post-compaction — the
+      steady state): one scan of ``<path>/terms``,
       a vocabulary-sized relation range-partitioned AND sorted by term,
       so the pushed ``startswith`` prunes to the files/row groups covering
       the prefix range.  This is the interactive-autocomplete shape: cost
@@ -1936,7 +1120,7 @@ def suggest_from_index(
       Compaction restores the pure-rollup path.
 
     Indexes written before the rollup existed fall back to the postings
-    recount as well (``build``/``compact``/any in-place op upgrades them).
+    recount as well (a compaction writes the rollup).
     """
     if not prefix:
         raise ValueError("suggest_from_index needs a non-empty prefix")
@@ -1944,7 +1128,6 @@ def suggest_from_index(
     from azuredatalakeindexer_spark.sources.staging import recover_for_query
 
     recover_for_query(spark, path)
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
     from azuredatalakeindexer_spark.sources.text_segments import (
         list_segments,
         live_prefix_slice,
@@ -2014,7 +1197,6 @@ def _fuzzy_vocab(
             conds = c if conds is None else (conds | c)
         return conds
 
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
     from azuredatalakeindexer_spark.sources.text_segments import (
         list_segments,
         live_term_slice,
@@ -2172,7 +1354,6 @@ def _pattern_vocab(
             conds = c if conds is None else (conds | c)
         return conds
 
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
     from azuredatalakeindexer_spark.sources.text_segments import (
         list_segments,
         live_term_slice,
@@ -2294,7 +1475,6 @@ def highlight_from_index(
     the corpus text relation is never scanned (plan-audited in
     PLANS.md; the scan-time ``search_highlight`` touches every doc).
     """
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
 
     if not hadoop_path_exists(spark, f"{path}/docstore"):
         raise ValueError(

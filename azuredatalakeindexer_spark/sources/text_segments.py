@@ -1,19 +1,18 @@
-"""Segmented (LSM-style) maintenance for the persisted inverted text index.
+"""Segmented (LSM-style) maintenance — the one way the persisted inverted
+text index changes after its build.
 
-WHY A SECOND MAINTENANCE PATH.  The in-place ``upsert_text_index`` rewrites
-every postings bucket touched by the batch.  For vectors that is bounded (a
-1% batch maps to a few IVF cells), and the true-sf1 bench shows the ANN
-crossover (upsert 1.52 s < build 2.52 s, `BENCH_sf1_r07.json`).  Text is
-different: a batch's DISTINCT TERMS cover ~every term bucket of a Zipf-ish
-corpus (500 docs x ~40 words hit all 64 — or all 4096 — buckets), so
-"affected buckets" degenerates to the whole index and the same bench
-measures the 1% in-place text upsert at 5.41 s vs a 3.28 s full rebuild.
-No bucket count fixes that; it is structural to term-partitioned in-place
-rewrites.  The scalable design — the one Lucene/Elasticsearch actually use
-— is segments: an upsert writes ONLY its batch as a new immutable segment
-(O(batch) work, independent of index size), deletes write tombstones,
-queries resolve last-writer-wins across segments, and an explicit
-compaction folds segments back into the base when their count grows.
+WHY SEGMENTS.  An upsert that rewrote the postings buckets a batch touches
+would not be bounded by the batch: a batch's DISTINCT TERMS cover ~every
+term bucket of a Zipf-ish corpus (500 docs x ~40 words hit all 64 — or all
+4096 — buckets), so "affected buckets" degenerates to the whole index.  A
+bucket-rewriting text upsert measured slower than a full rebuild at sf1
+(5.41 s vs 3.28 s for a 1% batch, `BENCH_sf1_r07.json`), and no bucket
+count fixes that; it is structural to term-partitioned rewrites.  So the
+index is maintained the way Lucene/Elasticsearch maintain theirs: an
+upsert writes ONLY its batch as a new immutable segment (O(batch) work,
+independent of index size), a delete writes tombstones, queries resolve
+last-writer-wins across segments, and ``compact_text_index`` folds
+segments back into the base when their count grows.
 
 Layout (extends ``text_index.py``'s base layout, which acts as segment 0):
 
@@ -45,10 +44,10 @@ count bounded with ``compact_text_index`` (amortized like any LSM).  The
 trade is the classic one: in-place rewrite = pay at write time; segments =
 tiny writes, small bounded read overhead, periodic compaction.
 
-Reference parity: MergeOrUpload/Delete semantics per
-``/root/reference/AzureSearchIndexer/`` batch actions — same 201/200
-statuses as ``upsert_text_index``, same idempotent deletes — realized with
-the write path production search engines use at this data volume.
+Reference parity: MergeOrUpload/Delete semantics per the reference's
+``AzureSearchIndexer/`` batch actions — 201/200 statuses, idempotent
+deletes — realized with the write path production search engines use at
+this data volume.
 """
 
 from __future__ import annotations
@@ -59,10 +58,7 @@ from pyspark.sql.types import StructType
 
 from azuredatalakeindexer_spark.functions.localrel import tiny_df
 from azuredatalakeindexer_spark.functions.text import portable_hash64, tokens
-from azuredatalakeindexer_spark.sources.ann_index import (
-    _hadoop_fs,
-    hadoop_path_exists,
-)
+from azuredatalakeindexer_spark.sources.staging import _hadoop_fs, hadoop_path_exists
 
 #: base layout acts as this segment id; real segments start at 1
 BASE_SEG = 0
@@ -563,9 +559,9 @@ def upsert_text_index_segmented(
     immutable facts; non-drain callers leave it None and every probe
     runs.
 
-    Returns ``(id_col, status)`` with 201=created / 200=modified — the same
-    contract as the in-place ``upsert_text_index`` (after either, queries
-    answer identically; test-pinned).  Work: tokenize the batch, join it
+    Returns ``(id_col, status)`` with 201=created / 200=modified; queries
+    afterwards answer identically to a fresh ``build_text_index`` of the
+    logical corpus (test-pinned).  Work: tokenize the batch, join it
     ONCE against the live-doc set (column-pruned, dbucket-pruned doclens
     slices + tombstones) and materialize that batch-sized frame — statuses,
     the segment doclens, and the exact stats delta all derive from it with
@@ -587,7 +583,6 @@ def upsert_text_index_segmented(
     if not known.get("recovered"):
         recover_for_maintenance(spark, path)
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
 
     toks = tokens(F.col(text_col))
     deduped = _dedupe_delta(delta, id_col, text_col)
@@ -839,13 +834,6 @@ def compact_text_index(
         .withColumn("bucket", F.pmod(portable_hash64(F.col("term")), F.lit(n_buckets)))
         .localCheckpoint()
     )
-    # per-doc postings-bucket sets from the resolved postings: the
-    # compacted doclens carries the victim-directory column
-    # (text_index._lens_from_postings) — so compacting ALSO upgrades a
-    # pre-bucket-set legacy index to pruned in-place maintenance
-    bsets = merged.groupBy(id_col).agg(
-        F.array_sort(F.collect_set("bucket")).alias("buckets")
-    )
     lens = (
         alive_docs(spark, path, segs, id_col)
         .select(
@@ -853,12 +841,6 @@ def compact_text_index(
             "dl",
             F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("dbucket"),
         )
-        .join(bsets, id_col, "left")
-        .withColumn(
-            "buckets",
-            F.coalesce(F.col("buckets"), F.array().cast("array<bigint>")),
-        )
-        .select(id_col, "dl", "buckets", "dbucket")
         .localCheckpoint()
     )
     # Everything below is STAGED and promoted by one journaled rename pass
@@ -870,11 +852,11 @@ def compact_text_index(
     # A fully-tombstoned (or all-zero-token) corpus resolves to 0-row
     # relations, and a partitioned write of a 0-row frame leaves a
     # directory with zero data files that cannot be re-read (schema
-    # inference fails on every later query/upsert).  Mirror the in-place
-    # delete path: stage the typed 0-row UNPARTITIONED sentinel instead,
-    # which upsert recognizes (isEmpty) and replaces with a static build
-    # write.  Checked per relation — postings can empty while doclens
-    # keeps rows (surviving docs all zero-token).
+    # inference fails on every later query/upsert).  Stage the typed
+    # 0-row UNPARTITIONED sentinel instead: it reads back with the same
+    # columns, so later segments layer on it and a later compaction
+    # writes a partitioned layout again.  Checked per relation — postings
+    # can empty while doclens keeps rows (surviving docs all zero-token).
     from azuredatalakeindexer_spark.sources.staging import StagedCommit
     from azuredatalakeindexer_spark.sources.text_index import (
         _write_stats_from,
@@ -882,15 +864,13 @@ def compact_text_index(
     )
 
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
 
     commit = StagedCommit(spark, path)
     # both resolved relations are checkpointed, so the emptiness probes
     # are first-partition peeks, and the five staged tier writes below are
-    # mutually independent — submit them concurrently (r12, same shape as
-    # the in-place maintenance ops); per-tier swaps record inside each
-    # thunk (disjoint live paths) and promote stays one sequential rename
-    # pass
+    # mutually independent — submit them concurrently (r12); per-tier
+    # swaps record inside each thunk (disjoint live paths) and promote
+    # stays one sequential rename pass
     merged_empty, lens_empty = run_concurrent(
         lambda: merged.isEmpty(), lambda: lens.isEmpty()
     )

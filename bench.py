@@ -134,7 +134,7 @@ HEADLINE = [
     "text_index_profile_phrase",
     # r13: NEAR/proximity composed with field-weighted profiles and
     # positional (Lucene token-adjacency) phrase serving, both from the
-    # positional multi-field postings through the in-place lifecycle
+    # positional multi-field postings through the segmented lifecycle
     "text_index_profile_near",
     "text_index_profile_phrase_pos",
     # r14: suggest / fuzzy / wildcard composed with the multi-field
@@ -584,9 +584,12 @@ def index_lifecycle_metrics(spark, sf_dir: str) -> dict[str, float]:
     from azuredatalakeindexer_spark.sources.fixtures import load_table
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
-        delete_from_text_index,
         query_text_index,
-        upsert_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        compact_text_index,
+        delete_from_text_index_segmented,
+        upsert_text_index_segmented,
     )
 
     out: dict[str, float] = {}
@@ -596,7 +599,7 @@ def index_lifecycle_metrics(spark, sf_dir: str) -> dict[str, float]:
         # each step stands alone: orphaned localCheckpoint blocks from the
         # previous step otherwise build GC pressure that dominates the
         # later timings (same rationale as the headline's release; measured
-        # at sf10: the in-place upsert swings 8-56 s with accumulated state)
+        # at sf10: a maintenance op swings 8-56 s with accumulated state)
         _release_session_state(spark)
         t0 = time.time()
         fn()
@@ -609,50 +612,33 @@ def index_lifecycle_metrics(spark, sf_dir: str) -> dict[str, float]:
         tpath = f"{tmp}/ti"
         timed("text_build_full", lambda: build_text_index(base, tpath, n_buckets=64))
         timed(
-            "text_upsert_1pct_batch",
-            lambda: upsert_text_index(spark, tpath, delta, n_buckets=64).count(),
-        )
-        timed(
-            "text_delete_1pct_batch",
-            lambda: delete_from_text_index(spark, tpath, delta.select("doc_id"), n_buckets=64),
-        )
-        timed(
             "text_query_topk",
             lambda: query_text_index(
                 spark, tpath, ["merge", "query", "stream"], k=20, n_buckets=64
             ).count(),
         )
 
-        # segmented (LSM) maintenance: the scale path for text — the
-        # in-place rows above rewrite every bucket a batch's terms touch
-        # (~all of them for Zipf text), the segment rows write O(batch)
-        from azuredatalakeindexer_spark.sources.text_segments import (
-            compact_text_index,
-            delete_from_text_index_segmented,
-            upsert_text_index_segmented,
-        )
-
-        spath = f"{tmp}/ti_seg"
-        build_text_index(base, spath, n_buckets=64)
+        # segmented (LSM) maintenance: each op writes O(batch), compaction
+        # folds the segments back into the base
         timed(
             "text_seg_upsert_1pct_batch",
             lambda: upsert_text_index_segmented(
-                spark, spath, delta, n_buckets=64
+                spark, tpath, delta, n_buckets=64
             ).count(),
         )
         timed(
             "text_seg_delete_1pct_batch",
             lambda: delete_from_text_index_segmented(
-                spark, spath, delta.select("doc_id")
+                spark, tpath, delta.select("doc_id")
             ),
         )
         timed(
             "text_seg_query_topk",
             lambda: query_text_index(
-                spark, spath, ["merge", "query", "stream"], k=20, n_buckets=64
+                spark, tpath, ["merge", "query", "stream"], k=20, n_buckets=64
             ).count(),
         )
-        timed("text_seg_compact", lambda: compact_text_index(spark, spath, n_buckets=64))
+        timed("text_seg_compact", lambda: compact_text_index(spark, tpath, n_buckets=64))
 
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         ebase = emb.where(F.col("vec_id") % 100 != 0)
@@ -975,9 +961,9 @@ def main() -> None:
             "partitioned_runs / stream_* (VERDICT r6 wrong-#3)",
             "index_lifecycle": "build_full indexes ~99% of the table; "
             "upsert/delete apply a ~1% batch and must be bounded by "
-            "affected bucket/cell partitions (in-place) or by the batch "
-            "itself (segmented/LSM rows; see BENCH_sf10_r07.json for the "
-            "scale crossover)",
+            "affected cell partitions (IVF/PQ rows) or by the batch "
+            "itself (text segmented/LSM rows; see BENCH_sf10_r07.json for "
+            "the scale crossover)",
             "headline_composition": f"{len(LIFECYCLE_QUERIES)} of the "
             f"{len(HEADLINE)} headline queries are persisted-index "
             "LIFECYCLE queries (bench.py::LIFECYCLE_QUERIES): each "

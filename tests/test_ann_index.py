@@ -200,7 +200,10 @@ def test_upsert_text_index_matches_fresh_rebuild(spark, tmp_path):
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
         query_text_index,
-        upsert_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        compact_text_index,
+        upsert_text_index_segmented,
     )
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
@@ -216,7 +219,7 @@ def test_upsert_text_index_matches_fresh_rebuild(spark, tmp_path):
         )
     )
     statuses = {r["doc_id"]: r["status"] for r in
-                upsert_text_index(spark, path, delta, n_buckets=16).collect()}
+                upsert_text_index_segmented(spark, path, delta, n_buckets=16).collect()}
     assert all(statuses[i] == 201 for i in range(10))
     assert all(statuses[i] == 200 for i in range(10, 15))
 
@@ -229,8 +232,9 @@ def test_upsert_text_index_matches_fresh_rebuild(spark, tmp_path):
     assert [(r["doc_id"], r["bm25"]) for r in upserted.collect()] == [
         (r["doc_id"], r["bm25"]) for r in fresh.collect()
     ]
-    # replaced docs' stale postings are really gone: doc 10's only
-    # surviving terms are the replacement text's
+    # after compaction the replaced docs' stale postings are really gone:
+    # doc 10's only surviving terms are the replacement text's
+    compact_text_index(spark, path, n_buckets=16)
     left = {r["term"] for r in spark.read.parquet(f"{path}/postings")
             .where(F.col("doc_id") == 10).collect()}
     assert left == {"merge", "stream"}
@@ -239,7 +243,7 @@ def test_upsert_text_index_matches_fresh_rebuild(spark, tmp_path):
 def test_stream_text_index_is_batch_split_invariant(spark, tmp_path):
     """Draining the document stream in 4 micro-batches must leave the SAME
     index (bit-identical query rows) as the scan-time bm25 over the whole
-    corpus — upserts are LWW per doc and touch only affected buckets."""
+    corpus — each later micro-batch lands as an LWW segment."""
     import os as _os
 
     from azuredatalakeindexer_spark.operators.search import bm25_topk
@@ -271,8 +275,10 @@ def test_delete_from_text_index_matches_fresh_rebuild(spark, tmp_path):
     from azuredatalakeindexer_spark.operators.search import bm25_topk
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
-        delete_from_text_index,
         query_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        delete_from_text_index_segmented,
     )
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
@@ -280,9 +286,9 @@ def test_delete_from_text_index_matches_fresh_rebuild(spark, tmp_path):
     build_text_index(docs, path, n_buckets=16)
 
     ids = spark.range(0, 10).withColumnRenamed("id", "doc_id")
-    assert delete_from_text_index(spark, path, ids, n_buckets=16) == 10
+    assert delete_from_text_index_segmented(spark, path, ids) == 10
     # redelivered delete: nothing left to remove, index unchanged
-    assert delete_from_text_index(spark, path, ids, n_buckets=16) == 0
+    assert delete_from_text_index_segmented(spark, path, ids) == 0
 
     after = query_text_index(spark, path, ["merge", "query", "stream"], k=20, n_buckets=16)
     survivors = docs.where(F.col("doc_id") >= 10)
@@ -324,13 +330,17 @@ def test_upsert_ivf_clears_emptied_victim_cell(spark, tmp_path):
 
 def test_upsert_text_index_clears_emptied_victim_bucket(spark, tmp_path):
     """ADVICE r5 (high): replacing a doc whose old term was the ONLY posting
-    in its bucket must clear that bucket — otherwise the stale posting
-    persists and the old term still matches."""
+    in its bucket must hide that posting at once and clear the bucket at
+    compaction — otherwise the stale posting persists and the old term
+    still matches."""
     from azuredatalakeindexer_spark.sources.text_index import (
         _py_bucket,
         build_text_index,
         query_text_index,
-        upsert_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        compact_text_index,
+        upsert_text_index_segmented,
     )
 
     old = "zebra"
@@ -344,21 +354,30 @@ def test_upsert_text_index_clears_emptied_victim_bucket(spark, tmp_path):
     path = str(tmp_path / "ti")
     build_text_index(docs, path, n_buckets=16)
     delta = spark.createDataFrame([(1, new)], "doc_id long, text string")
-    upsert_text_index(spark, path, delta, n_buckets=16)
-    # the stale 'zebra' posting is gone: its bucket was cleared
+    upsert_text_index_segmented(spark, path, delta, n_buckets=16)
+    # the stale 'zebra' posting no longer matches
+    assert query_text_index(spark, path, [old], k=5, n_buckets=16).count() == 0
+    assert query_text_index(spark, path, [new], k=5, n_buckets=16).count() == 2
+    # compaction clears its bucket on disk
+    compact_text_index(spark, path, n_buckets=16)
+    assert not os.path.exists(f"{path}/postings/bucket={_py_bucket(old, 16)}")
     assert query_text_index(spark, path, [old], k=5, n_buckets=16).count() == 0
     assert query_text_index(spark, path, [new], k=5, n_buckets=16).count() == 2
 
 
 def test_delete_all_docs_empties_index_and_counts_zero_token_docs(spark, tmp_path):
     """ADVICE r5 (high+low): deleting every doc must leave NO stale postings
-    or doclens (n_docs=0 stats, queries match nothing), and zero-token docs
-    (doclens row, no postings) count toward n_removed."""
+    or doclens after compaction (n_docs=0 stats, queries match nothing),
+    and zero-token docs (doclens row, no postings) count toward
+    n_removed."""
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
-        delete_from_text_index,
         query_text_index,
-        upsert_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        compact_text_index,
+        delete_from_text_index_segmented,
+        upsert_text_index_segmented,
     )
 
     docs = spark.createDataFrame(
@@ -368,27 +387,37 @@ def test_delete_all_docs_empties_index_and_counts_zero_token_docs(spark, tmp_pat
     path = str(tmp_path / "ti")
     build_text_index(docs, path, n_buckets=16)
     ids = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
-    assert delete_from_text_index(spark, path, ids, n_buckets=16) == 3
+    assert delete_from_text_index_segmented(spark, path, ids) == 3
+    assert spark.read.parquet(f"{path}/stats").first()["n_docs"] == 0
+    assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 0
+    compact_text_index(spark, path, n_buckets=16)
     st = spark.read.parquet(f"{path}/stats").first()
     assert st["n_docs"] == 0
     assert spark.read.parquet(f"{path}/postings").count() == 0
     assert spark.read.parquet(f"{path}/doclens").count() == 0
     assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 0
-    # the emptied index accepts a fresh upsert (sentinel -> clean rebuild)
+    # the emptied index accepts a fresh upsert on top of the sentinel, and
+    # a later compaction writes a partitioned layout again
     statuses = {r["doc_id"]: r["status"] for r in
-                upsert_text_index(spark, path, docs, n_buckets=16).collect()}
+                upsert_text_index_segmented(spark, path, docs, n_buckets=16).collect()}
     assert statuses == {1: 201, 2: 201, 3: 201}
+    assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 2
+    compact_text_index(spark, path, n_buckets=16)
+    assert spark.read.parquet(f"{path}/doclens").count() == 3
     assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 2
 
 
 def test_delete_partial_keeps_other_buckets_intact(spark, tmp_path):
-    """Deleting the sole occupant of one bucket clears ONLY that bucket;
-    other buckets' postings survive untouched."""
+    """Deleting the sole occupant of one bucket clears ONLY that bucket at
+    compaction; other buckets' postings survive untouched."""
     from azuredatalakeindexer_spark.sources.text_index import (
         _py_bucket,
         build_text_index,
-        delete_from_text_index,
         query_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        compact_text_index,
+        delete_from_text_index_segmented,
     )
 
     a = "zebra"
@@ -400,23 +429,31 @@ def test_delete_partial_keeps_other_buckets_intact(spark, tmp_path):
     path = str(tmp_path / "ti")
     build_text_index(docs, path, n_buckets=16)
     ids = spark.createDataFrame([(1,)], "doc_id long")
-    assert delete_from_text_index(spark, path, ids, n_buckets=16) == 1
+    assert delete_from_text_index_segmented(spark, path, ids) == 1
+    assert query_text_index(spark, path, [a], k=5, n_buckets=16).count() == 0
+    assert query_text_index(spark, path, [b], k=5, n_buckets=16).count() == 1
+    compact_text_index(spark, path, n_buckets=16)
+    assert not os.path.exists(f"{path}/postings/bucket={_py_bucket(a, 16)}")
+    assert os.path.exists(f"{path}/postings/bucket={_py_bucket(b, 16)}")
     assert query_text_index(spark, path, [a], k=5, n_buckets=16).count() == 0
     assert query_text_index(spark, path, [b], k=5, n_buckets=16).count() == 1
 
 
 def test_delete_last_token_docs_leaves_readable_postings(spark, tmp_path):
     """ADVICE r6 edge: deleting every token-BEARING doc while zero-token docs
-    remain empties all postings buckets without emptying doclens.  The
-    postings layout must drop to the typed 0-row sentinel (a partitioned dir
-    with zero data files cannot be re-read), stats keep the surviving
-    zero-token docs, and a later upsert routes back through the clean
-    static-build write."""
+    remain empties all postings buckets without emptying doclens.  At
+    compaction the postings layout must drop to the typed 0-row sentinel
+    (a partitioned dir with zero data files cannot be re-read), stats keep
+    the surviving zero-token docs, and a later upsert + compaction writes
+    a clean partitioned layout again."""
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
-        delete_from_text_index,
         query_text_index,
-        upsert_text_index,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        compact_text_index,
+        delete_from_text_index_segmented,
+        upsert_text_index_segmented,
     )
 
     docs = spark.createDataFrame(
@@ -426,19 +463,21 @@ def test_delete_last_token_docs_leaves_readable_postings(spark, tmp_path):
     path = str(tmp_path / "ti")
     build_text_index(docs, path, n_buckets=16)
     ids = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    assert delete_from_text_index(spark, path, ids, n_buckets=16) == 2
+    assert delete_from_text_index_segmented(spark, path, ids) == 2
+    compact_text_index(spark, path, n_buckets=16)
     # postings fully emptied but still readable; doclens keeps the 2 docs
     assert spark.read.parquet(f"{path}/postings").count() == 0
     assert spark.read.parquet(f"{path}/doclens").count() == 2
     assert spark.read.parquet(f"{path}/stats").first()["n_docs"] == 2
     assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 0
     # upsert into the sentinel-postings state: doclens must KEEP the two
-    # surviving zero-token docs (the doclens rewrite is gated on the doclens
-    # relation's own emptiness, not the postings-derived base_empty)
+    # surviving zero-token docs through the next compaction
     delta = spark.createDataFrame([(5, "delta beta")], "doc_id long, text string")
     st = {r["doc_id"]: r["status"] for r in
-          upsert_text_index(spark, path, delta, n_buckets=16).collect()}
+          upsert_text_index_segmented(spark, path, delta, n_buckets=16).collect()}
     assert st == {5: 201}
+    assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 1
+    compact_text_index(spark, path, n_buckets=16)
     lens = {r["doc_id"]: r["dl"] for r in
             spark.read.parquet(f"{path}/doclens").collect()}
     assert lens == {3: 0, 4: 0, 5: 2}

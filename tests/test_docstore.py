@@ -1,7 +1,7 @@
 """Docstore (retrievable text) + index-served highlight
 (sources/text_index.py): fetch-by-id snippets must match the scan-time
-keyword_snippets on the top-k, survive in-place maintenance, and never
-scan the corpus text relation."""
+keyword_snippets on the top-k, survive segmented maintenance and
+compaction, and never scan the corpus text relation."""
 
 from __future__ import annotations
 
@@ -14,9 +14,7 @@ from azuredatalakeindexer_spark.operators.search import bm25_topk, keyword_snipp
 from azuredatalakeindexer_spark.sources.fixtures import load_table
 from azuredatalakeindexer_spark.sources.text_index import (
     build_text_index,
-    delete_from_text_index,
     highlight_from_index,
-    upsert_text_index,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -65,42 +63,6 @@ def test_highlight_requires_docstore(spark, tmp_path):
     build_text_index(docs, path, n_buckets=16)
     with pytest.raises(ValueError, match="no docstore"):
         highlight_from_index(spark, path, TERMS, k=5, n_buckets=16)
-
-
-def test_docstore_rides_inplace_maintenance(spark, tmp_path):
-    """Upsert + delete must advance the docstore under the same journal:
-    post-maintenance highlights equal a fresh rebuild's over the logical
-    corpus."""
-    docs = _docs(spark)
-    path = str(tmp_path / "ti")
-    build_text_index(docs, path, n_buckets=16, store_text=True)
-    delta = docs.where(F.col("doc_id") % 4 == 0).select(
-        "doc_id", F.concat(F.lit("merge rewritten body "), F.col("text")).alias("text")
-    )
-    upsert_text_index(spark, path, delta, n_buckets=16)
-    dead = docs.select("doc_id").where(F.col("doc_id") % 7 == 0)
-    delete_from_text_index(spark, path, dead, n_buckets=16)
-
-    logical = (
-        docs.join(delta.select("doc_id"), "doc_id", "left_anti")
-        .unionByName(delta)
-        .join(dead, "doc_id", "left_anti")
-    )
-    got = sorted(
-        tuple(r)
-        for r in highlight_from_index(
-            spark, path, TERMS, "merge", k=20, n_buckets=16
-        ).collect()
-    )
-    assert got == _expected(spark, logical, k=20)
-    # docstore id set tracks doclens exactly
-    store_ids = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{path}/docstore").select("doc_id").collect()
-    )
-    len_ids = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{path}/doclens").select("doc_id").collect()
-    )
-    assert store_ids == len_ids
 
 
 def test_docstore_rides_the_segmented_lsm_path(spark, tmp_path):

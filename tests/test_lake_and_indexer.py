@@ -98,3 +98,38 @@ def test_full_indexer_run(spark, lake):
     )
     assert res2.created_count == 0
     assert res2.modified_count == 24
+
+
+def test_indexer_run_with_empty_delta_reports_zero_counts(spark, lake):
+    """A tick where no path passes the watermark reads nothing and leaves
+    the data index as it was."""
+    paths = list_lake_paths(spark, lake, glob="*.json")
+    from azuredatalakeindexer_spark.operators.mapper import listing_to_path_rows
+
+    path_index = listing_to_path_rows(
+        paths.select(
+            F.col("path").alias("name"),
+            F.col("isDirectory"),
+            F.col("fileLastModified").alias("lastModified"),
+        ),
+        now=F.lit("2024-06-01").cast("timestamp"),
+    )
+    existing = spark.createDataFrame(
+        [("cGF0aA==", "kept", 1, True, "e", "path", None)],
+        "pathbase64 string, stringvalue string, numbervalue int, booleanvalue boolean, eTag string, pathUrlEncoded string, lastModified timestamp",
+    )
+    res = run_document_indexer(
+        spark,
+        path_index,
+        lake,
+        existing,
+        ListPathsOptions(from_last_modified="2999-01-01"),
+    )
+    assert res.paths_count == 0
+    assert res.document_read_count == 0
+    assert res.document_read_failed_count == 0
+    assert res.processed_count == 0
+    assert res.created_count == 0
+    assert res.modified_count == 0
+    assert res.failed_too_large_count == 0
+    assert [r["stringvalue"] for r in res.merged.collect()] == ["kept"]

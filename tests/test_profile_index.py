@@ -144,10 +144,11 @@ def test_facets_over_match_set(spark, tmp_path):
 
 def test_profile_upsert_matches_fresh_rebuild(spark, tmp_path):
     """After a MergeOrUpload upsert, the served profile must equal a
-    fresh build over (base \\ replaced) ∪ delta — and statuses report
-    201/200 from the doclens side."""
-    from azuredatalakeindexer_spark.sources.profile_index import (
-        upsert_profile_index,
+    fresh build over (base \\ replaced) ∪ delta, before and after
+    compaction — and statuses report 201/200 from the doclens side."""
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        compact_profile_index,
+        upsert_profile_index_segmented,
     )
 
     docs = _docs(spark)
@@ -167,7 +168,7 @@ def test_profile_upsert_matches_fresh_rebuild(spark, tmp_path):
         )
     )
     st = {r["doc_id"]: r["status"] for r in
-          upsert_profile_index(spark, path, delta).collect()}
+          upsert_profile_index_segmented(spark, path, delta).collect()}
     assert st[99999] == 201
     assert all(v == 200 for k, v in st.items() if k != 99999)
 
@@ -182,12 +183,14 @@ def test_profile_upsert_matches_fresh_rebuild(spark, tmp_path):
     assert got == want
     # and equals the scan-time profile on the logical corpus
     assert got == _rows(scoring_profile_topk(logical, PROFILE, boost=boost, k=20))
+    assert compact_profile_index(spark, path) == 1
+    assert _rows(query_profile_index(spark, path, PROFILE, boost=boost, k=20)) == want
 
 
 def test_profile_delete_matches_fresh_rebuild(spark, tmp_path):
-    from azuredatalakeindexer_spark.sources.profile_index import (
-        delete_from_profile_index,
-        facets_from_index,
+    from azuredatalakeindexer_spark.sources.profile_index import facets_from_index
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        delete_from_profile_index_segmented,
     )
 
     docs = _docs(spark)
@@ -196,10 +199,10 @@ def test_profile_delete_matches_fresh_rebuild(spark, tmp_path):
         docs, path, field_cols=["text", "source"], attr_cols=["n_chars", "source"]
     )
     dead = docs.select("doc_id").where(F.col("doc_id") % 3 == 0)
-    n = delete_from_profile_index(spark, path, dead)
+    n = delete_from_profile_index_segmented(spark, path, dead)
     assert n == docs.where(F.col("doc_id") % 3 == 0).count()
     # idempotent redelivery
-    assert delete_from_profile_index(spark, path, dead) == 0
+    assert delete_from_profile_index_segmented(spark, path, dead) == 0
 
     survivors = docs.join(dead, "doc_id", "left_anti")
     got = _rows(query_profile_index(spark, path, PROFILE, k=20))
@@ -220,8 +223,9 @@ def test_profile_delete_matches_fresh_rebuild(spark, tmp_path):
 
 
 def test_profile_delete_all_leaves_readable_sentinels(spark, tmp_path):
-    from azuredatalakeindexer_spark.sources.profile_index import (
-        delete_from_profile_index,
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        compact_profile_index,
+        delete_from_profile_index_segmented,
     )
 
     docs = _docs(spark).limit(10)
@@ -229,79 +233,15 @@ def test_profile_delete_all_leaves_readable_sentinels(spark, tmp_path):
     build_profile_index(
         docs, path, field_cols=["text"], attr_cols=["n_chars"]
     )
-    n = delete_from_profile_index(spark, path, docs.select("doc_id"))
+    n = delete_from_profile_index_segmented(spark, path, docs.select("doc_id"))
     assert n == 10
+    assert compact_profile_index(spark, path) == 1
     assert spark.read.parquet(f"{path}/doclens").count() == 0
     assert spark.read.parquet(f"{path}/docvals").count() == 0
     assert spark.read.parquet(f"{path}/postings").count() == 0
     assert query_profile_index(
         spark, path, {"text": (["merge"], 1.0)}, k=5
     ).count() == 0
-
-
-def test_profile_maintenance_shuffled_fallback_plan(spark, tmp_path):
-    """broadcast_ids=False on the multi-field upsert/delete (r9 verdict
-    wrong-#2): every delta-id lookup must route through shuffled joins —
-    no broadcast hint anywhere — and the results must equal the default
-    broadcast path bit-for-bit (same contract as upsert_text_index's
-    fallback, tests/test_text_segments.py::test_upsert_shuffled_fallback_plan)."""
-    from unittest.mock import patch
-
-    from azuredatalakeindexer_spark.sources.profile_index import (
-        delete_from_profile_index,
-        upsert_profile_index,
-    )
-
-    docs = _docs(spark)
-    delta = docs.where(F.col("doc_id") % 5 == 0).select(
-        "doc_id",
-        F.concat(F.lit("merge rewritten "), F.col("text")).alias("text"),
-        F.lit("src1").alias("source"),
-        (F.col("n_chars") + 3).alias("n_chars"),
-    )
-    dead = docs.select("doc_id").where(F.col("doc_id") % 7 == 0)
-    confs = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        path = str(tmp_path / "shuffled")
-        build_profile_index(
-            docs, path, field_cols=["text", "source"], attr_cols=["n_chars", "source"]
-        )
-
-        calls = []
-        orig = F.broadcast
-
-        def spy(df):
-            calls.append(df)
-            return orig(df)
-
-        with patch.object(F, "broadcast", side_effect=spy):
-            st = upsert_profile_index(spark, path, delta, broadcast_ids=False)
-            got_st = sorted(tuple(r) for r in st.collect())
-            n = delete_from_profile_index(spark, path, dead, broadcast_ids=False)
-        assert not calls  # no broadcast hint anywhere on the fallback path
-        got = _rows(query_profile_index(spark, path, PROFILE, k=20))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-    # broadcast path on a second copy must agree exactly
-    path2 = str(tmp_path / "bcast")
-    build_profile_index(
-        docs, path2, field_cols=["text", "source"], attr_cols=["n_chars", "source"]
-    )
-    st2 = upsert_profile_index(spark, path2, delta)
-    assert sorted(tuple(r) for r in st2.collect()) == got_st
-    assert delete_from_profile_index(spark, path2, dead) == n
-    assert _rows(query_profile_index(spark, path2, PROFILE, k=20)) == got
 
 
 def test_profile_filtered_query_keeps_global_stats(spark, tmp_path):
@@ -583,18 +523,17 @@ def _phrase_scan_expected(docs, query, weights, k):
 
 def test_profile_phrase_through_full_maintenance_lifecycle(spark, tmp_path):
     """Phrase predicates on the profile surface (r12 — VERDICT r11
-    missing-#1) through EVERY maintenance tier: served results must equal
-    the scan-time replay after build(store_fields=True), an in-place
-    upsert (replacements + inserts), an in-place delete, a segmented
-    upsert (LWW docstore resolution across base + pending segment), and
-    must be bit-identical before/after compaction folds the segment."""
+    missing-#1) through the maintenance lifecycle: served results must
+    equal the scan-time replay after build(store_fields=True), an upsert
+    (replacements + inserts), a delete, a second upsert (LWW docstore
+    resolution across base + pending segments), and must be bit-identical
+    before/after compaction folds the segments."""
     from azuredatalakeindexer_spark.sources.profile_index import (
-        delete_from_profile_index,
         simple_query_profile_from_index,
-        upsert_profile_index,
     )
     from azuredatalakeindexer_spark.sources.profile_segments import (
         compact_profile_index,
+        delete_from_profile_index_segmented,
         upsert_profile_index_segmented,
     )
 
@@ -614,8 +553,8 @@ def test_profile_phrase_through_full_maintenance_lifecycle(spark, tmp_path):
     assert _rows(served) == _rows(_phrase_scan_expected(a, query, weights, 15))
     assert len(_rows(served)) > 0
 
-    # in-place upsert: replace some docs' text (phrase membership must
-    # track the docstore rewrite) and insert odd docs
+    # upsert: replace some docs' text (phrase membership must track the
+    # segment's docstore) and insert odd docs
     delta = docs.where(F.col("doc_id") % 4 == 1).unionByName(
         a.where(F.col("doc_id") % 8 == 0).select(
             "doc_id",
@@ -624,7 +563,7 @@ def test_profile_phrase_through_full_maintenance_lifecycle(spark, tmp_path):
             "n_chars",
         )
     )
-    upsert_profile_index(spark, path, delta)
+    upsert_profile_index_segmented(spark, path, delta)
     logical = (
         a.join(delta.select("doc_id"), "doc_id", "left_anti").unionByName(delta)
     )
@@ -633,17 +572,17 @@ def test_profile_phrase_through_full_maintenance_lifecycle(spark, tmp_path):
         _phrase_scan_expected(logical, query, weights, 15)
     )
 
-    # in-place delete
+    # tombstone delete
     dead = logical.where(F.col("doc_id") % 16 == 0).select("doc_id")
-    delete_from_profile_index(spark, path, dead)
+    delete_from_profile_index_segmented(spark, path, dead)
     logical = logical.join(dead, "doc_id", "left_anti")
     served = simple_query_profile_from_index(spark, path, query, weights, k=15)
     assert _rows(served) == _rows(
         _phrase_scan_expected(logical, query, weights, 15)
     )
 
-    # segmented upsert: replacements whose NEW text flips phrase
-    # membership both ways, resolved LWW across base + pending segment
+    # second upsert: replacements whose NEW text flips phrase membership
+    # both ways, resolved LWW across base + pending segments
     seg = docs.where(F.col("doc_id") % 4 == 3).select(
         "doc_id",
         F.when(F.col("doc_id") % 8 == 3, F.lit("fast scan merge value"))
@@ -661,7 +600,7 @@ def test_profile_phrase_through_full_maintenance_lifecycle(spark, tmp_path):
     assert pre == _rows(_phrase_scan_expected(logical, query, weights, 15))
 
     # compaction folds the docstore: results bit-identical
-    assert compact_profile_index(spark, path) == 1
+    assert compact_profile_index(spark, path) == 3
     assert (
         _rows(simple_query_profile_from_index(spark, path, query, weights, k=15))
         == pre
@@ -833,18 +772,20 @@ def _near_allowed(docs, t1, t2, slop, fields):
     return docs.where(cond).select("doc_id")
 
 
-def test_profile_near_through_inplace_lifecycle(spark, tmp_path):
+def test_profile_near_through_maintenance_lifecycle(spark, tmp_path):
     """NEAR composed with the field-weighted profile (r13 — VERDICT r12
-    stretch-#8) through the IN-PLACE maintenance lifecycle: served
-    results must equal the scan-time replay (profile ranking over both
-    terms re-cut to the ordered position-pair allowed set) after
-    build(positions=True), an in-place upsert (positions regenerated for
-    the batch, preserved for the rest), and an in-place delete."""
+    stretch-#8) through the maintenance lifecycle: served results must
+    equal the scan-time replay (profile ranking over both terms re-cut to
+    the ordered position-pair allowed set) after build(positions=True),
+    an upsert (positions regenerated for the batch, preserved for the
+    rest), and a delete — ordered and unordered."""
     from azuredatalakeindexer_spark.functions.text import tokens
     from azuredatalakeindexer_spark.sources.profile_index import (
-        delete_from_profile_index,
         near_profile_from_index,
-        upsert_profile_index,
+    )
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        delete_from_profile_index_segmented,
+        upsert_profile_index_segmented,
     )
 
     docs = _docs(spark)
@@ -882,17 +823,13 @@ def test_profile_near_through_inplace_lifecycle(spark, tmp_path):
     assert _rows(served) == _rows(expected(a))
     assert len(_rows(served)) > 0
 
-    from azuredatalakeindexer_spark.sources.profile_index import (
-        upsert_profile_index,
-    )
-
-    upsert_profile_index(spark, path, docs.where(F.col("doc_id") % 3 == 0))
+    upsert_profile_index_segmented(spark, path, docs.where(F.col("doc_id") % 3 == 0))
     served = near_profile_from_index(
         spark, path, "merge", "stream", weights, slop=2, ordered=True, k=15
     )
     assert _rows(served) == _rows(expected(docs))
 
-    delete_from_profile_index(
+    delete_from_profile_index_segmented(
         spark, path, docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
     )
     logical = docs.where(F.col("doc_id") % 7 != 0)
@@ -1050,11 +987,13 @@ def test_profile_phrase_positions_mode(spark, tmp_path):
     predicates served from POSITIONAL postings with Lucene PhraseQuery
     token-adjacency semantics — results must equal the scan-time
     adjacency replay, the plan must never read a docstore, positions
-    survive the in-place lifecycle, and a non-positional index refuses."""
+    survive an upsert, and a non-positional index refuses."""
     from azuredatalakeindexer_spark.functions.text import tokens
     from azuredatalakeindexer_spark.sources.profile_index import (
         simple_query_profile_from_index,
-        upsert_profile_index,
+    )
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        upsert_profile_index_segmented,
     )
 
     docs = _docs(spark)
@@ -1069,7 +1008,7 @@ def test_profile_phrase_positions_mode(spark, tmp_path):
         n_buckets=16,
         positions=True,
     )
-    upsert_profile_index(spark, path, docs.where(F.col("doc_id") % 3 == 0))
+    upsert_profile_index_segmented(spark, path, docs.where(F.col("doc_id") % 3 == 0))
 
     served = simple_query_profile_from_index(
         spark, path, query, weights, k=15, phrase_mode="positions"

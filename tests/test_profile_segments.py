@@ -16,10 +16,8 @@ from azuredatalakeindexer_spark.operators.search import (
 from azuredatalakeindexer_spark.sources.fixtures import load_table
 from azuredatalakeindexer_spark.sources.profile_index import (
     build_profile_index,
-    delete_from_profile_index,
     facets_from_index,
     query_profile_index,
-    upsert_profile_index,
 )
 from azuredatalakeindexer_spark.sources.profile_segments import (
     compact_profile_index,
@@ -86,8 +84,8 @@ def test_segmented_profile_lifecycle_matches_scan_time(spark, tmp_path):
     """Three stacked segments (upsert, tombstones, re-upsert) serve the
     profile and facets bit-identically to the scan-time operators on the
     logical corpus; compaction folds them with identical serving and
-    content equal to a fresh build; in-place ops refuse while segments
-    exist and work again after."""
+    content equal to a fresh build; upserts land on the compacted base
+    again."""
     docs = _docs(spark)
     path = str(tmp_path / "pidx")
     build_profile_index(
@@ -122,12 +120,6 @@ def test_segmented_profile_lifecycle_matches_scan_time(spark, tmp_path):
     logical = logical.join(d2.select("doc_id"), "doc_id", "left_anti").unionByName(d2)
     _check(spark, path, logical)
 
-    # in-place ops refuse while segments exist
-    with pytest.raises(ValueError, match="LSM segments"):
-        upsert_profile_index(spark, path, d2)
-    with pytest.raises(ValueError, match="LSM segments"):
-        delete_from_profile_index(spark, path, dead)
-
     assert compact_profile_index(spark, path) == 3
     assert list_segments(spark, path) == []
     _check(spark, path, logical)
@@ -146,39 +138,10 @@ def test_segmented_profile_lifecycle_matches_scan_time(spark, tmp_path):
         b = {_canon(r) for r in spark.read.parquet(f"{fresh}/{rel}").collect()}
         assert a == b, rel
 
-    # and the in-place path works again post-compaction
-    st3 = upsert_profile_index(spark, path, d2).collect()
+    # and a new segment lands on the compacted base
+    st3 = upsert_profile_index_segmented(spark, path, d2).collect()
     assert all(r["status"] == 200 for r in st3)
-
-
-def test_segmented_profile_matches_inplace_maintenance(spark, tmp_path):
-    """The segmented and in-place maintenance paths applied to copies of
-    the same base produce identical statuses AND identical served
-    results."""
-    docs = _docs(spark)
-    seg_p, inp_p = str(tmp_path / "seg"), str(tmp_path / "inp")
-    for p in (seg_p, inp_p):
-        build_profile_index(
-            docs, p, field_cols=["text", "source"],
-            attr_cols=["n_chars", "source"], n_buckets=16,
-        )
-    delta = _delta(docs, 4, "par").unionByName(
-        spark.createDataFrame(
-            [(99999, "merge fresh profile doc", "src9", 420)],
-            "doc_id long, text string, source string, n_chars long",
-        )
-    )
-    dead = docs.select("doc_id").where(F.col("doc_id") % 6 == 1)
-    st_seg = {r["doc_id"]: r["status"] for r in
-              upsert_profile_index_segmented(spark, seg_p, delta).collect()}
-    st_inp = {r["doc_id"]: r["status"] for r in
-              upsert_profile_index(spark, inp_p, delta).collect()}
-    assert st_seg == st_inp
-    assert delete_from_profile_index_segmented(spark, seg_p, dead) == \
-        delete_from_profile_index(spark, inp_p, dead)
-    a = _rows(query_profile_index(spark, seg_p, PROFILE, boost=BOOST, k=20))
-    b = _rows(query_profile_index(spark, inp_p, PROFILE, boost=BOOST, k=20))
-    assert a == b and len(a) == 20
+    assert list_segments(spark, path) == [1]
 
 
 def test_segmented_profile_fieldstats_stay_exact(spark, tmp_path):

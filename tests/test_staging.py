@@ -19,13 +19,12 @@ from azuredatalakeindexer_spark.sources.staging import (
 )
 from azuredatalakeindexer_spark.sources.text_index import (
     build_text_index,
-    delete_from_text_index,
     query_text_index,
     suggest_from_index,
-    upsert_text_index,
 )
 from azuredatalakeindexer_spark.sources.text_segments import (
     compact_text_index,
+    delete_from_text_index_segmented,
     list_segments,
     upsert_text_index_segmented,
 )
@@ -77,20 +76,17 @@ def test_aborted_maintenance_leaves_old_index_bit_identical(
     boom = RuntimeError("simulated crash before promote")
     with patch.object(StagedCommit, "promote", side_effect=boom):
         with pytest.raises(RuntimeError):
-            upsert_text_index(spark, path, delta, n_buckets=16)
-        assert _snapshot(spark, path) == before
-        with pytest.raises(RuntimeError):
-            delete_from_text_index(spark, path, dead, n_buckets=16)
-        assert _snapshot(spark, path) == before
-        with pytest.raises(RuntimeError):
             upsert_text_index_segmented(spark, path, delta, n_buckets=16)
+        assert _snapshot(spark, path) == before
+        with pytest.raises(RuntimeError):
+            delete_from_text_index_segmented(spark, path, dead)
         assert _snapshot(spark, path) == before
         assert list_segments(spark, path) == []  # no partial segment
     # stale journal-less orphans were already reclaimed by the QUERY-side
     # recovery probe inside the snapshots (r9: recover_for_query self-heals
     # once the lease is stale) — and the next op applies cleanly
     assert not _staging_dirs(path)
-    upsert_text_index(spark, path, delta, n_buckets=16)
+    upsert_text_index_segmented(spark, path, delta, n_buckets=16)
     assert not _staging_dirs(path)
     after = _snapshot(spark, path)
     assert after != before
@@ -136,7 +132,7 @@ def test_mid_promote_crash_rolls_forward_from_journal(spark, tmp_path):
     # expected post-state: run the same op on a clean copy
     path2 = str(tmp_path / "expected")
     build_text_index(docs, path2, n_buckets=16)
-    upsert_text_index(spark, path2, delta, n_buckets=16)
+    upsert_text_index_segmented(spark, path2, delta, n_buckets=16)
     expected = _snapshot(spark, path2)
 
     def partial_exec(spk, root, stage_dir, plan):
@@ -151,7 +147,7 @@ def test_mid_promote_crash_rolls_forward_from_journal(spark, tmp_path):
 
     with patch.object(staging, "_execute_plan", side_effect=partial_exec):
         with pytest.raises(RuntimeError, match="mid-promotion"):
-            upsert_text_index(spark, path, delta, n_buckets=16)
+            upsert_text_index_segmented(spark, path, delta, n_buckets=16)
     assert _staging_dirs(path)
     assert recover_staged(spark, path) == 1
     assert not _staging_dirs(path)
@@ -201,8 +197,9 @@ def test_crash_at_every_swap_index_rolls_forward_exactly(spark, tmp_path):
     promotion journal (0 = crash right after the journal is durable,
     n = crash just before cleanup), executing k swaps, 'crashing', and
     recovering must land on exactly the post-op state — never a mix.
-    Uses a small in-place upsert (postings partition swaps + doclens +
-    stats + terms whole-dir swaps — every swap kind)."""
+    Uses the compaction of a small segmented index (postings + doclens +
+    stats + terms whole-dir swaps and the segments removal — every swap
+    kind)."""
     docs = spark.createDataFrame(
         [(i, f"alpha w{i % 3} beta") for i in range(12)], "doc_id long, text string"
     )
@@ -211,9 +208,8 @@ def test_crash_at_every_swap_index_rolls_forward_exactly(spark, tmp_path):
     )
 
     # expected post-state snapshot from a clean run
-    clean = str(tmp_path / "clean")
-    build_text_index(docs, clean, n_buckets=8)
-    upsert_text_index(spark, clean, delta, n_buckets=8)
+    clean = _segmented_b8(spark, docs, delta, str(tmp_path / "clean"))
+    compact_text_index(spark, clean, n_buckets=8)
     expected = _snapshot_b8(spark, clean)
 
     # count the journal's swaps once
@@ -224,17 +220,15 @@ def test_crash_at_every_swap_index_rolls_forward_exactly(spark, tmp_path):
         lens.append(len(plan["swaps"]))
         return real_exec(spk, root, stage_dir, plan)
 
-    probe = str(tmp_path / "probe")
-    build_text_index(docs, probe, n_buckets=8)
+    probe = _segmented_b8(spark, docs, delta, str(tmp_path / "probe"))
     with patch.object(staging, "_execute_plan", side_effect=count_exec):
-        upsert_text_index(spark, probe, delta, n_buckets=8)
+        compact_text_index(spark, probe, n_buckets=8)
     n_swaps = lens[0]
-    assert n_swaps >= 4  # partitions + doclens + stats + terms at minimum
+    assert n_swaps >= 5  # postings + doclens + stats + terms + segments
     assert _snapshot_b8(spark, probe) == expected
 
     for k in range(n_swaps + 1):
-        path = str(tmp_path / f"k{k}")
-        build_text_index(docs, path, n_buckets=8)
+        path = _segmented_b8(spark, docs, delta, str(tmp_path / f"k{k}"))
 
         def partial(spk, root, stage_dir, plan, _k=k):
             staging._apply_swaps(spk, root, stage_dir, plan["swaps"][:_k])
@@ -242,10 +236,17 @@ def test_crash_at_every_swap_index_rolls_forward_exactly(spark, tmp_path):
 
         with patch.object(staging, "_execute_plan", side_effect=partial):
             with pytest.raises(RuntimeError, match="crash"):
-                upsert_text_index(spark, path, delta, n_buckets=8)
+                compact_text_index(spark, path, n_buckets=8)
         assert recover_staged(spark, path) == 1
         assert not _staging_dirs(path)
         assert _snapshot_b8(spark, path) == expected, f"crash at swap {k}"
+
+
+def _segmented_b8(spark, docs, delta, path):
+    """A small 8-bucket index with one upsert segment pending."""
+    build_text_index(docs, path, n_buckets=8)
+    upsert_text_index_segmented(spark, path, delta, n_buckets=8)
+    return path
 
 
 def _snapshot_b8(spark, path):
@@ -362,7 +363,7 @@ def test_second_writer_refuses_while_lease_live(spark, tmp_path):
     a = StagedCommit(spark, path)
     assert _staging_dirs(path)
     with pytest.raises(staging.ConcurrentMaintenanceError):
-        upsert_text_index(spark, path, delta, n_buckets=16)
+        upsert_text_index_segmented(spark, path, delta, n_buckets=16)
     # the refusal wrote nothing live and did NOT reclaim A's staging
     assert _snapshot(spark, path) == before
     assert _staging_dirs(path)
@@ -370,7 +371,7 @@ def test_second_writer_refuses_while_lease_live(spark, tmp_path):
     assert staging.recover_for_query(spark, path) == 0
 
     a.abort()
-    upsert_text_index(spark, path, delta, n_buckets=16)
+    upsert_text_index_segmented(spark, path, delta, n_buckets=16)
     assert not _staging_dirs(path)
     assert _snapshot(spark, path) != before
 
@@ -414,7 +415,7 @@ def test_truncated_journal_treated_as_journal_less(spark, tmp_path):
     assert _snapshot(spark, path) == before
     # and maintenance still works afterwards
     delta = docs.limit(2).select("doc_id", F.lit("post recovery").alias("text"))
-    upsert_text_index(spark, path, delta, n_buckets=16)
+    upsert_text_index_segmented(spark, path, delta, n_buckets=16)
     assert not _staging_dirs(path)
 
 
@@ -443,7 +444,7 @@ def test_journal_write_is_atomic(spark, tmp_path):
 
     with patch.object(staging, "_execute_plan", side_effect=crash_exec):
         with pytest.raises(RuntimeError, match="after journal"):
-            upsert_text_index(spark, path, delta, n_buckets=16)
+            upsert_text_index_segmented(spark, path, delta, n_buckets=16)
     assert seen and seen[0]["swaps"]
     assert recover_staged(spark, path) == 1
 
@@ -510,14 +511,12 @@ def test_scattered_swap_subset_rolls_forward_exactly(spark, tmp_path):
         [(3, "gamma delta"), (99, "alpha gamma")], "doc_id long, text string"
     )
 
-    clean = str(tmp_path / "clean")
-    build_text_index(docs, clean, n_buckets=8)
-    upsert_text_index(spark, clean, delta, n_buckets=8)
+    clean = _segmented_b8(spark, docs, delta, str(tmp_path / "clean"))
+    compact_text_index(spark, clean, n_buckets=8)
     expected = _snapshot_b8(spark, clean)
 
     for parity in (0, 1):
-        path = str(tmp_path / f"scatter{parity}")
-        build_text_index(docs, path, n_buckets=8)
+        path = _segmented_b8(spark, docs, delta, str(tmp_path / f"scatter{parity}"))
 
         def scattered(spk, root, stage_dir, plan, _p=parity):
             subset = [
@@ -532,7 +531,7 @@ def test_scattered_swap_subset_rolls_forward_exactly(spark, tmp_path):
 
         with patch.object(staging, "_execute_plan", side_effect=scattered):
             with pytest.raises(RuntimeError, match="crash"):
-                upsert_text_index(spark, path, delta, n_buckets=8)
+                compact_text_index(spark, path, n_buckets=8)
         assert recover_staged(spark, path) == 1
         assert not _staging_dirs(path)
         assert _snapshot_b8(spark, path) == expected, f"parity {parity}"

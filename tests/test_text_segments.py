@@ -10,9 +10,7 @@ from azuredatalakeindexer_spark.operators.search import bm25_topk
 from azuredatalakeindexer_spark.sources.fixtures import load_table
 from azuredatalakeindexer_spark.sources.text_index import (
     build_text_index,
-    delete_from_text_index,
     query_text_index,
-    upsert_text_index,
 )
 from azuredatalakeindexer_spark.sources.text_segments import (
     compact_text_index,
@@ -39,10 +37,10 @@ def _docs(spark):
     return load_table(spark, SF, "documents").select("doc_id", "text")
 
 
-def test_segmented_upsert_matches_scan_and_inplace(spark, tmp_path):
+def test_segmented_upsert_matches_scan_and_reports_statuses(spark, tmp_path):
     """A segmented upsert (replacements + inserts) must answer queries
-    bit-identically to (a) the scan-time bm25 over the logical corpus and
-    (b) the in-place upsert applied to a copy of the same base."""
+    bit-identically to the scan-time bm25 over the logical corpus and
+    report 200 for replaced docs, 201 for inserted ones."""
     import pyspark.sql.functions as F
 
     docs = _docs(spark)
@@ -57,16 +55,12 @@ def test_segmented_upsert_matches_scan_and_inplace(spark, tmp_path):
     st_seg = {r["doc_id"]: r["status"] for r in
               upsert_text_index_segmented(spark, seg_path, delta, n_buckets=16).collect()}
     assert list_segments(spark, seg_path) == [1]
-
-    inp_path = str(tmp_path / "inplace")
-    build_text_index(base, inp_path, n_buckets=16)
-    st_inp = {r["doc_id"]: r["status"] for r in
-              upsert_text_index(spark, inp_path, delta, n_buckets=16).collect()}
-    assert st_seg == st_inp  # same 201/200 contract
+    assert st_seg and st_seg == {
+        i: (201 if i % 7 == 0 else 200) for i in st_seg
+    }
 
     got = _rows(query_text_index(spark, seg_path, TERMS, k=20, n_buckets=16))
     assert got == _rows(bm25_topk(logical, TERMS, k=20))
-    assert got == _rows(query_text_index(spark, inp_path, TERMS, k=20, n_buckets=16))
 
 
 def test_segmented_delete_readd_and_idempotence(spark, tmp_path):
@@ -100,8 +94,8 @@ def test_segmented_delete_readd_and_idempotence(spark, tmp_path):
 def test_multi_segment_lww_and_compaction_equivalence(spark, tmp_path):
     """Three stacked segments (upsert, delete, upsert) resolve LWW
     correctly; compaction folds them into a base byte-equivalent in content
-    to a fresh build of the logical corpus, after which the in-place ops
-    work again."""
+    to a fresh build of the logical corpus, after which new segments land
+    on it again."""
     import pyspark.sql.functions as F
 
     docs = _docs(spark)
@@ -128,29 +122,20 @@ def test_multi_segment_lww_and_compaction_equivalence(spark, tmp_path):
     got = _rows(query_text_index(spark, path, TERMS, k=20, n_buckets=16))
     assert got == _rows(bm25_topk(logical, TERMS, k=20))
 
-    # in-place ops refuse while segments exist
-    with pytest.raises(ValueError, match="LSM segments"):
-        upsert_text_index(spark, path, up2, n_buckets=16)
-    with pytest.raises(ValueError, match="LSM segments"):
-        delete_from_text_index(spark, path, dead)
-
     assert compact_text_index(spark, path, n_buckets=16) == 3
     assert list_segments(spark, path) == []
     # content equals a fresh build of the logical corpus
     fresh = str(tmp_path / "fresh")
     build_text_index(logical, fresh, n_buckets=16)
-    def _canon(r):
-        # doclens carries the buckets ARRAY column (the victim directory)
-        return tuple(tuple(v) if isinstance(v, list) else v for v in r)
-
     for rel in ("postings", "doclens", "stats"):
-        a = {_canon(r) for r in spark.read.parquet(f"{path}/{rel}").collect()}
-        b = {_canon(r) for r in spark.read.parquet(f"{fresh}/{rel}").collect()}
+        a = {tuple(r) for r in spark.read.parquet(f"{path}/{rel}").collect()}
+        b = {tuple(r) for r in spark.read.parquet(f"{fresh}/{rel}").collect()}
         assert a == b, rel
     assert _rows(query_text_index(spark, path, TERMS, k=20, n_buckets=16)) == got
-    # and the in-place path works again post-compaction
-    st = upsert_text_index(spark, path, up2, n_buckets=16).collect()
+    # and a new segment lands on the compacted base
+    st = upsert_text_index_segmented(spark, path, up2, n_buckets=16).collect()
     assert all(r["status"] == 200 for r in st)
+    assert list_segments(spark, path) == [1]
 
 
 def test_segmented_stats_match_rebuild_after_each_op(spark, tmp_path):
@@ -205,8 +190,7 @@ def test_stream_text_index_segmented_with_midstream_compaction(spark, tmp_path):
     idx = str(tmp_path / "ti_lsm_stream")
     run_stream_text_index(
         spark, docs_dir, schema, idx, str(tmp_path / "ckpt"),
-        n_buckets=16, max_files_per_trigger=1,
-        segmented=True, compact_every=2,
+        n_buckets=16, max_files_per_trigger=1, compact_every=2,
     )
     assert len(list_segments(spark, idx)) < 2  # compaction ran
     got = _rows(query_text_index(spark, idx, TERMS, k=20, n_buckets=16))
@@ -275,9 +259,9 @@ def test_segmented_query_prunes_buckets_in_every_segment(spark, tmp_path):
 def test_positional_index_phrase_parity_through_full_lifecycle(spark, tmp_path):
     """A positional index (positions=True) serves exact-phrase queries
     bit-identically to the scan-time phrase_topk over the logical corpus,
-    through EVERY maintenance path: in-place upsert, LSM segments
-    (upsert + tombstone delete), and compaction — positions ride the LWW
-    resolution and the compaction rewrite unchanged."""
+    through the maintenance lifecycle: LSM segments (upserts + tombstone
+    delete) and compaction — positions ride the LWW resolution and the
+    compaction rewrite unchanged."""
     import pyspark.sql.functions as F
 
     from azuredatalakeindexer_spark.operators.search import phrase_topk
@@ -297,14 +281,14 @@ def test_positional_index_phrase_parity_through_full_lifecycle(spark, tmp_path):
 
     assert idx_rows() == scan_rows(base)
 
-    # in-place upsert keeps positions
+    # a segment upsert keeps positions
     d1 = docs.where(F.col("doc_id") < 5).select(
         "doc_id", F.concat(F.col("text"), F.lit(" merge stream")).alias("text"))
-    upsert_text_index(spark, path, d1, n_buckets=16)
+    upsert_text_index_segmented(spark, path, d1, n_buckets=16)
     logical = base.unionByName(d1)
     assert idx_rows() == scan_rows(logical)
 
-    # LSM segment upsert + tombstone delete keep positions
+    # a second segment upsert + tombstone delete keep positions
     d2 = docs.where((F.col("doc_id") >= 5) & (F.col("doc_id") < 10)).select(
         "doc_id", F.lit("stream merge stream").alias("text"))
     upsert_text_index_segmented(spark, path, d2, n_buckets=16)
@@ -355,7 +339,7 @@ def test_positional_stream_three_term_phrase_and_deep_segment_stack(spark, tmp_p
     run_stream_text_index(
         spark, docs_dir, schema, idx, str(tmp_path / "ckpt"),
         n_buckets=16, max_files_per_trigger=1,
-        segmented=True, positions=True,   # no compact_every: keep 3 segments
+        positions=True,   # no compact_every: keep 3 segments
     )
     assert len(list_segments(spark, idx)) == 3
     got = [tuple(r) for r in
@@ -398,10 +382,6 @@ def test_n_buckets_mismatch_is_refused(spark, tmp_path):
     build_text_index(docs, path, n_buckets=16)
     for fn in (
         lambda: query_text_index(spark, path, ["merge"], n_buckets=32),
-        lambda: upsert_text_index(spark, path, docs, n_buckets=32),
-        lambda: delete_from_text_index(
-            spark, path, docs.select("doc_id"), n_buckets=32
-        ),
         lambda: upsert_text_index_segmented(spark, path, docs, n_buckets=32),
         lambda: compact_text_index(spark, path, n_buckets=32),
     ):
@@ -503,9 +483,9 @@ def test_suggest_from_index_matches_scan_time_suggester(spark, tmp_path):
 
 def test_duplicate_ids_in_one_delta_resolve_deterministically(spark, tmp_path):
     """A delta carrying the same id twice must collapse to ONE version
-    (lexicographically greatest text) on BOTH maintenance paths: one
-    doclens row, exact stats, identical query answers — not doubled
-    postings / double-counted stats."""
+    (lexicographically greatest text): one live doclens row, exact stats,
+    identical query answers — not doubled postings / double-counted
+    stats."""
     import pyspark.sql.functions as F
 
     docs = spark.createDataFrame(
@@ -519,26 +499,21 @@ def test_duplicate_ids_in_one_delta_resolve_deterministically(spark, tmp_path):
         [(1, "alpha beta"), (2, "beta beta zeta"), (3, "beta zeta")],
         "doc_id long, text string",
     )
-    for mode in ("segmented", "inplace"):
-        path = str(tmp_path / mode)
-        build_text_index(docs, path, n_buckets=16)
-        if mode == "segmented":
-            st = upsert_text_index_segmented(spark, path, dup, n_buckets=16)
-        else:
-            st = upsert_text_index(spark, path, dup, n_buckets=16)
-        # statuses deduped too: one row per distinct id
-        got = {r["doc_id"]: r["status"] for r in st.collect()}
-        assert got == {2: 200, 3: 201}
-        lens = spark.read.parquet(f"{path}/doclens")
-        if mode == "segmented":
-            from azuredatalakeindexer_spark.sources.text_segments import alive_docs
-            lens = alive_docs(spark, path, list_segments(spark, path))
-        assert lens.where(F.col("doc_id") == 2).count() == 1
-        assert _rows(
-            query_text_index(spark, path, ["beta", "zeta"], k=10, n_buckets=16)
-        ) == _rows(bm25_topk(resolved, ["beta", "zeta"], k=10))
-        stats = spark.read.parquet(f"{path}/stats").first()
-        assert (stats["n_docs"], stats["sum_dl"]) == (3, 2 + 3 + 2)
+    from azuredatalakeindexer_spark.sources.text_segments import alive_docs
+
+    path = str(tmp_path / "ti")
+    build_text_index(docs, path, n_buckets=16)
+    st = upsert_text_index_segmented(spark, path, dup, n_buckets=16)
+    # statuses deduped too: one row per distinct id
+    got = {r["doc_id"]: r["status"] for r in st.collect()}
+    assert got == {2: 200, 3: 201}
+    lens = alive_docs(spark, path, list_segments(spark, path))
+    assert lens.where(F.col("doc_id") == 2).count() == 1
+    assert _rows(
+        query_text_index(spark, path, ["beta", "zeta"], k=10, n_buckets=16)
+    ) == _rows(bm25_topk(resolved, ["beta", "zeta"], k=10))
+    stats = spark.read.parquet(f"{path}/stats").first()
+    assert (stats["n_docs"], stats["sum_dl"]) == (3, 2 + 3 + 2)
 
 
 def test_noop_segmented_delete_writes_no_segment(spark, tmp_path):
@@ -580,15 +555,15 @@ def test_compact_after_delete_all_leaves_readable_sentinel(spark, tmp_path):
     assert spark.read.parquet(f"{path}/doclens").count() == 0
     assert spark.read.parquet(f"{path}/stats").first()["n_docs"] == 0
     # and the index comes back to life through the normal upsert path
-    upsert_text_index(spark, path, docs, n_buckets=16)
+    upsert_text_index_segmented(spark, path, docs, n_buckets=16)
     got = _rows(query_text_index(spark, path, ["beta"], k=10, n_buckets=16))
     assert got == _rows(bm25_topk(docs, ["beta"], k=10))
 
 
 def test_delete_shuffled_fallback_plan(spark, tmp_path):
     """broadcast_ids=False must route the victim lookup through a shuffled
-    join (never BroadcastHashJoin/BroadcastNestedLoop) on BOTH delete
-    paths — the non-broadcastable bulk-purge fallback."""
+    join (never BroadcastHashJoin/BroadcastNestedLoop) — the
+    non-broadcastable bulk-purge fallback."""
     import pyspark.sql.functions as F
 
     docs = spark.range(0, 50).select(
@@ -622,17 +597,6 @@ def test_delete_shuffled_fallback_plan(spark, tmp_path):
                 == 10
             )
         assert not calls  # no broadcast hint anywhere on the fallback path
-
-        path2 = str(tmp_path / "inplace")
-        build_text_index(docs, path2, n_buckets=16)
-        with patch.object(F, "broadcast", side_effect=spy):
-            assert (
-                delete_from_text_index(
-                    spark, path2, ids, n_buckets=16, broadcast_ids=False
-                )
-                == 10
-            )
-        assert not calls
         # default path still broadcasts
         path3 = str(tmp_path / "bc")
         build_text_index(docs, path3, n_buckets=16)
@@ -665,10 +629,10 @@ def _recount_terms(spark, path):
 
 
 def test_terms_rollup_exact_through_mixed_lifecycle(spark, tmp_path):
-    """<path>/terms must equal a live-postings recount after EVERY
-    unsegmented-state mutation: build, in-place upsert (insert+replace),
-    in-place delete, and a segmented batch folded back by compaction.
-    The exact-delta discipline (added − victims) cannot drift."""
+    """<path>/terms must equal a live-postings recount in EVERY
+    unsegmented state: after the build, and after compaction folds an
+    upsert (insert+replace), a delete and a second upsert back into the
+    base."""
     import pyspark.sql.functions as F
 
     docs = _docs(spark)
@@ -688,18 +652,14 @@ def test_terms_rollup_exact_through_mixed_lifecycle(spark, tmp_path):
     ).unionByName(
         spark.createDataFrame([(100001, "rollup fresh")], "doc_id long, text string")
     )
-    upsert_text_index(spark, path, delta, n_buckets=16)
-    assert rollup() == _recount_terms(spark, path)
-
+    upsert_text_index_segmented(spark, path, delta, n_buckets=16)
     dead = docs.select("doc_id").where(F.col("doc_id") % 7 == 0)
-    delete_from_text_index(spark, path, dead, n_buckets=16)
-    assert rollup() == _recount_terms(spark, path)
-
+    delete_from_text_index_segmented(spark, path, dead)
     seg_delta = docs.where(F.col("doc_id") % 11 == 0).select(
         "doc_id", F.lit("compacted later").alias("text")
     )
     upsert_text_index_segmented(spark, path, seg_delta, n_buckets=16)
-    compact_text_index(spark, path, n_buckets=16)
+    assert compact_text_index(spark, path, n_buckets=16) == 3
     assert rollup() == _recount_terms(spark, path)
 
 
@@ -719,8 +679,8 @@ def test_suggest_unsegmented_reads_only_terms_relation(spark, tmp_path):
 
 def test_suggest_pre_rollup_index_falls_back_and_upgrades(spark, tmp_path):
     """An index without <path>/terms (pre-rollup layout) still serves
-    suggestions via the postings recount, and any in-place maintenance op
-    creates the rollup (upgrade path)."""
+    suggestions via the postings recount, and compaction creates the
+    rollup (upgrade path)."""
     import shutil
 
     import pyspark.sql.functions as F
@@ -742,8 +702,12 @@ def test_suggest_pre_rollup_index_falls_back_and_upgrades(spark, tmp_path):
     delta = docs.where(F.col("doc_id") % 5 == 0).select(
         "doc_id", F.concat(F.col("text"), F.lit(" suffix")).alias("text")
     )
-    upsert_text_index(spark, path, delta, n_buckets=16)
+    upsert_text_index_segmented(spark, path, delta, n_buckets=16)
     logical = docs.join(delta.select("doc_id"), "doc_id", "left_anti").unionByName(delta)
+    assert rows(suggest_from_index(spark, path, "s", k=8)) == rows(
+        suggest_terms(logical, "s", k=8)
+    )
+    compact_text_index(spark, path, n_buckets=16)
     assert spark.read.parquet(f"{path}/terms").count() > 0  # upgraded
     assert {
         (r["term"], r["df"]) for r in spark.read.parquet(f"{path}/terms").collect()
@@ -756,8 +720,8 @@ def test_suggest_pre_rollup_index_falls_back_and_upgrades(spark, tmp_path):
 def test_near_index_parity_through_full_lifecycle(spark, tmp_path):
     """Index-served proximity (query_near_index, ordered AND unordered)
     must be bit-identical to the scan-time near_topk over the logical
-    corpus through in-place upsert, LSM segments, and compaction — the
-    same positional postings that serve exact phrase serve NEAR."""
+    corpus through LSM segments and compaction — the same positional
+    postings that serve exact phrase serve NEAR."""
     import pyspark.sql.functions as F
 
     from azuredatalakeindexer_spark.operators.search import near_topk
@@ -782,7 +746,7 @@ def test_near_index_parity_through_full_lifecycle(spark, tmp_path):
 
     d1 = docs.where(F.col("doc_id") < 5).select(
         "doc_id", F.concat(F.col("text"), F.lit(" merge x stream")).alias("text"))
-    upsert_text_index(spark, path, d1, n_buckets=16)
+    upsert_text_index_segmented(spark, path, d1, n_buckets=16)
     logical = base.unionByName(d1)
     for o in (True, False):
         assert idx_rows(o) == scan_rows(logical, o), o
@@ -817,30 +781,25 @@ def test_near_index_parity_through_full_lifecycle(spark, tmp_path):
         qni(spark, flat, "merge", "stream", n_buckets=16)
 
 
-def test_zero_token_doc_replacement_reports_200_on_both_paths(spark, tmp_path):
+def test_zero_token_doc_replacement_reports_200(spark, tmp_path):
     """Statuses are judged from the doclens side: replacing an existing
-    ZERO-TOKEN doc (doclens row, no postings) must report 200-modified on
-    both maintenance paths — a postings-side victim lookup would
-    misreport it as 201-created."""
+    ZERO-TOKEN doc (doclens row, no postings) must report 200-modified —
+    a postings-side lookup would misreport it as 201-created."""
     docs = spark.createDataFrame(
         [(1, "alpha beta"), (2, ""), (3, "gamma")], "doc_id long, text string"
     )
     delta = spark.createDataFrame(
         [(2, "revived words"), (4, "brand new")], "doc_id long, text string"
     )
-    for mode in ("inplace", "segmented"):
-        path = str(tmp_path / mode)
-        build_text_index(docs, path, n_buckets=16)
-        if mode == "inplace":
-            st = upsert_text_index(spark, path, delta, n_buckets=16)
-        else:
-            st = upsert_text_index_segmented(spark, path, delta, n_buckets=16)
-        got = {r["doc_id"]: r["status"] for r in st.collect()}
-        assert got == {2: 200, 4: 201}, (mode, got)
-        # and the merged index answers over the logical corpus
-        logical = docs.join(delta.select("doc_id"), "doc_id", "left_anti").unionByName(delta)
-        assert _rows(query_text_index(spark, path, ["revived", "alpha"], k=10, n_buckets=16)) == \
-            _rows(bm25_topk(logical, ["revived", "alpha"], k=10))
+    path = str(tmp_path / "ti")
+    build_text_index(docs, path, n_buckets=16)
+    st = upsert_text_index_segmented(spark, path, delta, n_buckets=16)
+    got = {r["doc_id"]: r["status"] for r in st.collect()}
+    assert got == {2: 200, 4: 201}, got
+    # and the merged index answers over the logical corpus
+    logical = docs.join(delta.select("doc_id"), "doc_id", "left_anti").unionByName(delta)
+    assert _rows(query_text_index(spark, path, ["revived", "alpha"], k=10, n_buckets=16)) == \
+        _rows(bm25_topk(logical, ["revived", "alpha"], k=10))
 
 
 def test_fuzzy_from_index_matches_scan_time_through_lifecycle(spark, tmp_path):
@@ -946,65 +905,6 @@ def test_wildcard_from_index_matches_scan_time_through_lifecycle(spark, tmp_path
     check(logical)
     compact_text_index(spark, path, n_buckets=16)
     check(logical)
-
-
-def test_upsert_shuffled_fallback_plan(spark, tmp_path):
-    """broadcast_ids=False on the IN-PLACE text upsert (r8 wrong-#2): every
-    delta-id lookup (victims, statuses, keep/dkeep anti-joins) must route
-    through shuffled joins — no broadcast hint anywhere — and the result
-    must equal the default broadcast path bit-for-bit."""
-    import pyspark.sql.functions as F
-    from unittest.mock import patch
-
-    docs = spark.range(0, 50).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("alpha beta doc"), F.col("id").cast("string")).alias("text"),
-    )
-    delta = spark.range(40, 60).select(
-        F.col("id").alias("doc_id"), F.lit("gamma delta").alias("text")
-    )
-    confs = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        path = str(tmp_path / "shuffled")
-        build_text_index(docs, path, n_buckets=16)
-
-        calls = []
-        orig = F.broadcast
-
-        def spy(df):
-            calls.append(df)
-            return orig(df)
-
-        with patch.object(F, "broadcast", side_effect=spy):
-            st = upsert_text_index(
-                spark, path, delta, n_buckets=16, broadcast_ids=False
-            )
-            got_st = sorted(tuple(r) for r in st.collect())
-        assert not calls  # no broadcast hint anywhere on the fallback path
-        assert got_st == [(i, 200 if i < 50 else 201) for i in range(40, 60)]
-
-        # default path still broadcasts, and both paths answer identically
-        path2 = str(tmp_path / "bcast")
-        build_text_index(docs, path2, n_buckets=16)
-        with patch.object(F, "broadcast", side_effect=spy):
-            st2 = upsert_text_index(spark, path2, delta, n_buckets=16)
-            assert sorted(tuple(r) for r in st2.collect()) == got_st
-        assert calls
-        a = _rows(query_text_index(spark, path, ["gamma", "beta"], k=30, n_buckets=16))
-        b = _rows(query_text_index(spark, path2, ["gamma", "beta"], k=30, n_buckets=16))
-        assert a == b
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_synonyms_and_simple_query_from_index_through_lifecycle(spark, tmp_path):

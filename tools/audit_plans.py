@@ -283,35 +283,6 @@ def _profile_phrase_df(spark, sf):
     )
 
 
-def _victim_lookup_df(spark, sf):
-    """Text-maintenance victim lookup (r10): the doclens bucket-set read
-    statically prunes to the batch ids' dbucket partitions — the plan
-    must show a dbucket PartitionFilter, never a full doclens scan."""
-    import tempfile
-
-    import pyspark.sql.functions as F
-
-    from azuredatalakeindexer_spark.sources.fixtures import load_table
-    from azuredatalakeindexer_spark.sources.text_index import build_text_index
-
-    root = tempfile.mkdtemp(prefix="audit_vdir_")
-    docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    build_text_index(docs, root, n_buckets=64)
-    dl = docs.where(F.col("doc_id").isin([4, 8])).select("doc_id")
-    dbs = [
-        r["b"]
-        for r in dl.select(
-            F.pmod(F.hash(F.col("doc_id")), F.lit(64)).alias("b")
-        ).distinct().collect()
-    ]
-    return (
-        spark.read.parquet(f"{root}/doclens")
-        .where(F.col("dbucket").isin(dbs))
-        .join(F.broadcast(dl), "doc_id", "left_semi")
-        .select(F.explode("buckets").alias("b"))
-    )
-
-
 #: plan audits that need a persisted index built first (the registered
 #: queries() wrappers return a _persisted read whose plan is just the
 #: result scan; these audit the SERVING plan itself)
@@ -360,11 +331,6 @@ CUSTOM = [
         "text_index_simple_query (serving plan)",
         "index-served simple-query: pruned BM25 read, candidate-sized filter joins, docstore instr for phrases",
         _simple_query_df,
-    ),
-    (
-        "text maintenance victim lookup (serving plan)",
-        "doclens bucket-set read statically pruned to the batch ids' dbuckets",
-        _victim_lookup_df,
     ),
     (
         "text_index_profile_phrase (serving plan)",

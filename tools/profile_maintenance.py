@@ -132,7 +132,9 @@ def main() -> None:
         from azuredatalakeindexer_spark.sources.text_index import (
             build_text_index,
             query_text_index,
-            upsert_text_index,
+        )
+        from azuredatalakeindexer_spark.sources.text_segments import (
+            upsert_text_index_segmented,
         )
 
         docs = spark.read.parquet(f"{sf}/documents.parquet").select(
@@ -145,7 +147,11 @@ def main() -> None:
         root = tempfile.mkdtemp(prefix="prof_txt_")
         try:
             _phase(sc, "build", lambda: build_text_index(base, root))
-            _phase(sc, "upsert", lambda: upsert_text_index(spark, root, delta))
+            _phase(
+                sc,
+                "upsert",
+                lambda: upsert_text_index_segmented(spark, root, delta).count(),
+            )
             _phase(
                 sc,
                 "query",
@@ -158,9 +164,11 @@ def main() -> None:
     elif which == "profile":
         from azuredatalakeindexer_spark.sources.profile_index import (
             build_profile_index,
-            delete_from_profile_index,
             query_profile_index,
-            upsert_profile_index,
+        )
+        from azuredatalakeindexer_spark.sources.profile_segments import (
+            delete_from_profile_index_segmented,
+            upsert_profile_index_segmented,
         )
 
         docs = spark.read.parquet(f"{sf}/documents.parquet").select(
@@ -188,12 +196,14 @@ def main() -> None:
                 ),
             )
             _phase(
-                sc, "upsert", lambda: upsert_profile_index(spark, root, delta).count()
+                sc,
+                "upsert",
+                lambda: upsert_profile_index_segmented(spark, root, delta).count(),
             )
             _phase(
                 sc,
                 "delete",
-                lambda: delete_from_profile_index(
+                lambda: delete_from_profile_index_segmented(
                     spark, root, delta.select("doc_id").limit(50)
                 ),
             )
