@@ -578,21 +578,20 @@ def span_dedup(
         # needs (hash, id, pos) to DECIDE — shuffling chunk TEXT through
         # the hash exchange and then again through the doc reassembly
         # moved every corpus byte twice.  Shuffle the 3-column key
-        # relation on the hash, reduce the winners to a per-doc surviving
-        # position set, and re-attach the text from the checkpointed
-        # chunk relation on the doc key — the one shuffle the reassembly
-        # pays anyway.  The survivor set is identical (same window, same
-        # (id, pos) ordering, positions are unique per doc).
+        # relation on the hash and re-attach the winners' text from the
+        # checkpointed chunk relation with a left-semi join on (id, pos) —
+        # a hash lookup per chunk, not a scan of the doc's surviving-
+        # position list.  The survivor set is identical (same window,
+        # same (id, pos) ordering, positions are unique per doc).
         winners = (
             chunks.select(id_col, "pos", F.md5("chunk").alias("_h"))
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .groupBy(id_col)
-            .agg(F.collect_set("pos").alias("_wpos"))
+            .select(id_col, "pos")
         )
-        survivors = chunks.join(winners, id_col).where(
-            F.array_contains("_wpos", F.col("pos"))
-        ).select(id_col, "pos", "chunk")
+        survivors = chunks.join(winners, [id_col, "pos"], "left_semi").select(
+            id_col, "pos", "chunk"
+        )
     kept = (
         survivors.groupBy(id_col)
         .agg(

@@ -115,10 +115,10 @@ def _victim_dbs(
     dl: DataFrame, n_db: int | None, id_col: str
 ) -> list[int] | None:
     """The delta's distinct id-hash dbuckets (a ≤ n_dbuckets model-sized
-    collect), or None when the index has no directory.  Split out of
-    ``_victim_source`` (r15) so maintenance ops can run this collect
-    CONCURRENTLY with the delta checkpoint instead of chaining two fixed
-    job latencies."""
+    collect), or None when the index has no directory.  Maintenance ops
+    pass their CHECKPOINTED delta, so the dbuckets and the victim lookup
+    see the same id set even when the caller's frame is
+    nondeterministic."""
     if n_db is None:
         return None
     return sorted(
@@ -158,9 +158,7 @@ def _victim_source(
     """Sequential convenience wrapper over ``_read_n_dbuckets`` /
     ``_victim_dbs`` / ``_victim_keys`` — returns (keys, n_dbuckets,
     dbuckets), the latter two None on the no-directory fallback so
-    callers skip directory maintenance.  The maintenance ops call the
-    pieces directly so the dbucket collect overlaps their delta
-    checkpoint (r15)."""
+    callers skip directory maintenance."""
     n_db = _read_n_dbuckets(spark, path)
     dbs = _victim_dbs(dl, n_db, id_col)
     return _victim_keys(spark, path, n_db, dbs, id_col), n_db, dbs
@@ -352,20 +350,22 @@ def upsert_ivf_index(
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 
     # Layer 0 (r15 — the B/C prologue treatment VERDICT r14 next-#2 asked
-    # for): the delta checkpoint, the delta's dbucket list (recomputed
-    # from the batch-sized dedupe expression — cheaper than chaining a
-    # second fixed job latency behind the checkpoint), and the
-    # postings-layout probe are mutually independent; overlap them.
-    # n_dbuckets itself is a driver-side sidecar read (ms, no job).
+    # for): the delta checkpoint and the postings-layout probe are
+    # independent; overlap them.  The delta's dbucket list is collected
+    # from the CHECKPOINTED delta: re-evaluating the caller's expression
+    # could yield a different id set when it is nondeterministic (a
+    # sample, an unordered limit), and victims outside the collected
+    # dbuckets would keep stale postings.  n_dbuckets is a driver-side
+    # sidecar read (ms, no job).
     dedup = _dedupe_vec_delta(
         delta.select(F.col(id_col), F.col(vec_col)), id_col, vec_col
     )
     n_db = _read_n_dbuckets(spark, path)
-    dl, dbs, has_cells = run_concurrent(
+    dl, has_cells = run_concurrent(
         lambda: dedup.localCheckpoint(),
-        lambda: _victim_dbs(dedup, n_db, id_col),
         lambda: _any_partition_dirs(spark, postings_path, "cell"),
     )
+    dbs = _victim_dbs(dl, n_db, id_col)
     assigned = assign_cells(dl, cents, id_col, vec_col, 1)
 
     old_keys = _victim_keys(spark, path, n_db, dbs, id_col)
@@ -505,16 +505,13 @@ def delete_from_ivf_index(
     postings_path = f"{path}/postings"
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 
-    # Layer 0 (r15): the id-set checkpoint and its dbucket list overlap
-    # (the dbucket collect recomputes the batch-sized distinct — the id
-    # set is identical either way); n_dbuckets is a driver-side sidecar
-    # read (ms, no job).
-    ids_expr = vec_ids.select(id_col).distinct()
+    # The id set is checkpointed first and its dbucket list collected
+    # from the checkpoint, so a nondeterministic caller frame is
+    # evaluated once; n_dbuckets is a driver-side sidecar read (ms, no
+    # job).
     n_db = _read_n_dbuckets(spark, path)
-    ids, dbs = run_concurrent(
-        lambda: ids_expr.localCheckpoint(),
-        lambda: _victim_dbs(ids_expr, n_db, id_col),
-    )
+    ids = vec_ids.select(id_col).distinct().localCheckpoint()
+    dbs = _victim_dbs(ids, n_db, id_col)
     keys = F.broadcast(ids) if broadcast_ids else ids
     old = spark.read.parquet(postings_path)
     old_keys = _victim_keys(spark, path, n_db, dbs, id_col)
@@ -1114,19 +1111,20 @@ def upsert_pq_index(
     # r14 next-#2).  Layer by data dependency, run each layer's
     # independent members concurrently.
     #
-    # Layer 0: delta checkpoint ∥ the delta's dbucket list (recomputed
-    # from the batch-sized dedupe expression — the id SET is dedupe-
-    # invariant, so dbs is identical either way) ∥ the postings-layout
-    # probe.  n_dbuckets is a driver-side sidecar read (ms, no job).
+    # Layer 0: delta checkpoint ∥ the postings-layout probe; the delta's
+    # dbucket list is then collected from the checkpoint (never from the
+    # caller's possibly nondeterministic expression — same rule as
+    # upsert_ivf_index).  n_dbuckets is a driver-side sidecar read (ms,
+    # no job).
     dedup = _dedupe_vec_delta(
         delta.select(F.col(id_col), F.col(vec_col)), id_col, vec_col
     )
     n_db = _read_n_dbuckets(spark, path)
-    dl, dbs, has_cells = run_concurrent(
+    dl, has_cells = run_concurrent(
         lambda: dedup.localCheckpoint(),
-        lambda: _victim_dbs(dedup, n_db, id_col),
         lambda: _any_partition_dirs(spark, postings_path, "cell"),
     )
+    dbs = _victim_dbs(dl, n_db, id_col)
     assigned = assign_cells(dl, cents, id_col, vec_col, 1)
     new_codes = pq_encode(dl, cb, vec_col=vec_col, id_col=id_col).join(
         assigned.select(id_col, "cell"), id_col
@@ -1307,14 +1305,11 @@ def delete_from_pq_index(
 
     # Same layering as delete_from_ivf_index (r15, VERDICT r14 next-#2):
     # the op was one sequential spine of ~9 driver actions.
-    # Layer 0: id-set checkpoint ∥ its dbucket list (recomputed from the
-    # batch-sized distinct — identical id set either way).
-    ids_expr = vec_ids.select(id_col).distinct()
+    # Layer 0: the id-set checkpoint, then its dbucket list collected
+    # from the checkpoint (same rule as delete_from_ivf_index).
     n_db = _read_n_dbuckets(spark, path)
-    ids, dbs = run_concurrent(
-        lambda: ids_expr.localCheckpoint(),
-        lambda: _victim_dbs(ids_expr, n_db, id_col),
-    )
+    ids = vec_ids.select(id_col).distinct().localCheckpoint()
+    dbs = _victim_dbs(ids, n_db, id_col)
     keys = F.broadcast(ids) if broadcast_ids else ids
     old = spark.read.parquet(postings_path)
     old_keys = _victim_keys(spark, path, n_db, dbs, id_col)

@@ -47,9 +47,10 @@ key on the candidate set only; the top-k is TakeOrderedAndProject.  The
 corpus is never rescanned.
 
 Maintenance (upsert/delete) writes O(batch) segments and
-``compact_profile_index`` folds them back (``sources/profile_segments.py``),
-under the same staged-commit journal as the single-field index
-(``sources/staging.py``).
+``compact_profile_index`` folds them back (``sources/profile_segments.py``,
+the profile specifics of the one segment engine in
+``sources/text_segments.py``), under the same staged-commit journal as the
+single-field index (``sources/staging.py``).
 """
 
 from __future__ import annotations
@@ -424,9 +425,9 @@ def query_profile_index(
         cond = c if cond is None else cond | c
     flds = [fld for fld, _t, _w in fields]
     from azuredatalakeindexer_spark.sources.profile_segments import (
-        list_segments,
         live_profile_slices,
     )
+    from azuredatalakeindexer_spark.sources.text_segments import list_segments
 
     segs = list_segments(spark, path)
     dls_rel = vals_rel = None
@@ -660,9 +661,9 @@ def facets_from_index(
         c = (F.col("field") == fld) & F.col("term").isin(terms)
         cond = c if cond is None else cond | c
     from azuredatalakeindexer_spark.sources.profile_segments import (
-        list_segments,
         live_profile_slices,
     )
+    from azuredatalakeindexer_spark.sources.text_segments import list_segments
 
     segs = list_segments(spark, path)
     if segs:
@@ -838,9 +839,12 @@ def simple_query_profile_from_index(
     an explicit opt-in, never auto-switched."""
     from azuredatalakeindexer_spark.operators.search import parse_simple_query
     from azuredatalakeindexer_spark.sources.profile_segments import (
-        _alive,
-        list_segments,
         live_profile_slices,
+    )
+    from azuredatalakeindexer_spark.sources.text_segments import (
+        _live,
+        list_segments,
+        live_docstore_slice,
     )
     from azuredatalakeindexer_spark.sources.staging import recover_for_query
 
@@ -897,7 +901,7 @@ def simple_query_profile_from_index(
                 # (on a segmented index the base doclens alone would drop
                 # docs created in segments)
                 if segs:
-                    allowed = _alive(spark, path, segs, id_col).select(id_col)
+                    allowed = _live(spark, path, segs, id_col).select(id_col)
                 else:
                     allowed = (
                         spark.read.parquet(f"{path}/doclens")
@@ -1065,41 +1069,13 @@ def simple_query_profile_from_index(
             .collect()
         )  # bounded: at most n_buckets distinct values — ONE job
         if psegs:
-            from azuredatalakeindexer_spark.sources.profile_segments import (
-                BASE_SEG,
-                _read_or_empty,
-                _seg_dir,
-            )
-
-            def _sslice(df: DataFrame, seg: int) -> DataFrame:
-                return (
-                    df.where(F.col("dbucket").isin(dbs))
-                    .where(F.col("field").isin(flds))
-                    .select(id_col, "field", "text")
-                    .withColumn("seg", F.lit(seg))
-                )
-
-            store = _sslice(spark.read.parquet(f"{path}/docstore"), BASE_SEG)
-            for s in psegs:
-                store = store.unionByName(
-                    _sslice(
-                        _read_or_empty(
-                            spark,
-                            f"{_seg_dir(path, s)}/docstore",
-                            f"{id_col} long, field string, text string, "
-                            "dbucket int",
-                        ),
-                        s,
-                    )
-                )
             # per-(doc, field) LWW over the CANDIDATE rows only: the
             # newest segment's stored text wins; dead docs need no filter
             # here — the ranking downstream only ever sees LIVE
             # candidates, so stale ids in the allowed set are unreachable
-            store = (
-                store.join(cands, id_col, "left_semi")
-                .groupBy(id_col, "field")
-                .agg(F.max_by("text", "seg").alias("text"))
+            store = live_docstore_slice(
+                spark, path, psegs, id_col=id_col, dbs=dbs, ids=cands,
+                fields=flds,
             )
         else:
             store = (
@@ -1183,10 +1159,8 @@ def near_profile_from_index(
     segmented (LSM) indexes: the positional rows ride the standard
     doc-level last-writer-wins resolution (r13).  Requires
     ``build_profile_index(positions=True)``."""
-    from azuredatalakeindexer_spark.sources.profile_segments import (
-        list_segments,
-    )
     from azuredatalakeindexer_spark.sources.staging import recover_for_query
+    from azuredatalakeindexer_spark.sources.text_segments import list_segments
 
     t1, t2 = term1.lower(), term2.lower()
     uniq = sorted({t1, t2})
@@ -1298,7 +1272,7 @@ def _profile_vocab_pairs(
       the predicate|, never corpus-sized.
     - **Segmented (LSM) index**: the slice is recounted exactly from live
       postings across base + segments with doc-level last-writer-wins
-      liveness (:func:`profile_segments.live_field_term_slice`).
+      liveness (:func:`text_segments.live_term_slice` with ``fields``).
 
     Callers aggregate the pairs to their own df notion: the suggester
     counts distinct docs per term ACROSS the scoped fields, the fuzzy /
@@ -1316,15 +1290,15 @@ def _profile_vocab_pairs(
                 f"_profile_vocab_pairs: field {fld!r} is not indexed "
                 f"(index fields: {idx_fields})"
             )
-    from azuredatalakeindexer_spark.sources.profile_segments import (
+    from azuredatalakeindexer_spark.sources.text_segments import (
         list_segments,
-        live_field_term_slice,
+        live_term_slice,
     )
 
     segs = list_segments(spark, path)
     if segs:
-        return live_field_term_slice(
-            spark, path, segs, term_pred, fields=flds, id_col=id_col
+        return live_term_slice(
+            spark, path, segs, term_pred, id_col=id_col, fields=flds
         )
     return (
         spark.read.parquet(f"{path}/postings")
@@ -1637,41 +1611,17 @@ def highlight_profile_from_index(
         .collect()
     )
     ids = [r[id_col] for r in rows]
-    from azuredatalakeindexer_spark.sources.profile_segments import (
-        BASE_SEG,
-        _read_or_empty,
-        _seg_dir,
+    from azuredatalakeindexer_spark.sources.text_segments import (
         list_segments,
+        live_docstore_slice,
     )
 
     segs = list_segments(spark, path)
     if segs:
         # candidate-restricted slices of base + every segment's docstore,
         # resolved per (id, field) by the max-segment rule
-        def _slice(df: DataFrame, seg: int) -> DataFrame:
-            return (
-                df.where(F.col("dbucket").isin(dbs))
-                .where(F.col(id_col).isin(ids))
-                .where(F.col("field") == fld)
-                .select(id_col, "text")
-                .withColumn("seg", F.lit(seg))
-            )
-
-        alls = _slice(spark.read.parquet(f"{path}/docstore"), BASE_SEG)
-        for s in segs:
-            alls = alls.unionByName(
-                _slice(
-                    _read_or_empty(
-                        spark,
-                        f"{_seg_dir(path, s)}/docstore",
-                        f"{id_col} long, field string, text string, "
-                        "dbucket int",
-                    ),
-                    s,
-                )
-            )
-        fetched = alls.groupBy(id_col).agg(
-            F.max_by("text", "seg").alias("text")
+        fetched = live_docstore_slice(
+            spark, path, segs, id_col=id_col, dbs=dbs, ids=ids, fields=[fld]
         )
     else:
         fetched = (

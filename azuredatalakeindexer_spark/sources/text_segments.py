@@ -1,5 +1,11 @@
-"""Segmented (LSM-style) maintenance — the one way the persisted inverted
-text index changes after its build.
+"""Segment engine (LSM-style) of the persisted inverted indexes — the one
+way both index layouts change after their build: the single-field text
+index (``text_index.py``, rows keyed by ``id``) and the multi-field
+profile index (``profile_index.py``, rows keyed by ``(id, field)``).
+Every tier of either layout is read, resolved, written and folded by the
+code in this module; ``profile_segments.py`` keeps only what is truly
+profile-specific (field stacking, the per-field ``fieldstats`` counters
+and the ``docvals`` tier).
 
 WHY SEGMENTS.  An upsert that rewrote the postings buckets a batch touches
 would not be bounded by the batch: a batch's DISTINCT TERMS cover ~every
@@ -11,38 +17,48 @@ count fixes that; it is structural to term-partitioned rewrites.  So the
 index is maintained the way Lucene/Elasticsearch maintain theirs: an
 upsert writes ONLY its batch as a new immutable segment (O(batch) work,
 independent of index size), a delete writes tombstones, queries resolve
-last-writer-wins across segments, and ``compact_text_index`` folds
-segments back into the base when their count grows.
+last-writer-wins across segments, and compaction folds segments back into
+the base when their count grows.
 
-Layout (extends ``text_index.py``'s base layout, which acts as segment 0):
+Layout (extends the index's base layout, which acts as segment 0):
 
-- ``<path>/postings`` / ``<path>/doclens`` / ``<path>/stats`` — the base;
-- ``<path>/segments/seg=K/postings/bucket=*`` — the K-th batch's postings,
-  same inner layout as the base (bucket = portable_hash64(term) % n);
-- ``<path>/segments/seg=K/doclens/dbucket=*`` — the K-th batch's doclens;
+- ``<path>/segments/seg=K/<tier>`` — the K-th batch's rows of every tier
+  the layout has, in the base's own inner layout: ``postings/bucket=*``
+  (bucket = portable_hash64(term) % n), ``doclens/dbucket=*``, and when
+  the base has them ``docstore/dbucket=*`` and (profile) ``docvals/
+  dbucket=*``;
 - ``<path>/segments/seg=K/tombstones`` — deleted ids (delete-only segments
   carry ONLY this);
-- ``<path>/stats`` — the 1-row ``(n_docs, avgdl, sum_dl)`` relation;
-  ``sum_dl`` is the exact mergeable bigint the segmented ops advance
-  incrementally (avgdl = sum_dl/n_docs, the same long-sum/count division
-  Spark's and DuckDB's ``avg`` perform, so BM25 scores stay
-  bit-identical).
+- the running corpus statistics — the text index's 1-row ``stats``
+  ``(n_docs, avgdl, sum_dl, n_buckets)``, the profile index's per-field
+  ``fieldstats`` — advanced from exact bigint counters (avgdl =
+  sum_dl/n_docs, the same long-sum/count division Spark's and DuckDB's
+  ``avg`` perform, so BM25 scores stay bit-identical).
 
-LIVENESS.  A document's authoritative row is its doclens row with the
-highest segment id; the doc is alive iff that id exceeds the doc's highest
-tombstone segment id (re-adding a deleted doc works because the new doclens
-row outranks the old tombstone).  Resolution is one map-side-combinable
-``max_by`` aggregate over the (pruned) doclens slices — no window shuffle —
-and postings join the alive set on ``(doc_id, seg)`` so stale postings of
+LIVENESS (:func:`_live`, the one copy of the rule).  A document's winning
+segment is the highest segment holding a doclens row for it; the doc is
+alive iff that segment exceeds the doc's highest tombstone segment
+(re-adding a deleted doc works because the new doclens row outranks the
+old tombstone).  An upsert replaces a doc's EVERY field, so the rule is
+doc-level in both layouts.  Resolution is one map-side-combinable
+aggregate over the (pruned) doclens slices — no window shuffle — and
+every other tier joins the alive set on ``(id, seg)``, so stale rows of
 replaced docs drop out without ever being rewritten.
 
+ONE ENGINE.  Tier reads go through :func:`_tier` (the base plus ONE
+multi-path :func:`_seg_union` read of every segment); upsert, delete and
+compaction commit through :func:`_stage_and_promote`; compaction is
+:func:`_fold`; both streaming drains run :func:`_drain`.
+
 SCALE SHAPE.  Upsert/delete cost is O(batch) + a column-pruned,
-dbucket-pruned doclens lookup for 200/201 statuses and exact stats deltas;
-nothing existing is rewritten.  Query cost adds |segments| parquet list
-operations and the max_by aggregate over candidate doclens; keep segment
-count bounded with ``compact_text_index`` (amortized like any LSM).  The
-trade is the classic one: in-place rewrite = pay at write time; segments =
-tiny writes, small bounded read overhead, periodic compaction.
+dbucket-pruned doclens lookup for 200/201 statuses and exact stats deltas
+(a bulk purge, ``broadcast_ids=False``, reads every dbucket: its ids
+cover them all anyway); nothing existing is rewritten.  Query cost adds
+|segments| parquet list operations and the liveness aggregate over
+candidate doclens; keep segment count bounded with compaction (amortized
+like any LSM).  The trade is the classic one: in-place rewrite = pay at
+write time; segments = tiny writes, small bounded read overhead, periodic
+compaction.
 
 Reference parity: MergeOrUpload/Delete semantics per the reference's
 ``AzureSearchIndexer/`` batch actions — 201/200 statuses, idempotent
@@ -56,12 +72,49 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from azuredatalakeindexer_spark.functions.localrel import tiny_df
+from azuredatalakeindexer_spark.functions.localrel import (
+    read_meta_parquet,
+    tiny_df,
+    write_meta_parquet,
+)
+from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 from azuredatalakeindexer_spark.functions.text import portable_hash64, tokens
-from azuredatalakeindexer_spark.sources.staging import _hadoop_fs, hadoop_path_exists
+from azuredatalakeindexer_spark.sources.staging import (
+    StagedCommit,
+    _hadoop_fs,
+    hadoop_path_exists,
+    recover_for_maintenance,
+)
+from azuredatalakeindexer_spark.sources.text_index import (
+    _check_n_buckets,
+    _dedupe_delta,
+    _postings_cols,
+    _postings_from,
+    _write_stats_from,
+    _write_terms_rollup,
+)
 
 #: base layout acts as this segment id; real segments start at 1
 BASE_SEG = 0
+
+#: the path-partition column of each id- or term-keyed tier
+_PART = {
+    "postings": "bucket",
+    "doclens": "dbucket",
+    "docstore": "dbucket",
+    "docvals": "dbucket",
+}
+#: file types of the engine's columns; the id column (any other name) is long
+_TYPES = {
+    "term": "string",
+    "field": "string",
+    "tf": "bigint",
+    "pos": "array<int>",
+    "dl": "int",
+    "text": "string",
+    "bucket": "int",
+    "dbucket": "int",
+}
 
 
 def list_segments(spark: SparkSession, path: str) -> list[int]:
@@ -79,16 +132,12 @@ def list_segments(spark: SparkSession, path: str) -> list[int]:
     return sorted(out)
 
 
+def _next_seg(segs: list[int]) -> int:
+    return (segs[-1] if segs else BASE_SEG) + 1
+
+
 def _seg_dir(path: str, seg: int) -> str:
     return f"{path}/segments/seg={seg}"
-
-
-def _read_or_empty(spark: SparkSession, p: str, schema: str) -> DataFrame:
-    """Read a maybe-absent parquet relation (tombstones / postings of a
-    delete-only segment) as a typed frame."""
-    if hadoop_path_exists(spark, p):
-        return spark.read.parquet(p)
-    return spark.createDataFrame([], schema)
 
 
 def _seg_union(
@@ -187,36 +236,85 @@ def _seg_union(
     return out.select(*[f.name for f in full.fields], "seg")
 
 
-def _all_doclens(
+def _tier(
+    spark: SparkSession,
+    path: str,
+    segs: list[int],
+    rel: str,
+    cols: list[str],
+    *,
+    where=None,
+    prune: list | None = None,
+    base: DataFrame | None = None,
+    schema=None,
+) -> DataFrame:
+    """``(*cols, seg)`` rows of tier ``rel`` across the base (segment 0)
+    and every segment — the one read every live resolution and every fold
+    starts from.  ``prune`` lists the wanted values of the tier's partition
+    column: it statically prunes every segment's directories and filters
+    the base on the same column; ``where`` (a Column) is pushed into every
+    slice.  ``schema`` defaults to the engine types of ``cols`` (docvals
+    passes its base schema: attribute columns carry user types); ``base``
+    reuses an already-read base frame."""
+    part = _PART[rel]
+    if schema is None:
+        schema = ", ".join(f"{c} {_TYPES.get(c, 'long')}" for c in [*cols, part])
+    if base is None:
+        base = spark.read.parquet(f"{path}/{rel}")
+    cond = where
+    if prune is not None:
+        pc = F.col(part).isin(prune)
+        cond = pc if where is None else pc & where
+
+    def slice_(df: DataFrame) -> DataFrame:
+        return (df if cond is None else df.where(cond)).select(*cols, "seg")
+
+    segp = _seg_union(
+        spark, path, segs, rel, schema,
+        prune={part: prune} if prune is not None else None,
+    )
+    return slice_(base.withColumn("seg", F.lit(BASE_SEG))).unionByName(slice_(segp))
+
+
+def _live(
     spark: SparkSession,
     path: str,
     segs: list[int],
     id_col: str,
+    *,
+    lens: DataFrame | None = None,
+    carry: tuple = (),
     dbuckets: list[int] | None = None,
+    candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """Union of every segment's doclens with segment provenance;
-    ``dbuckets`` statically prunes each segment's id-hash partitions (used
-    by the upsert's alive-lookup, where only the batch's dbuckets can
-    matter)."""
-    base = spark.read.parquet(f"{path}/doclens")
-    segp = _seg_union(
-        spark, path, segs, "doclens", f"{id_col} long, dl int, dbucket int",
-        prune={"dbucket": dbuckets} if dbuckets is not None else None,
+    """``(id_col, *carry, seg)`` of every LIVE document and its winning
+    segment — the liveness rule, written once.  One map-side-combinable
+    aggregate — deliberately ``max``/``max_by``, not a window, so partial
+    aggregation runs before the shuffle.
+
+    ``lens`` supplies the ``(id, ..., seg)`` doclens rows (default: every
+    segment's, statically pruned to ``dbuckets`` — correct whenever the
+    caller only consumes ids hashing there); ``candidates`` (an id
+    relation) restricts them before the aggregate, so resolution is
+    candidate-sized; ``carry`` columns ride along as their winning-segment
+    value (the text layout's one-row-per-doc ``dl``)."""
+    if lens is None:
+        lens = _tier(spark, path, segs, "doclens", [id_col, *carry], prune=dbuckets)
+    if candidates is not None:
+        lens = lens.join(candidates, id_col, "left_semi")
+    latest = lens.groupBy(id_col).agg(
+        *[F.max_by(c, "seg").alias(c) for c in carry], F.max("seg").alias("seg")
     )
-    if dbuckets is not None:
-        base = base.where(F.col("dbucket").isin(dbuckets))
-        segp = segp.where(F.col("dbucket").isin(dbuckets))
+    tombs = (
+        _seg_union(spark, path, segs, "tombstones", f"{id_col} long")
+        .groupBy(id_col)
+        .agg(F.max("seg").alias("_tseg"))
+    )
     return (
-        base.select(id_col, "dl")
-        .withColumn("seg", F.lit(BASE_SEG))
-        .unionByName(segp.select(id_col, "dl", "seg"))
+        latest.join(tombs, id_col, "left")
+        .where(F.col("seg") > F.coalesce(F.col("_tseg"), F.lit(-1)))
+        .select(id_col, *carry, "seg")
     )
-
-
-def _all_tombstones(
-    spark: SparkSession, path: str, segs: list[int], id_col: str
-) -> DataFrame:
-    return _seg_union(spark, path, segs, "tombstones", f"{id_col} long")
 
 
 def alive_docs(
@@ -226,26 +324,66 @@ def alive_docs(
     id_col: str = "doc_id",
     dbuckets: list[int] | None = None,
 ) -> DataFrame:
-    """``(id_col, dl, seg)`` of every LIVE document: the max-segment doclens
-    row, kept only if it outranks the doc's max tombstone segment.  One
-    map-side-combinable aggregate — deliberately ``max_by``, not a window,
-    so partial aggregation runs before the shuffle.  ``dbuckets`` restricts
-    the scan to the given id-hash partitions (correct whenever the caller
-    only consumes ids hashing there)."""
-    dls = _all_doclens(spark, path, segs, id_col, dbuckets)
-    latest = dls.groupBy(id_col).agg(
-        F.max_by("dl", "seg").alias("dl"), F.max("seg").alias("seg")
+    """``(id_col, dl, seg)`` of every LIVE document of a text-layout index
+    (the winning segment's dl rides the liveness aggregate).  ``dbuckets``
+    restricts the scan to the given id-hash partitions."""
+    return _live(spark, path, segs, id_col, carry=("dl",), dbuckets=dbuckets)
+
+
+def _live_lens(
+    spark: SparkSession,
+    path: str,
+    segs: list[int],
+    id_col: str,
+    *,
+    fields: list[str] | None,
+    ids: DataFrame | None = None,
+    dbuckets: list[int] | None = None,
+) -> DataFrame:
+    """Live doclens rows ``(id[, field], dl)`` — of every live doc, or of
+    the ``ids`` relation's only — the alive lookup behind the upserts'
+    statuses and stats deltas and the deletes' victims: the winning
+    segment's rows joined back on ``(id, seg)``.  ``fields`` names the
+    profile layout (one row per (doc, field)); ``dbuckets`` prunes every
+    doclens slice to the given id-hash partitions."""
+    keys = [id_col] if fields is None else [id_col, "field"]
+    lens = _tier(spark, path, segs, "doclens", [*keys, "dl"], prune=dbuckets)
+    alive = _live(spark, path, segs, id_col, lens=lens, candidates=ids)
+    return lens.join(alive, [id_col, "seg"]).select(*keys, "dl")
+
+
+def _live_slice(
+    spark: SparkSession,
+    path: str,
+    segs: list[int],
+    cols: list[str],
+    *,
+    id_col: str,
+    where,
+    prune: list | None = None,
+    base: DataFrame | None = None,
+    lens: DataFrame | None = None,
+    carry: tuple = (),
+    materialize: bool = True,
+) -> tuple[DataFrame, DataFrame]:
+    """Query-side one-pass resolution: ``(rows, alive)`` — the filtered
+    postings ``cols`` of base + every segment (checkpointed unless
+    ``materialize=False``) and the liveness of ONLY the docs that carry
+    such a row.  The naive composition resolves liveness over EVERY
+    document; this computes the candidate-id set from the pruned, filtered
+    postings union first — at 100 TB that is |docs matching| rows instead
+    of |corpus| rows.  Callers join ``rows`` to ``alive`` on ``(id,
+    seg)``."""
+    rows = _tier(
+        spark, path, segs, "postings", cols, where=where, prune=prune, base=base
     )
-    tombs = (
-        _all_tombstones(spark, path, segs, id_col)
-        .groupBy(id_col)
-        .agg(F.max("seg").alias("_tseg"))
+    if materialize:
+        rows = rows.localCheckpoint()
+    alive = _live(
+        spark, path, segs, id_col,
+        lens=lens, carry=carry, candidates=rows.select(id_col).distinct(),
     )
-    return (
-        latest.join(tombs, id_col, "left")
-        .where(F.col("seg") > F.coalesce(F.col("_tseg"), F.lit(-1)))
-        .select(id_col, "dl", "seg")
-    )
+    return rows, alive
 
 
 def live_postings(
@@ -260,33 +398,15 @@ def live_postings(
     """``(term, id_col, tf[, pos])`` of live postings across base +
     segments, optionally bucket-pruned (static partition filter in EVERY
     segment) and term-filtered.  Stale postings of replaced docs drop out
-    via the ``(doc_id, seg)`` equi-join against :func:`alive_docs`.
-    Positional indexes keep their ``pos`` lists through the resolution
-    (and therefore through compaction)."""
-    from azuredatalakeindexer_spark.sources.text_index import _postings_cols
-
-    base_postings = spark.read.parquet(f"{path}/postings")
-    vcols = _postings_cols(base_postings, id_col)
-    empty_schema = f"term string, {id_col} long, tf bigint" + (
-        ", pos array<int>" if "pos" in vcols else ""
-    ) + ", bucket int"
-
-    def slice_(df: DataFrame) -> DataFrame:
-        if buckets is not None:
-            df = df.where(F.col("bucket").isin(buckets))
-        if terms is not None:
-            df = df.where(F.col("term").isin(terms))
-        return df.select(*vcols, "seg")
-
-    allp = slice_(base_postings.withColumn("seg", F.lit(BASE_SEG))).unionByName(
-        slice_(
-            _seg_union(
-                spark, path, segs, "postings", empty_schema,
-                prune={"bucket": buckets} if buckets is not None else None,
-            )
-        )
+    via the ``(doc_id, seg)`` equi-join against the live set.
+    Positional indexes keep their ``pos`` lists through the resolution."""
+    base = spark.read.parquet(f"{path}/postings")
+    vcols = _postings_cols(base, id_col)
+    allp = _tier(
+        spark, path, segs, "postings", vcols, base=base, prune=buckets,
+        where=F.col("term").isin(terms) if terms is not None else None,
     )
-    alive = alive_docs(spark, path, segs, id_col).select(id_col, "seg")
+    alive = _live(spark, path, segs, id_col)
     return allp.join(alive, [id_col, "seg"]).select(*vcols)
 
 
@@ -301,54 +421,16 @@ def live_query_slice(
     materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """One-pass query-side resolution: ``(postings, doclens)`` restricted to
-    the docs that actually carry a query term.
-
-    The naive composition resolves liveness twice (once for postings, once
-    for doclens) and over EVERY document; this computes the candidate-id
-    set from the bucket-pruned, term-filtered postings union first, then
-    runs the max_by liveness aggregate only over those docs' doclens rows —
-    at 100 TB that is |docs containing a query term| rows instead of
-    |corpus| rows, and one aggregate instead of two.
+    the docs that actually carry a query term (:func:`_live_slice`) — one
+    liveness aggregate instead of one for postings and one for doclens.
 
     ``materialize=False`` skips the two localCheckpoints (the candidate
     union and the alive set are then recomputed by each consumer) — used
     by the plan-pruning test to inspect the un-checkpointed scan plans."""
-    def slice_(df: DataFrame) -> DataFrame:
-        return df.where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        ).select("term", id_col, "tf", "seg")
-
-    allp = slice_(
-        spark.read.parquet(f"{path}/postings").withColumn("seg", F.lit(BASE_SEG))
-    ).unionByName(
-        slice_(
-            _seg_union(
-                spark,
-                path,
-                segs,
-                "postings",
-                f"term string, {id_col} long, tf bigint, bucket int",
-                prune={"bucket": buckets},
-            )
-        )
-    )
-    if materialize:
-        allp = allp.localCheckpoint()
-
-    cand = allp.select(id_col).distinct()
-    dls = _all_doclens(spark, path, segs, id_col).join(cand, id_col, "left_semi")
-    latest = dls.groupBy(id_col).agg(
-        F.max_by("dl", "seg").alias("dl"), F.max("seg").alias("seg")
-    )
-    tombs = (
-        _all_tombstones(spark, path, segs, id_col)
-        .groupBy(id_col)
-        .agg(F.max("seg").alias("_tseg"))
-    )
-    alive = (
-        latest.join(tombs, id_col, "left")
-        .where(F.col("seg") > F.coalesce(F.col("_tseg"), F.lit(-1)))
-        .select(id_col, "dl", "seg")
+    allp, alive = _live_slice(
+        spark, path, segs, ["term", id_col, "tf"],
+        id_col=id_col, where=F.col("term").isin(terms), prune=buckets,
+        carry=("dl",), materialize=materialize,
     )
     if materialize:
         alive = alive.localCheckpoint()
@@ -367,14 +449,9 @@ def live_prefix_slice(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """``(term, id_col)`` pairs of LIVE postings whose term starts with
-    ``prefix`` — the segmented-state autocomplete slice.
-
-    Same one-pass shape as :func:`live_query_slice`: the prefix predicate
-    is applied INSIDE every slice scan (base + each segment) so it pushes
-    to the parquet readers — postings files are term-sorted within their
-    buckets, so the string min/max row-group stats actually prune — and
-    the last-writer-wins liveness aggregate then runs only over the docs
-    that carry a matching term (candidate-sized, not corpus-sized)."""
+    ``prefix`` — the segmented-state autocomplete slice.  Postings files
+    are term-sorted within their buckets, so the pushed prefix predicate's
+    string min/max row-group stats actually prune."""
     return live_term_slice(
         spark,
         path,
@@ -391,55 +468,27 @@ def live_term_slice(
     term_pred,
     *,
     id_col: str = "doc_id",
+    fields: list[str] | None = None,
 ) -> DataFrame:
     """``(term, id_col)`` pairs of LIVE postings whose term satisfies
     ``term_pred`` (a ``Column -> Column`` factory applied to the term
-    column) — the segmented-state vocabulary slice behind both the prefix
-    suggester (:func:`live_prefix_slice`) and the fuzzy length-band
-    expansion (``text_index.fuzzy_from_index``).
+    column) — the segmented-state vocabulary slice behind the prefix
+    suggester (:func:`live_prefix_slice`), the fuzzy length-band and the
+    wildcard expansions.  On a profile-layout index pass ``fields``: the
+    rows are ``(field, term, id_col)`` of those fields only.
 
-    The predicate is applied INSIDE every slice scan (base + each segment)
-    so sargable conjuncts (prefix ranges, ``length`` bands via the column
-    stats of term-sorted files) push to the parquet readers; the
-    last-writer-wins liveness aggregate then runs only over the docs that
-    carry a matching term (candidate-sized, not corpus-sized)."""
-    def slice_(df: DataFrame) -> DataFrame:
-        return df.where(term_pred(F.col("term"))).select("term", id_col, "seg")
-
-    allp = (
-        slice_(
-            spark.read.parquet(f"{path}/postings").withColumn(
-                "seg", F.lit(BASE_SEG)
-            )
-        )
-        .unionByName(
-            slice_(
-                _seg_union(
-                    spark,
-                    path,
-                    segs,
-                    "postings",
-                    f"term string, {id_col} long, bucket int",
-                )
-            )
-        )
-        .localCheckpoint()
-    )
-
-    cand = allp.select(id_col).distinct()
-    dls = _all_doclens(spark, path, segs, id_col).join(cand, id_col, "left_semi")
-    latest = dls.groupBy(id_col).agg(F.max("seg").alias("seg"))
-    tombs = (
-        _all_tombstones(spark, path, segs, id_col)
-        .groupBy(id_col)
-        .agg(F.max("seg").alias("_tseg"))
-    )
-    alive = (
-        latest.join(tombs, id_col, "left")
-        .where(F.col("seg") > F.coalesce(F.col("_tseg"), F.lit(-1)))
-        .select(id_col, "seg")
-    )
-    return allp.join(alive, [id_col, "seg"]).select("term", id_col)
+    The predicate (and field IN-list) is applied INSIDE every slice scan
+    (base + each segment) so sargable conjuncts (prefix ranges, ``length``
+    bands via the column stats of term-sorted files) push to the parquet
+    readers; the last-writer-wins liveness aggregate then runs only over
+    the docs that carry a matching term (candidate-sized, not
+    corpus-sized)."""
+    cols = ["term", id_col] if fields is None else ["field", "term", id_col]
+    where = term_pred(F.col("term"))
+    if fields is not None:
+        where = F.col("field").isin(fields) & where
+    allp, alive = _live_slice(spark, path, segs, cols, id_col=id_col, where=where)
+    return allp.join(alive, [id_col, "seg"]).select(*cols)
 
 
 def live_docstore_slice(
@@ -449,56 +498,51 @@ def live_docstore_slice(
     *,
     id_col: str = "doc_id",
     dbs: list[int],
-    ids: list,
+    ids,
+    fields: list[str] | None = None,
 ) -> DataFrame:
     """``(id, text)`` — the LIVE stored text of the given ids across the
     base docstore and every segment's docstore, resolved by the same
     max-segment rule as doclens liveness: a doc upserted in segment K
     carries its current text in seg=K's docstore, shadowing every older
-    row.  The caller passes LIVE ids (a query result page), so tombstones
-    need no separate check — a re-added doc's newest docstore row is by
-    construction newer than any pre-tombstone row.  Cost: each slice is
-    statically dbucket-pruned with the id IN-list pushed down —
-    candidate-sized × (1 + number of segments), never corpus-sized."""
-    def slice_(df: DataFrame) -> DataFrame:
-        return (
-            df.where(F.col("dbucket").isin(dbs))
-            .where(F.col(id_col).isin(ids))
-            .select(id_col, "text", "seg")
-        )
+    row.  The caller passes LIVE ids (a query result page or candidate
+    set), so tombstones need no separate check — a re-added doc's newest
+    docstore row is by construction newer than any pre-tombstone row.
 
-    out = slice_(
-        spark.read.parquet(f"{path}/docstore").withColumn("seg", F.lit(BASE_SEG))
-    ).unionByName(
-        slice_(
-            _seg_union(
-                spark,
-                path,
-                segs,
-                "docstore",
-                f"{id_col} long, text string, dbucket int",
-                prune={"dbucket": dbs},
-            )
-        )
-    )
-    return out.groupBy(id_col).agg(F.max_by("text", "seg").alias("text"))
+    ``ids`` is the id IN-list pushed into every slice, or an id relation
+    (a candidate set) semi-joined before the resolution.  On a
+    profile-layout index pass ``fields``: only those stored fields are
+    read and the resolution runs per (id, field), returning ``(id, field,
+    text)``.  Cost: each slice is statically dbucket-pruned —
+    candidate-sized × (1 + number of segments), never corpus-sized."""
+    keys = [id_col] if fields is None else [id_col, "field"]
+    where = None
+    if not isinstance(ids, DataFrame):
+        where = F.col(id_col).isin(ids)
+    if fields is not None:
+        fc = F.col("field").isin(fields)
+        where = fc if where is None else where & fc
+    rows = _tier(spark, path, segs, "docstore", [*keys, "text"], where=where, prune=dbs)
+    if isinstance(ids, DataFrame):
+        rows = rows.join(ids, id_col, "left_semi")
+    return rows.groupBy(*keys).agg(F.max_by("text", "seg").alias("text"))
 
 
 def _read_segstats(
     spark: SparkSession, path: str, id_col: str
 ) -> tuple[int, int, int | None]:
     """(n_docs, sum_dl, n_buckets-pin) — from the stats relation's exact
-    bigint columns (every writer maintains them), falling back to a
-    base-doclens aggregate for an index written before ``sum_dl``
-    existed (pin None in that case)."""
-    stats = spark.read.parquet(f"{path}/stats")
-    if "sum_dl" in stats.columns:
-        r = stats.first()
-        pin = (
-            int(r["n_buckets"])
-            if "n_buckets" in stats.columns and r["n_buckets"] is not None
-            else None
-        )
+    bigint columns (every writer maintains them), read DRIVER-SIDE
+    (``read_meta_parquet``: the relation is 1 row, no Spark job), falling
+    back to a base-doclens aggregate for an index written before
+    ``sum_dl`` existed (pin None in that case)."""
+    rows = read_meta_parquet(spark, f"{path}/stats")
+    if rows is None:  # unreadable fast-path: ordinary Spark read
+        stats = spark.read.parquet(f"{path}/stats")
+        rows = [stats.first().asDict()] if "sum_dl" in stats.columns else []
+    if rows and rows[0].get("sum_dl") is not None:
+        r = rows[0]
+        pin = int(r["n_buckets"]) if r.get("n_buckets") is not None else None
         return int(r["n_docs"]), int(r["sum_dl"]), pin
     r = (
         spark.read.parquet(f"{path}/doclens")
@@ -525,8 +569,6 @@ def _write_stats(
     performs, so scores stay bit-identical to a fresh build.  ``target``
     redirects the write into a staged commit."""
     avgdl = (sum_dl / n_docs) if n_docs else None
-    from azuredatalakeindexer_spark.functions.localrel import write_meta_parquet
-
     # the row is already driver-resident — write it driver-side (one
     # Hadoop FS call) instead of spending an executor write job on a
     # 1-row relation (r14; see write_meta_parquet)
@@ -536,6 +578,293 @@ def _write_stats(
         "n_docs bigint, avgdl double, sum_dl bigint, n_buckets int",
         target if target is not None else f"{path}/stats",
     )
+
+
+def _stats_writer(spark: SparkSession, path: str, id_col: str, n_buckets=None):
+    """The text layout's counters: ``deltas[None] = (dn, ds)`` advances
+    the 1-row stats relation (the pin read back, else ``n_buckets``)."""
+
+    def write(deltas: dict, target: str) -> None:
+        n_docs, sum_dl, pin = _read_segstats(spark, path, id_col)
+        dn, ds = deltas.get(None, (0, 0))
+        _write_stats(
+            spark, path, n_docs + dn, sum_dl + ds,
+            pin if pin is not None else n_buckets, target=target,
+        )
+
+    return "stats", write
+
+
+def _deltas(frame: DataFrame, fields: list[str] | None, n, s) -> dict:
+    """``{field: (n, s)}`` (``{None: (n, s)}`` in the text layout) — the
+    counter deltas of one batch-sized frame in ONE aggregate job."""
+    by = [] if fields is None else ["field"]
+    rows = frame.groupBy(*by).agg(n.alias("n"), s.alias("s")).collect()
+    return {
+        (r["field"] if by else None): (int(r["n"]), int(r["s"])) for r in rows
+    }
+
+
+def _write_tier(df: DataFrame, target: str, empty: bool = False) -> None:
+    """Write one tier relation in its layout: postings bucket-partitioned
+    and term-sorted within each bucket (pushed term predicates prune row
+    groups), id-keyed tiers dbucket-partitioned, tombstones plain.
+
+    An ``empty`` relation is written as the typed 0-row UNPARTITIONED
+    sentinel: a partitioned write of 0 rows leaves a directory with zero
+    data files that cannot be re-read (schema inference fails on every
+    later query/upsert), while the sentinel reads back with the same
+    columns, so later segments layer on it and a later compaction writes
+    a partitioned layout again."""
+    part = next((c for c in ("bucket", "dbucket") if c in df.columns), None)
+    if empty or part is None:
+        df.write.parquet(target)
+        return
+    out = df.repartition(part)
+    if part == "bucket":
+        out = out.sortWithinPartitions("term")
+    out.write.partitionBy(part).parquet(target)
+
+
+def _stage_and_promote(
+    spark: SparkSession,
+    path: str,
+    tiers: dict,
+    rollups: dict,
+    *,
+    new_seg: int | None = None,
+    empty: dict | None = None,
+) -> None:
+    """The one commit of every maintenance op: stage the ``tiers``
+    relations and the ``rollups`` (``{rel: write(target)}``, e.g. the
+    stats counters) concurrently — independent batch-sized writes whose
+    scheduling and dynamic-partition commit latencies overlap instead of
+    stacking — then promote them under one journal (``sources/
+    staging.py``): a crash before the journal leaves the old index
+    serving bit-identical results, one after it rolls forward.
+
+    With ``new_seg`` every tier lands in one staged segment directory that
+    swaps in as ``segments/seg=K`` (no partial segment is ever listed);
+    without it (the fold) each tier replaces its base relation, ``empty``
+    (``{rel: bool}``) selects the sentinel write, and
+    ``segments/`` is removed."""
+    commit = StagedCommit(spark, path)
+    seg_dir = commit.stage("seg") if new_seg is not None else None
+    empty = empty or {}
+
+    def tier(rel: str, df: DataFrame):
+        def w() -> None:
+            if seg_dir is not None:
+                _write_tier(df, f"{seg_dir}/{rel}")
+                return
+            _write_tier(df, commit.stage(rel), empty.get(rel, False))
+            commit.swap(rel, rel)
+
+        return w
+
+    def rollup(rel: str, write):
+        def w() -> None:
+            write(commit.stage(rel))
+            commit.swap(rel, rel)
+
+        return w
+
+    run_concurrent(
+        *[tier(r, df) for r, df in tiers.items() if df is not None],
+        *[rollup(r, w) for r, w in rollups.items()],
+    )
+    if seg_dir is not None:
+        commit.swap("seg", f"segments/seg={new_seg}")
+    else:
+        commit.remove("segments")
+    commit.promote()
+
+
+def _known_or(known: dict, key: str, probe):
+    """A layout fact the streaming drain carries in ``known``
+    (:func:`_drain`), else a fresh probe — as a thunk for run_concurrent."""
+    return lambda: known[key] if key in known else probe()
+
+
+def _land(
+    spark: SparkSession,
+    path: str,
+    segs: list[int],
+    enriched: DataFrame,
+    tiers: dict,
+    stats,
+    *,
+    id_col: str,
+    fields: list[str] | None,
+) -> DataFrame:
+    """The shared tail of both upserts: from the checkpointed batch-sized
+    ``enriched`` frame — the new doclens rows ``(id[, field], dl,
+    dbucket)`` left-joined to their live predecessors' ``_old_dl`` — the
+    201/200 statuses, the segment's doclens and the exact counter deltas
+    (created docs add one, replaced docs swap their dl) all derive with
+    no further input scans; the segment and the counters promote under
+    one journal.  Every doc has a row per indexed field, so the first
+    field's row decides a profile doc's status."""
+    keyed = enriched if fields is None else enriched.where(F.col("field") == fields[0])
+    statuses = keyed.select(
+        id_col,
+        F.when(F.col("_old_dl").isNotNull(), F.lit(200))
+        .otherwise(F.lit(201))
+        .alias("status"),
+    )
+    rel, write = stats
+
+    def w_stats(target: str) -> None:
+        deltas = _deltas(
+            enriched,
+            fields,
+            F.coalesce(F.sum(F.when(F.col("_old_dl").isNull(), 1)), F.lit(0)),
+            F.coalesce(F.sum("dl"), F.lit(0))
+            - F.coalesce(F.sum("_old_dl"), F.lit(0)),
+        )
+        write(deltas, target)
+
+    keys = [id_col] if fields is None else [id_col, "field"]
+    _stage_and_promote(
+        spark,
+        path,
+        {**tiers, "doclens": enriched.select(*keys, "dl", "dbucket")},
+        {rel: w_stats},
+        new_seg=_next_seg(segs),
+    )
+    return statuses
+
+
+def _delete(
+    spark: SparkSession,
+    path: str,
+    doc_ids: DataFrame,
+    stats,
+    *,
+    id_col: str,
+    fields: list[str] | None,
+    n_buckets: int | None,
+    broadcast_ids: bool,
+) -> int:
+    """Delete as a tombstone-only segment, both layouts (the caller has
+    run crash recovery and read ``n_buckets``): the live victims' doclens
+    rows in ONE checkpointed lookup, their count and dl sums in ONE
+    aggregate, and — only when a live victim exists — the tombstones and
+    the counter refresh promoted together."""
+    # docstore-backed indexes need no docstore write here: the tombstone
+    # hides the doc from every query, so its stored text is unreachable
+    # until compaction physically drops it
+    segs = list_segments(spark, path)
+    ids = doc_ids.select(id_col).distinct()
+    dbuckets = None
+    if broadcast_ids:
+        # a broadcastable id set is driver-sized: ONE collect pins it (a
+        # nondeterministic source is evaluated once) and yields the id-hash
+        # partitions the victim lookup is pruned to (pmod == Python's %)
+        rows = ids.select(id_col, F.hash(id_col).alias("_h")).collect()
+        if not rows:
+            return 0
+        keys = F.broadcast(tiny_df(spark, [r[:1] for r in rows], ids.schema))
+        if n_buckets is not None:
+            dbuckets = sorted({r["_h"] % n_buckets for r in rows})
+    else:
+        # a bulk purge's ids cover every id-hash partition anyway
+        keys = ids.localCheckpoint()
+    victims = _live_lens(
+        spark, path, segs, id_col, fields=fields, ids=keys, dbuckets=dbuckets
+    ).localCheckpoint()
+    deltas = _deltas(
+        victims, fields, F.count(F.lit(1)), F.coalesce(F.sum("dl"), F.lit(0))
+    )
+    n_removed = max((n for n, _s in deltas.values()), default=0)
+    if n_removed == 0:
+        return 0
+    # tombstone only the ACTUAL victims: absent ids carry no information,
+    # and dropping them keeps the tombstone relation to live hits
+    tombs = victims.select(id_col)
+    rel, write = stats
+    _stage_and_promote(
+        spark,
+        path,
+        {"tombstones": tombs if fields is None else tombs.distinct()},
+        {rel: lambda t: write({k: (-n, -s) for k, (n, s) in deltas.items()}, t)},
+        new_seg=_next_seg(segs),
+    )
+    return n_removed
+
+
+def _fold(
+    spark: SparkSession,
+    path: str,
+    segs: list[int],
+    rollups: dict,
+    *,
+    id_col: str,
+    n_buckets: int,
+    fields: list[str] | None,
+    attrs=(),
+) -> int:
+    """Compaction, both layouts: resolve the alive set once, fold every
+    tier's winning rows (``(id, seg)`` join) into a new base, refresh the
+    ``rollups`` (``{rel: write(merged, lens, target)}``) and drop
+    ``segments/``, all staged and promoted under one journal.  The
+    resolved postings and doclens are ``localCheckpoint``-materialized so
+    the LSM resolution runs once, not once per staged write; a tier that
+    resolves to 0 rows (a fully-tombstoned or all-zero-token corpus)
+    stages the typed sentinel (:func:`_write_tier`) — checked for
+    postings and doclens apart, since postings can empty while doclens
+    keeps rows; the mirror tiers follow doclens.  Returns the number of
+    segments folded."""
+    keys = [id_col] if fields is None else [id_col, "field"]
+    alive = _live(spark, path, segs, id_col).localCheckpoint()
+    dbucket = F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets))
+
+    def fold(rel: str, cols: list[str], **kw) -> DataFrame:
+        return (
+            _tier(spark, path, segs, rel, cols, **kw)
+            .join(alive, [id_col, "seg"])
+            .select(*cols)
+        )
+
+    base_postings = spark.read.parquet(f"{path}/postings")
+    # positional indexes keep their pos lists through the fold
+    pcols = ["term", *keys, "tf"] + (["pos"] if "pos" in base_postings.columns else [])
+    merged = (
+        fold("postings", pcols, base=base_postings)
+        .withColumn("bucket", F.pmod(portable_hash64(F.col("term")), F.lit(n_buckets)))
+        .localCheckpoint()
+    )
+    lens = (
+        fold("doclens", [*keys, "dl"]).withColumn("dbucket", dbucket).localCheckpoint()
+    )
+    # the docvals/docstore tiers mirror doclens: every op that writes a
+    # doc's doclens rows writes its docvals row and its stored text rows
+    # in the same segment, so an empty doclens decides for them too
+    mirrors = {}
+    if attrs:
+        base_vals = spark.read.parquet(f"{path}/docvals")
+        mirrors["docvals"] = fold(
+            "docvals", [id_col, *attrs], base=base_vals, schema=base_vals.schema
+        )
+    if hadoop_path_exists(spark, f"{path}/docstore"):
+        mirrors["docstore"] = fold("docstore", [*keys, "text"])
+    mirrors = {r: df.withColumn("dbucket", dbucket) for r, df in mirrors.items()}
+
+    # both resolved relations are checkpointed, so the emptiness probes
+    # are first-partition peeks
+    merged_empty, lens_empty = run_concurrent(merged.isEmpty, lens.isEmpty)
+    _stage_and_promote(
+        spark,
+        path,
+        {"postings": merged, "doclens": lens, **mirrors},
+        {rel: (lambda t, w=w: w(merged, lens, t)) for rel, w in rollups.items()},
+        empty={
+            "postings": merged_empty,
+            "doclens": lens_empty,
+            **{r: lens_empty for r in mirrors},
+        },
+    )
+    return len(segs)
 
 
 def upsert_text_index_segmented(
@@ -565,24 +894,14 @@ def upsert_text_index_segmented(
     ONCE against the live-doc set (column-pruned, dbucket-pruned doclens
     slices + tombstones) and materialize that batch-sized frame — statuses,
     the segment doclens, and the exact stats delta all derive from it with
-    no further input scans — then write the segment postings + doclens and
-    refresh the 1-row stats.  Job count is deliberately minimal: at bench
-    scale an upsert is pure scheduling overhead, and at 100 TB the data
-    cost is O(batch) either way.
+    no further input scans (:func:`_land`) — then write the segment
+    postings + doclens and refresh the 1-row stats.  Job count is
+    deliberately minimal: at bench scale an upsert is pure scheduling
+    overhead, and at 100 TB the data cost is O(batch) either way.
     """
-    from azuredatalakeindexer_spark.sources.staging import (
-        StagedCommit,
-        recover_for_maintenance,
-    )
-    from azuredatalakeindexer_spark.sources.text_index import (
-        _check_n_buckets,
-        _dedupe_delta,
-    )
-
     known = _known or {}
     if not known.get("recovered"):
         recover_for_maintenance(spark, path)
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 
     toks = tokens(F.col(text_col))
     deduped = _dedupe_delta(delta, id_col, text_col)
@@ -594,11 +913,9 @@ def upsert_text_index_segmented(
         # (live_docstore_slice) until compaction folds them into the base.
         # The probe gates whether the deduped rows need their own
         # checkpoint, so probe + checkpoint form one ordered thunk.
-        store = (
-            known["has_store"]
-            if "has_store" in known
-            else hadoop_path_exists(spark, f"{path}/docstore")
-        )
+        store = _known_or(
+            known, "has_store", lambda: hadoop_path_exists(spark, f"{path}/docstore")
+        )()
         d = deduped.localCheckpoint() if store else deduped
         b = d.select(
             F.col(id_col),
@@ -622,102 +939,46 @@ def upsert_text_index_segmented(
                 spark, path, n_buckets, "upsert_text_index_segmented"
             )
         ),
-        lambda: (
-            known["segments"]
-            if "segments" in known
-            else list_segments(spark, path)
-        ),
-        lambda: (
-            known["has_pos"]
-            if "has_pos" in known
-            else "pos" in spark.read.parquet(f"{path}/postings").columns
+        _known_or(known, "segments", lambda: list_segments(spark, path)),
+        _known_or(
+            known, "has_pos",
+            lambda: "pos" in spark.read.parquet(f"{path}/postings").columns,
         ),
     )
-    new_seg = (segs[-1] if segs else BASE_SEG) + 1
 
     # the alive-lookup only needs docs that can collide with the batch:
     # prune every segment's doclens to the batch's id-hash partitions
     dbuckets = [r["dbucket"] for r in base.select("dbucket").distinct().collect()]
-    alive = alive_docs(spark, path, segs, id_col, dbuckets).select(
-        id_col, F.col("dl").alias("_old_dl")
-    )
+    old = _live_lens(
+        spark, path, segs, id_col, fields=None, dbuckets=dbuckets
+    ).withColumnRenamed("dl", "_old_dl")
     # ONE batch-sized materialization carrying everything downstream needs
     enriched = (
         base.select(id_col, F.size("_toks").alias("dl"), "dbucket")
-        .join(alive, id_col, "left")
+        .join(old, id_col, "left")
         .localCheckpoint()
     )
-    statuses = enriched.select(
-        id_col,
-        F.when(F.col("_old_dl").isNotNull(), F.lit(200))
-        .otherwise(F.lit(201))
-        .alias("status"),
-    )
-
-    from azuredatalakeindexer_spark.sources.text_index import _postings_from
-
-    # stage the WHOLE segment + the stats refresh, promote in one
-    # journaled rename pass: a crash mid-write leaves no partial seg=K
-    # directory for list_segments to pick up and no stats drift
-    commit = StagedCommit(spark, path)
-    # a positional base gets positional segments (pos rides through the
-    # LWW resolution and compaction unchanged); has_pos was probed in
-    # layer 0 above
-    new_postings = _postings_from(base, id_col, n_buckets, positions=has_pos)
-    # independent staged writes from checkpointed batch-sized inputs —
-    # submit concurrently so scheduling + dynamic-partition commit
-    # latencies overlap instead of stacking
-    seg_dir = commit.stage("seg")
-
-    def _w_stats() -> None:
-        # exact stats delta: replaced docs swap their dl, created docs add
-        # one.  Derives from the checkpointed enriched frame + the 1-row
-        # live stats — independent of the segment writes, so it rides the
-        # same concurrent submission (r12)
-        n_docs, sum_dl, _pin = _read_segstats(spark, path, id_col)
-        agg = enriched.agg(
-            F.coalesce(F.sum(F.when(F.col("_old_dl").isNull(), 1)), F.lit(0)).alias(
-                "created"
-            ),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("added_dl"),
-            F.coalesce(F.sum("_old_dl"), F.lit(0)).alias("removed_dl"),
-        ).first()
-        _write_stats(
-            spark,
-            path,
-            n_docs + int(agg["created"]),
-            sum_dl + int(agg["added_dl"]) - int(agg["removed_dl"]),
-            _pin if _pin is not None else n_buckets,
-            target=commit.stage("stats"),
-        )
-        commit.swap("stats", "stats")
-
-    run_concurrent(
-        lambda: new_postings.repartition("bucket")
-        .sortWithinPartitions("term")
-        .write.partitionBy("bucket")
-        .parquet(f"{seg_dir}/postings"),
-        lambda: enriched.select(id_col, "dl", "dbucket")
-        .repartition("dbucket")
-        .write.partitionBy("dbucket")
-        .parquet(f"{seg_dir}/doclens"),
-        (
-            lambda: deduped.select(
+    return _land(
+        spark,
+        path,
+        segs,
+        enriched,
+        {
+            # a positional base gets positional segments (pos rides
+            # through the LWW resolution and compaction unchanged)
+            "postings": _postings_from(base, id_col, n_buckets, positions=has_pos),
+            "docstore": deduped.select(
                 F.col(id_col),
                 F.col(text_col).alias("text"),
                 F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("dbucket"),
             )
-            .repartition("dbucket")
-            .write.partitionBy("dbucket")
-            .parquet(f"{seg_dir}/docstore")
-        )
-        if has_store
-        else None,
-        _w_stats,
+            if has_store
+            else None,
+        },
+        _stats_writer(spark, path, id_col, n_buckets),
+        id_col=id_col,
+        fields=None,
     )
-    commit.swap("seg", f"segments/seg={new_seg}")
-    commit.promote()
-    return statuses
 
 
 def delete_from_text_index_segmented(
@@ -735,68 +996,23 @@ def delete_from_text_index_segmented(
     segment count (query cost stays flat until a real mutation lands).
 
     ``broadcast_ids=True`` is the incremental default (a micro-batch's id
-    set is driver-broadcastable).  For bulk purges — a 1% batch of a
+    set is driver-broadcastable; its ids' hashes prune the victim lookup
+    to their doclens dbuckets).  For bulk purges — a 1% batch of a
     10⁹-doc corpus is ~10⁷ ids — pass ``False``: the victim lookup becomes
     a shuffled left-semi join (both sides hash-partition on the id), the
     same fallback ``merge_upsert(broadcast_batch_keys=False)`` provides.
     """
-    from azuredatalakeindexer_spark.sources.staging import (
-        StagedCommit,
-        recover_for_maintenance,
-    )
-
     recover_for_maintenance(spark, path)
-    # docstore-backed indexes need no docstore write here: the tombstone
-    # hides the doc from every query, so its stored text is unreachable
-    # until compaction physically drops it
-    segs = list_segments(spark, path)
-    new_seg = (segs[-1] if segs else BASE_SEG) + 1
-
-    ids = doc_ids.select(id_col).distinct().localCheckpoint()
-    keys = F.broadcast(ids) if broadcast_ids else ids
-    victims = (
-        alive_docs(spark, path, segs, id_col)
-        .join(keys, id_col, "left_semi")
-        .localCheckpoint()
+    return _delete(
+        spark,
+        path,
+        doc_ids,
+        _stats_writer(spark, path, id_col),
+        id_col=id_col,
+        fields=None,
+        n_buckets=_read_segstats(spark, path, id_col)[2],
+        broadcast_ids=broadcast_ids,
     )
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-
-    # ONE aggregate yields both the victim count and the dl sum (ADVICE
-    # r12: the old concurrent pair made an n_removed == 0 redelivery pay
-    # a second Spark job; a single agg is also cheaper on the real path)
-    agg = victims.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-    ).first()
-    n_removed, dl_sum = int(agg["n"]), int(agg["s"])
-    if n_removed == 0:
-        return 0
-    # tombstone only the ACTUAL victims: absent ids carry no information,
-    # and dropping them keeps redelivered mixed batches from resurrecting
-    # nothing while still shrinking the tombstone relation to live hits.
-    # Segment + stats are staged and promoted together (journaled renames);
-    # the two staged writes are independent — submit them concurrently
-    commit = StagedCommit(spark, path)
-
-    def _w_seg() -> None:
-        victims.select(id_col).write.parquet(f"{commit.stage('seg')}/tombstones")
-        commit.swap("seg", f"segments/seg={new_seg}")
-
-    def _w_stats() -> None:
-        n_docs, sum_dl, _pin = _read_segstats(spark, path, id_col)
-        _write_stats(
-            spark,
-            path,
-            n_docs - n_removed,
-            sum_dl - dl_sum,
-            _pin,
-            target=commit.stage("stats"),
-        )
-        commit.swap("stats", "stats")
-
-    run_concurrent(_w_seg, _w_stats)
-    commit.promote()
-    return int(n_removed)
 
 
 def compact_text_index(
@@ -806,151 +1022,103 @@ def compact_text_index(
     id_col: str = "doc_id",
     n_buckets: int = 64,
 ) -> int:
-    """Fold every segment back into the base layout (the LSM compaction):
-    resolve live postings/doclens across all segments, rewrite the base,
-    drop ``segments/``.  Afterwards the index is
-    byte-equivalent in CONTENT to a fresh ``build_text_index`` of the
-    logical corpus (test-pinned) and queries take the segment-free fast
-    path again.  Returns the number of segments folded.
-
-    The new base is written under ``<path>/.staging-*`` and promoted by
-    journaled renames (``sources/staging.py``), so the live directories
-    are never inputs of their own overwrite; a pre-journal crash leaves
-    the segmented index intact, a mid-promotion one rolls forward
-    deterministically from the journal.  The resolved relations are still
-    ``localCheckpoint``-materialized so the LSM resolution runs once, not
-    once per staged relation write.
-    """
-    from azuredatalakeindexer_spark.sources.staging import recover_for_maintenance
-    from azuredatalakeindexer_spark.sources.text_index import _check_n_buckets
-
+    """Fold every segment back into the base layout (the LSM compaction,
+    :func:`_fold`): afterwards the index is byte-equivalent in CONTENT to
+    a fresh ``build_text_index`` of the logical corpus (test-pinned),
+    queries take the segment-free fast path again, and the autocomplete
+    rollup is exact again (refreshed from the resolved live postings).
+    Returns the number of segments folded."""
     recover_for_maintenance(spark, path)
     _check_n_buckets(spark, path, n_buckets, "compact_text_index")
     segs = list_segments(spark, path)
     if not segs:
         return 0
-    merged = (
-        live_postings(spark, path, segs, id_col=id_col)
-        .withColumn("bucket", F.pmod(portable_hash64(F.col("term")), F.lit(n_buckets)))
-        .localCheckpoint()
-    )
-    lens = (
-        alive_docs(spark, path, segs, id_col)
-        .select(
-            id_col,
-            "dl",
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("dbucket"),
-        )
-        .localCheckpoint()
-    )
-    # Everything below is STAGED and promoted by one journaled rename pass
-    # (postings, doclens, stats, terms swap in; segments/ is removed) — a
-    # pre-journal crash leaves the segmented index serving bit-identical
-    # results; a mid-promotion one is rolled forward by the next op or
-    # query-side recovery.
-    #
-    # A fully-tombstoned (or all-zero-token) corpus resolves to 0-row
-    # relations, and a partitioned write of a 0-row frame leaves a
-    # directory with zero data files that cannot be re-read (schema
-    # inference fails on every later query/upsert).  Stage the typed
-    # 0-row UNPARTITIONED sentinel instead: it reads back with the same
-    # columns, so later segments layer on it and a later compaction
-    # writes a partitioned layout again.  Checked per relation — postings
-    # can empty while doclens keeps rows (surviving docs all zero-token).
-    from azuredatalakeindexer_spark.sources.staging import StagedCommit
-    from azuredatalakeindexer_spark.sources.text_index import (
-        _write_stats_from,
-        _write_terms_rollup,
+    return _fold(
+        spark,
+        path,
+        segs,
+        {
+            "stats": lambda merged, lens, t: _write_stats_from(
+                spark, path, lens, n_buckets, target=t
+            ),
+            "terms": lambda merged, lens, t: _write_terms_rollup(
+                spark,
+                path,
+                merged.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
+                target=t,
+            ),
+        },
+        id_col=id_col,
+        n_buckets=n_buckets,
+        fields=None,
     )
 
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 
-    commit = StagedCommit(spark, path)
-    # both resolved relations are checkpointed, so the emptiness probes
-    # are first-partition peeks, and the five staged tier writes below are
-    # mutually independent — submit them concurrently (r12); per-tier
-    # swaps record inside each thunk (disjoint live paths) and promote
-    # stays one sequential rename pass
-    merged_empty, lens_empty = run_concurrent(
-        lambda: merged.isEmpty(), lambda: lens.isEmpty()
+def _drain(
+    spark: SparkSession,
+    docs_dir: str,
+    schema,
+    index_dir: str,
+    checkpoint_dir: str,
+    *,
+    marker: str,
+    build,
+    upsert,
+    compact,
+    known: dict,
+    max_files_per_trigger: int,
+    compact_every: int | None,
+) -> None:
+    """The streaming drain of both layouts: the first micro-batch builds
+    the index (``build(batch)``; ``<index_dir>/<marker>`` is the layout's
+    last-written file, so its existence means a complete base), every
+    later batch lands as a segment (``upsert(spark, batch, known)``) and
+    ``compact_every=N`` folds segments (``compact(spark)``) whenever N
+    have accumulated.  ``availableNow`` drains the backlog and terminates.
+
+    Per-batch fixed work is hoisted OUT of the landing (r15): the drain
+    owns the index directory for its whole run (single-writer lease; each
+    promote completes in-process before the next batch), so the layout
+    facts the build just established — ``known``, plus recovery done and
+    the live segment list, which the drain advances itself — are carried
+    across batches as the upserts' private ``_known`` instead of
+    re-probed.  A RESUMED drain against a pre-existing index carries
+    nothing (full per-batch probes); batch-split invariance is untouched
+    (the carried facts are exactly what the probes would return)."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(docs_dir)
     )
+    state: dict = {"built": False, "known": None}
 
-    def _w_postings() -> None:
-        if merged_empty:
-            merged.write.parquet(commit.stage("postings"))
+    def handle(batch: DataFrame, _batch_id: int) -> None:
+        s = batch.sparkSession
+        # Hadoop FS probe, not os.path — the index may live on abfss/s3/hdfs
+        # where a local-path check is always False and every micro-batch
+        # would take the build path, keeping only the last batch
+        if not state["built"] and not hadoop_path_exists(s, f"{index_dir}/{marker}"):
+            build(batch)
+            state["built"] = True
+            state["known"] = {"recovered": True, "segments": [], **known}
+            return
+        state["built"] = True
+        carried = state["known"]
+        upsert(s, batch, carried).count()
+        if carried is not None:
+            carried["segments"] = carried["segments"] + [_next_seg(carried["segments"])]
+            n_segs = len(carried["segments"])
         else:
-            merged.repartition("bucket").sortWithinPartitions(
-                "term"
-            ).write.partitionBy("bucket").parquet(commit.stage("postings"))
-        commit.swap("postings", "postings")
+            n_segs = len(list_segments(s, index_dir)) if compact_every else 0
+        if compact_every and n_segs >= compact_every:
+            compact(s)
+            if carried is not None:
+                carried["segments"] = []
 
-    def _w_doclens() -> None:
-        if lens_empty:
-            lens.write.parquet(commit.stage("doclens"))
-        else:
-            lens.repartition("dbucket").write.partitionBy("dbucket").parquet(
-                commit.stage("doclens")
-            )
-        commit.swap("doclens", "doclens")
-
-    def _w_stats() -> None:
-        _write_stats_from(spark, path, lens, n_buckets, target=commit.stage("stats"))
-        commit.swap("stats", "stats")
-
-    def _w_terms() -> None:
-        # refresh the autocomplete rollup from the resolved live postings
-        # (already checkpointed): after compaction the rollup is exact
-        # again and segment-free suggest serves purely from it
-        _write_terms_rollup(
-            spark,
-            path,
-            merged.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
-            target=commit.stage("terms"),
-        )
-        commit.swap("terms", "terms")
-
-    def _w_docstore() -> None:
-        # docstore-backed index: fold the segments' stored texts into the
-        # base store — the live text of every ALIVE doc is its max-segment
-        # docstore row (dead docs' texts are physically dropped here)
-        allstore = (
-            spark.read.parquet(f"{path}/docstore")
-            .select(id_col, "text")
-            .withColumn("seg", F.lit(BASE_SEG))
-            .unionByName(
-                _seg_union(
-                    spark,
-                    path,
-                    segs,
-                    "docstore",
-                    f"{id_col} long, text string, dbucket int",
-                ).select(id_col, "text", "seg")
-            )
-        )
-        live_store = (
-            allstore.join(lens.select(id_col), id_col, "left_semi")
-            .groupBy(id_col)
-            .agg(F.max_by("text", "seg").alias("text"))
-            .withColumn(
-                "dbucket",
-                F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)),
-            )
-        )
-        if lens_empty:
-            live_store.write.parquet(commit.stage("docstore"))
-        else:
-            live_store.repartition("dbucket").write.partitionBy(
-                "dbucket"
-            ).parquet(commit.stage("docstore"))
-        commit.swap("docstore", "docstore")
-
-    run_concurrent(
-        _w_postings,
-        _w_doclens,
-        _w_stats,
-        _w_terms,
-        _w_docstore if hadoop_path_exists(spark, f"{path}/docstore") else None,
+    (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    commit.remove("segments")
-    commit.promote()
-    return len(segs)

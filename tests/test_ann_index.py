@@ -1202,3 +1202,52 @@ def test_filtered_saved_index_queries(spark, tmp_path):
     assert found == {one_cell} or one_cell in found and len(found) <= 2, (
         m.group(0), one_cell,
     )
+
+
+def test_upsert_with_nondeterministic_delta_leaves_one_posting_per_id(
+    spark, tmp_path
+):
+    """The victim lookup must see the SAME id set the upsert lands: a
+    delta whose ids come from a nondeterministic UDF (a fresh unseeded
+    draw on every evaluation) is evaluated once, by the checkpoint, and
+    every id keeps exactly one posting afterwards.  Collecting the victim
+    dbuckets from a second evaluation of the caller's expression misses
+    the stale postings of ids that evaluation did not draw."""
+    import random
+
+    from azuredatalakeindexer_spark.sources.ann_index import (
+        build_pq_index,
+        upsert_ivf_index,
+        upsert_pq_index,
+    )
+
+    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    base = emb.where(F.col("vec_id") >= 10)
+    existing = sorted(r["vec_id"] for r in base.select("vec_id").collect())
+    vec = emb.where(F.col("vec_id") == 0).first()["embedding"]
+    draw = F.udf(lambda: random.choice(existing), "long").asNondeterministic()
+    delta = spark.range(8).select(
+        draw().alias("vec_id"),
+        F.array(*[F.lit(float(x)) for x in vec])
+        .cast(emb.schema["embedding"].dataType)
+        .alias("embedding"),
+    )
+
+    def dup_ids(p):
+        return (
+            spark.read.parquet(f"{p}/postings")
+            .groupBy("vec_id")
+            .count()
+            .where(F.col("count") != 1)
+            .count()
+        )
+
+    ivf = str(tmp_path / "ivf")
+    build_ivf_index(base, ivf, n_centroids=16, n_dbuckets=32)
+    upsert_ivf_index(spark, ivf, delta)
+    assert dup_ids(ivf) == 0
+
+    pq = str(tmp_path / "pq")
+    build_pq_index(base, pq, n_centroids=16, m=4, k_pq=16, n_dbuckets=32)
+    upsert_pq_index(spark, pq, delta)
+    assert dup_ids(pq) == 0

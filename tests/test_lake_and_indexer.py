@@ -133,3 +133,77 @@ def test_indexer_run_with_empty_delta_reports_zero_counts(spark, lake):
     assert res.modified_count == 0
     assert res.failed_too_large_count == 0
     assert [r["stringvalue"] for r in res.merged.collect()] == ["kept"]
+
+
+def test_event_drain_then_index_three_ticks(spark, tmp_path):
+    """The paper's loop, three ticks: blob events drain into the path
+    index (``run_event_stream_upsert``), then the indexer reads what
+    changed since the tick's watermark into the data index.  Tick 1 lands
+    every file; tick 2 rewrites one path, which indexes as 1 modified and
+    0 created; tick 3 drains nothing new and is an empty tick.  Deletions
+    are not covered: they do not reach the data index yet."""
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from azuredatalakeindexer_spark.streaming.events import run_event_stream_upsert
+
+    lake = tmp_path / "lake"
+    events = tmp_path / "events"
+    events.mkdir()
+    pi_dir, del_dir, ckpt = (str(tmp_path / n) for n in ("paths", "deleted", "ckpt"))
+    t0 = datetime(2024, 6, 1, tzinfo=timezone.utc)
+    event_schema = "event_id long, eventType string, eventTime timestamp, url string"
+    arrow = pa.schema([
+        ("event_id", pa.int64()), ("eventType", pa.string()),
+        ("eventTime", pa.timestamp("us", tz="UTC")), ("url", pa.string()),
+    ])
+    names = [f"partition_0/customer_{c}/document_{d}.json" for c in range(2) for d in range(3)]
+    next_id = iter(range(1000))
+
+    def write(tick: int, paths: list[str]) -> None:
+        rows = []
+        for p in paths:
+            f = lake / p
+            f.parent.mkdir(parents=True, exist_ok=True)
+            payload = {"stringvalue": f"{p} v{tick}", "numbervalue": tick, "booleanvalue": True}
+            f.write_text(json.dumps(payload))
+            rows.append((next(next_id), "Microsoft.Storage.BlobCreated",
+                         t0 + timedelta(minutes=tick), f"https://acct.dfs.core.windows.net/stuff-large/{p}"))
+        pq.write_table(pa.table(list(map(list, zip(*rows))), schema=arrow),
+                       str(events / f"ev-{tick}.parquet"))
+
+    index = spark.createDataFrame([], "pathbase64 string, stringvalue string, numbervalue int, booleanvalue boolean, eTag string, pathUrlEncoded string, lastModified timestamp")
+
+    def tick(t: int):
+        nonlocal index
+        now = t0 + timedelta(hours=t)
+        run_event_stream_upsert(
+            spark, str(events), spark.createDataFrame([], event_schema).schema,
+            pi_dir, del_dir, ckpt, now=now.isoformat(), shuffle_partitions=2,
+        )
+        res = run_document_indexer(
+            spark, spark.read.parquet(pi_dir), str(lake), index,
+            ListPathsOptions(from_last_modified=now.isoformat()),
+        )
+        res.merged.write.parquet(str(tmp_path / f"data_t{t}"))
+        if res.batch is not None:
+            res.batch.unpersist()
+        index = spark.read.parquet(str(tmp_path / f"data_t{t}"))
+        return res
+
+    write(1, names)
+    r1 = tick(1)
+    assert (r1.paths_count, r1.created_count, r1.modified_count) == (6, 6, 0)
+
+    write(2, names[:1])
+    r2 = tick(2)
+    assert (r2.paths_count, r2.created_count, r2.modified_count) == (1, 0, 1)
+    values = {r["stringvalue"] for r in index.collect()}
+    assert f"{names[0]} v2" in values and f"{names[0]} v1" not in values
+    assert index.count() == 6
+
+    r3 = tick(3)
+    assert (r3.paths_count, r3.created_count, r3.modified_count) == (0, 0, 0)
+    assert index.count() == 6

@@ -705,10 +705,12 @@ def _docstore_scan_lines(plan: str) -> list[str]:
 
 def test_profile_phrase_serving_is_candidate_sized(spark, tmp_path):
     """Phrase predicates must never scan the whole docstore (r13 — closes
-    the r12 perf `weak`): with positive terms present, EVERY docstore
-    FileScan in the served plan — base and each LSM segment — must carry
-    a dbucket PartitionFilter derived from the candidates' id-hash
-    buckets, and the candidate restriction must appear as a semi-join."""
+    the r12 perf `weak`): with positive terms present, the base docstore
+    FileScan must carry a dbucket PartitionFilter derived from the
+    candidates' id-hash buckets, the LSM segments' docstore files read
+    must be exactly those candidates' dbucket directories (segments are
+    pruned at path-selection time by the one multi-path segment read), and
+    the candidate restriction must appear as a semi-join."""
     import re
 
     from azuredatalakeindexer_spark.sources.profile_index import (
@@ -740,18 +742,55 @@ def test_profile_phrase_serving_is_candidate_sized(spark, tmp_path):
         ), ln
     assert "LeftSemi" in plan, plan
 
-    # segmented: base + segment docstores are ALL pruned the same way
+    # segmented: the base docstore scan keeps its PartitionFilter, and
+    # the segment docstore scan reads only the candidates' dbuckets.  Two
+    # odd docs carry a phrase no other doc has, so the candidates' dbuckets
+    # are a strict subset of the segment's docstore directories and an
+    # unpruned segment read is visible in the files the plan scans.
+    marked = [1, 3]
     upsert_profile_index_segmented(
-        spark, path, docs.where(F.col("doc_id") % 2 == 1)
+        spark,
+        path,
+        docs.where(F.col("doc_id") % 2 == 1).withColumn(
+            "text",
+            F.when(
+                F.col("doc_id").isin(marked),
+                F.concat(F.col("text"), F.lit(" zebra quux")),
+            ).otherwise(F.col("text")),
+        ),
     )
-    served = simple_query_profile_from_index(spark, path, query, weights, k=10)
+    served = simple_query_profile_from_index(
+        spark, path, 'zebra +"zebra quux"', weights, k=10
+    )
+    assert sorted(r["doc_id"] for r in served.collect()) == marked
     plan = served._jdf.queryExecution().executedPlan().toString()
     scans = _docstore_scan_lines(plan)
-    assert len(scans) >= 2, plan  # base + at least one segment
-    for ln in scans:
-        assert re.search(
-            r"PartitionFilters: \[[^\]]*dbucket[^\]]*(?:IN|=)", ln
-        ), ln
+    assert len(scans) >= 2, plan  # base + the segments' one scan
+    assert any(
+        re.search(r"PartitionFilters: \[[^\]]*dbucket[^\]]*(?:IN|=)", ln)
+        for ln in scans
+    ), plan
+    wanted = {
+        r["b"]
+        for r in docs.where(F.col("doc_id").isin(marked))
+        .select(F.pmod(F.hash("doc_id"), F.lit(16)).alias("b"))
+        .collect()
+    }
+    on_disk = {
+        int(d.name.split("=")[1])
+        for d in (tmp_path / "pidx" / "segments").glob("seg=*/docstore/dbucket=*")
+    }
+    assert wanted < on_disk, (wanted, on_disk)
+    seg_files = [
+        f for f in served.inputFiles() if "/docstore/" in f and "/seg=" in f
+    ]
+    assert seg_files
+    read = set()
+    for f in seg_files:
+        m = re.search(r"/dbucket=([0-9]+)/", f)
+        assert m, f
+        read.add(int(m.group(1)))
+    assert read == wanted, (read, wanted)
 
 
 def _near_allowed(docs, t1, t2, slop, fields):

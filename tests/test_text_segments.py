@@ -611,6 +611,59 @@ def test_delete_shuffled_fallback_plan(spark, tmp_path):
                 spark.conf.set(k, v)
 
 
+def test_delete_prunes_victim_lookup_to_the_ids_dbuckets(
+    spark, tmp_path, monkeypatch
+):
+    """A broadcast delete reads only the doclens dbuckets its ids hash to,
+    in both layouts, and still removes exactly the live victims."""
+    import pyspark.sql.functions as F
+
+    from azuredatalakeindexer_spark.sources import text_segments as ts
+    from azuredatalakeindexer_spark.sources.profile_index import (
+        build_profile_index,
+    )
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        delete_from_profile_index_segmented,
+        upsert_profile_index_segmented,
+    )
+
+    docs = spark.range(0, 50).select(
+        F.col("id").alias("doc_id"), F.lit("alpha beta gamma").alias("text")
+    )
+    ids = spark.createDataFrame([(3,), (7,), (77,)], "doc_id long")
+    want = sorted(
+        r["b"]
+        for r in ids.select(F.pmod(F.hash("doc_id"), F.lit(16)).alias("b"))
+        .distinct()
+        .collect()
+    )
+    reads = []
+    orig = ts._tier
+
+    def spy(spark_, path_, segs, rel, cols, **kw):
+        reads.append((rel, kw.get("prune")))
+        return orig(spark_, path_, segs, rel, cols, **kw)
+
+    tpath, ppath = str(tmp_path / "ti"), str(tmp_path / "pi")
+    build_text_index(docs.where("doc_id < 25"), tpath, n_buckets=16)
+    upsert_text_index_segmented(
+        spark, tpath, docs.where("doc_id >= 25"), n_buckets=16
+    )
+    build_profile_index(
+        docs.where("doc_id < 25"), ppath, field_cols=["text"], n_buckets=16
+    )
+    upsert_profile_index_segmented(spark, ppath, docs.where("doc_id >= 25"))
+    monkeypatch.setattr(ts, "_tier", spy)
+    for delete, path in (
+        (delete_from_text_index_segmented, tpath),
+        (delete_from_profile_index_segmented, ppath),
+    ):
+        reads.clear()
+        assert delete(spark, path, ids) == 2
+        assert [p for rel, p in reads if rel == "doclens"] == [want], reads
+    assert len(want) < 16
+
+
 def _recount_terms(spark, path):
     """Ground truth: (term, df) recounted from the LIVE postings."""
     import pyspark.sql.functions as F
