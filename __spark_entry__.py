@@ -7065,6 +7065,8 @@ def oracle_sql() -> dict[str, str]:
       FROM events
     """
 
+    # the reference reads only the listed paths (DataLakeIndexer.cs:55-130,
+    # SURVEY §3.1), so the read counters run over `paths`, not the lake
     sqls["indexer_run_metrics"] = f"""
       WITH lake AS ({_DOC_LAKE_SQL}),
       paths AS (
@@ -7072,9 +7074,9 @@ def oracle_sql() -> dict[str, str]:
         WHERE file_lm >= TIMESTAMP '{W}' AND filesystem = 'stuff-large'),
       batch AS (SELECT * FROM paths WHERE parsed_ok)
       SELECT (SELECT count(*) FROM paths) AS pathsCount,
-             (SELECT count(*) FROM lake) AS documentReadCount,
-             (SELECT count(*) FILTER (WHERE NOT parsed_ok) FROM lake) AS documentReadFailedCount,
-             (SELECT count(*) FILTER (WHERE parsed_ok) FROM lake) AS processedCount,
+             (SELECT count(*) FROM paths) AS documentReadCount,
+             (SELECT count(*) FILTER (WHERE NOT parsed_ok) FROM paths) AS documentReadFailedCount,
+             (SELECT count(*) FILTER (WHERE parsed_ok) FROM paths) AS processedCount,
              (SELECT count(*) FILTER (WHERE doc_id % 3 != 0) FROM batch) AS createdCount,
              (SELECT count(*) FILTER (WHERE doc_id % 3 = 0) FROM batch) AS modifiedCount,
              0::BIGINT AS failedTooLargeCount

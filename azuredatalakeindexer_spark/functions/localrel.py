@@ -23,7 +23,12 @@ relations must never route through the driver.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def tiny_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -110,22 +115,24 @@ def read_meta_parquet(spark: SparkSession, target: str) -> "list[dict] | None":
     r15: one SERIAL such job sat in every text maintenance op's
     ``_check_n_buckets`` and every serve's stats/fieldstats read).
 
-    Returns ``None`` when the relation cannot be read this way (missing
-    path, partitioned layout, or any decode surprise) — callers fall back
-    to the ordinary Spark read, so correctness never depends on this fast
-    path.  Use for metadata relations only: a data-sized relation through
-    the driver is the §5 anti-pattern this module's header warns about.
+    Returns ``None`` when the relation cannot be read this way (pyarrow
+    missing, missing path, partitioned layout, or a read or decode
+    failure) — callers fall back to the ordinary Spark read, so
+    correctness never depends on this fast path.  A failure is logged at
+    debug level with its exception class and message.  Use for metadata
+    relations only: a data-sized relation through the driver is the §5
+    anti-pattern this module's header warns about.
     """
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
+    except ImportError as e:
+        _log.debug("read_meta_parquet(%s): no pyarrow, Spark read instead (%s: %s)",
+                   target, type(e).__name__, e)
+        return None
+    from azuredatalakeindexer_spark.sources.staging import _hadoop_fs, _jpath, _read_file
 
-        from azuredatalakeindexer_spark.sources.staging import (
-            _hadoop_fs,
-            _jpath,
-            _read_file,
-        )
-
+    try:
         fs, _ = _hadoop_fs(spark, target)
         dst = _jpath(spark, target)
         if not fs.exists(dst):
@@ -143,5 +150,7 @@ def read_meta_parquet(spark: SparkSession, target: str) -> "list[dict] | None":
         if not tables:
             return None
         return pa.concat_tables(tables, promote_options="default").to_pylist()
-    except Exception:
+    except (Py4JError, OSError, ValueError, TypeError, pa.ArrowException) as e:
+        _log.debug("read_meta_parquet(%s): read failed, Spark read instead (%s: %s)",
+                   target, type(e).__name__, e)
         return None

@@ -9,8 +9,8 @@ action for a key wins.  Spark re-expresses that as:
 1. W1 — collapse each micro-batch to one row per key (newest wins) with a
    ``row_number`` window; Azure Search got this for free by applying actions
    in order (PathIndexerFunc.cs:23-35 upserts whole batches).
-2. J3 — classify created-vs-modified with a left join against existing keys
-   (broadcast when the batch is small, which is the common incremental case).
+2. J3 — classify created-vs-modified with an existence join against the
+   existing keys (an ``IN`` subquery; no distinct of the existing index).
 3. S6 — MERGE = existing rows not overwritten + the deduped batch
    (anti-join + union: shuffle-partitioned by key on both sides, no window
    over the full table).
@@ -56,13 +56,14 @@ def classify_upserts(
     present).  Failures (≥400) are produced upstream by the oversize filter
     (P11) or read errors; this join only sees uploadable rows.
     """
-    keys = existing.select(F.col(key_col).alias(key_col)).distinct().withColumn("_exists", F.lit(1))
+    keys = existing.select(key_col)
     if broadcast_existing_keys:
         keys = F.broadcast(keys)
-    joined = batch.join(keys, key_col, "left")
-    return joined.withColumn(
-        "status", F.when(F.col("_exists").isNotNull(), F.lit(200)).otherwise(F.lit(201))
-    ).drop("_exists")
+    # an IN subquery plans as an existence join: duplicate existing keys
+    # cannot fan batch rows out, so the existing keys need no distinct (a
+    # shuffle of the whole index)
+    present = F.col(key_col).isin(keys)
+    return batch.withColumn("status", F.when(present, F.lit(200)).otherwise(F.lit(201)))
 
 
 def upsert_status_counts(classified: DataFrame) -> DataFrame:

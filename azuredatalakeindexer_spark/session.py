@@ -27,6 +27,15 @@ def get_spark(app_name: str = "adls-indexer", cpus: int | None = None) -> SparkS
         # One shuffle partition per core locally; a cluster keeps its own
         # setting (2-3x total cores) or lets AQE coalesce.
         builder = builder.config("spark.sql.shuffle.partitions", str(cpus))
+        # Same reasoning for listing: above the discovery threshold (512,
+        # below) Spark lists the indexer's explicit file list with a
+        # distributed job of one task per file (up to 10000 by default).
+        # Measured on a 4-core host: 1000 listed files cost 21.5 driver CPU
+        # s uncapped against 4.3 for a recursive scan of the lake; capped at
+        # one task per core, 2.2-3.9 s, and a 10-file tick 0.3-0.8 s.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus)
+        )
         # Local mode defaults to a 1g driver heap regardless of machine
         # size — with N executor threads sharing it, scan/aggregate buffers
         # OOM long before the hardware does (observed at the 5x-replicated

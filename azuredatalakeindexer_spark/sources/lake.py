@@ -10,15 +10,56 @@ driver thread pool / a distributed job
 (``spark.sql.sources.parallelPartitionDiscovery.parallelism``), and the
 ``binaryFile`` / ``json`` readers schedule per-file tasks across executors —
 so both operators are declarative reads here, not custom code.
+
+The indexer never scans the lake: it hands :func:`read_json_documents` the
+files the path index listed (``files=``), which become one brace glob under
+the root, so the parse costs O(delta) however large the lake is (the
+reference downloads exactly the listed paths, DataLakeIndexer.cs:55-130).
+``root`` is a literal directory: it is glob-escaped for the reader and
+stripped from each file's path as a plain string, so a root holding regex
+or glob characters (``+``, ``(``, ``[``, ``$``) still yields ``path``
+relative to it.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from azuredatalakeindexer_spark.functions.keys import url_encode_path
+
+#: Hadoop glob metacharacters (``GlobPattern``), escaped with a backslash
+_GLOB_META = frozenset("\\{}[]*?,")
+
+
+def _relative(path: Column, root: str) -> Column:
+    """``path`` after the first ``root/`` in it, matched as a literal string
+    (``path`` unchanged when ``root/`` does not occur)."""
+    prefix = root.rstrip("/") + "/"
+    at = F.locate(prefix, path)
+    return F.when(at > 0, path.substr(at + len(prefix), F.lit(1 << 30))).otherwise(path)
+
+
+def _glob_escape(s: str, depth: int = 1) -> str:
+    return "".join("\\" * depth + ch if ch in _GLOB_META else ch for ch in s)
+
+
+def _files_glob(root: str, files: list[str]) -> str:
+    """One glob naming exactly ``files`` (relative to ``root``).
+
+    Hadoop expands a ``{...}`` group that holds a ``/`` into one pattern
+    per member before globbing each (``GlobExpander``), and that expansion
+    consumes one level of backslash escapes.  Every member starts with
+    ``/`` so the group always expands, and members carry three
+    backslashes per metacharacter so one escape survives.  A member that
+    matches no file is skipped; only a glob that matches nothing raises.
+    (Spark logs one "Assume no metadata directory" warning per read of a
+    single glob path; it is harmless.)
+    """
+    members = ",".join("/" + _glob_escape(f, depth=3) for f in files)
+    return _glob_escape(root.rstrip("/")) + "{" + members + "}"
 
 
 def list_lake_paths(spark: SparkSession, root: str, glob: str | None = None) -> DataFrame:
@@ -40,8 +81,8 @@ def list_lake_paths(spark: SparkSession, root: str, glob: str | None = None) -> 
     )
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(root)
-    rel = F.regexp_replace(F.col("path"), F.lit("^.*?" + root.rstrip("/") + "/"), F.lit(""))
+    df = reader.load(_glob_escape(root))
+    rel = _relative(F.col("path"), root)
     return df.select(
         rel.alias("path"),
         url_encode_path(rel).alias("pathUrlEncoded"),
@@ -62,8 +103,8 @@ def read_file_contents(spark: SparkSession, root: str, glob: str | None = None) 
     reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(root)
-    rel = F.regexp_replace(F.col("path"), F.lit("^.*?" + root.rstrip("/") + "/"), F.lit(""))
+    df = reader.load(_glob_escape(root))
+    rel = _relative(F.col("path"), root)
     return df.select(
         rel.alias("path"),
         F.col("content"),
@@ -73,7 +114,11 @@ def read_file_contents(spark: SparkSession, root: str, glob: str | None = None) 
 
 
 def read_json_documents(
-    spark: SparkSession, root: str, schema: StructType, glob: str | None = None
+    spark: SparkSession,
+    root: str,
+    schema: StructType,
+    glob: str | None = None,
+    files: list[str] | None = None,
 ) -> DataFrame:
     """S4: schema-on-read JSON parse with per-row fault isolation.
 
@@ -83,9 +128,12 @@ def read_json_documents(
     reproduces that per-row isolation: malformed documents surface as rows
     whose data fields are null and ``_corrupt_record`` is set, which the
     mapper's null-drop (P2) removes while the metrics layer counts them (A2).
-    """
-    from pyspark.sql.types import StringType, StructField
 
+    Without ``files`` every file under ``root`` is parsed.  With ``files``
+    (paths relative to ``root``) only those are; a listed file that does not
+    exist is skipped, so ``len(files) - len(df.inputFiles())`` counts the
+    missing ones — when none exists the result is empty.
+    """
     # build a fresh StructType — StructType.add mutates the receiver
     full = StructType(list(schema.fields) + [StructField("_corrupt_record", StringType(), True)])
     reader = (
@@ -96,8 +144,20 @@ def read_json_documents(
     )
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    df = reader.json(root)
-    rel = F.regexp_replace(
-        F.col("_metadata.file_path"), F.lit("^.*?" + root.rstrip("/") + "/"), F.lit("")
-    )
+
+    def none_found() -> DataFrame:
+        return spark.createDataFrame([], StructType([StructField("path", StringType()), *full.fields]))
+
+    if files is not None and not files:
+        return none_found()
+    try:
+        df = reader.json(_files_glob(root, files) if files is not None else _glob_escape(root))
+    except AnalysisException as e:
+        if files is None or e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return none_found()
+    # _metadata.file_path is a URI (``%20`` for a space, ``%5B`` for ``[``);
+    # decode it before stripping the root ('+' is literal in a URI path)
+    uri = F.col("_metadata.file_path")
+    rel = _relative(F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B"))), root)
     return df.select(rel.alias("path"), "*").drop("_metadata")

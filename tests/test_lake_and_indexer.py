@@ -18,11 +18,9 @@ from azuredatalakeindexer_spark.sources.lake import (
 )
 
 
-@pytest.fixture(scope="module")
-def lake(tmp_path_factory):
+def _write_lake(root) -> str:
     """A small synthetic lake mirroring DataLakeWriter.cs:13-27: JSON docs at
     partition_{i}/customer_{j}/document_{k}.json plus one malformed file."""
-    root = tmp_path_factory.mktemp("lake")
     n = 0
     for p in range(2):
         for c in range(3):
@@ -34,6 +32,29 @@ def lake(tmp_path_factory):
                 n += 1
     (root / "partition_0" / "broken.json").write_text("{not valid json")
     return str(root)
+
+
+@pytest.fixture(scope="module")
+def lake(tmp_path_factory):
+    return _write_lake(tmp_path_factory.mktemp("lake"))
+
+
+def _path_index(spark, lake):
+    """The path index a full listing of ``lake`` gives (P4/P5)."""
+    from azuredatalakeindexer_spark.operators.mapper import listing_to_path_rows
+
+    paths = list_lake_paths(spark, lake, glob="*.json")
+    return listing_to_path_rows(
+        paths.select(
+            F.col("path").alias("name"),
+            F.col("isDirectory"),
+            F.col("fileLastModified").alias("lastModified"),
+        ),
+        now=F.lit("2024-06-01").cast("timestamp"),
+    )
+
+
+_EMPTY_INDEX = "pathbase64 string, stringvalue string, numbervalue int, booleanvalue boolean, eTag string, pathUrlEncoded string, lastModified timestamp"
 
 
 def test_list_lake_paths(spark, lake):
@@ -64,19 +85,9 @@ def test_metadata_listing_does_not_read_content(spark, lake):
     assert "content" not in plan.lower().split("readschema")[-1][:200]
 
 
-def test_full_indexer_run(spark, lake):
-    paths = list_lake_paths(spark, lake, glob="*.json")
-    from azuredatalakeindexer_spark.operators.mapper import listing_to_path_rows
-
-    path_index = listing_to_path_rows(
-        paths.select(
-            F.col("path").alias("name"),
-            F.col("isDirectory"),
-            F.col("fileLastModified").alias("lastModified"),
-        ),
-        now=F.lit("2024-06-01").cast("timestamp"),
-    )
-    existing = spark.createDataFrame([], "pathbase64 string, stringvalue string, numbervalue int, booleanvalue boolean, eTag string, pathUrlEncoded string, lastModified timestamp")
+def _assert_full_run(spark, lake):
+    path_index = _path_index(spark, lake)
+    existing = spark.createDataFrame([], _EMPTY_INDEX)
     res = run_document_indexer(
         spark,
         path_index,
@@ -100,23 +111,93 @@ def test_full_indexer_run(spark, lake):
     assert res2.modified_count == 24
 
 
+def test_full_indexer_run(spark, lake):
+    _assert_full_run(spark, lake)
+
+
+def test_full_indexer_run_under_a_root_with_regex_characters(spark, tmp_path_factory):
+    """The lake root is stripped from file paths as a literal string: a
+    root holding ``+``, ``(``, ``[`` or ``$`` still yields relative paths,
+    so the J1 join matches and the counts equal the plain root's."""
+    root = _write_lake(tmp_path_factory.mktemp("lake+(x)[y]$_"))
+    assert "partition_0/broken.json" in {r["path"] for r in list_lake_paths(spark, root).collect()}
+    assert "partition_0/broken.json" in {
+        r["path"] for r in read_json_documents(spark, root, TEST_INDEX_SCHEMA).select("path").collect()
+    }
+    _assert_full_run(spark, root)
+
+
+def test_indexer_reads_only_the_listed_files(spark, lake, monkeypatch):
+    """O(delta): with 2 of the lake's 25 files past the watermark, the
+    JSON scan reads exactly those 2 files, not the lake."""
+    from urllib.parse import unquote, urlparse
+
+    import azuredatalakeindexer_spark.plans.indexer as indexer
+
+    delta = ["partition_0/customer_1/document_2.json", "partition_1/customer_2/document_0.json"]
+    fresh = F.col("pathUrlEncoded").isin([p.replace("/", "%2f") for p in delta])
+    path_index = _path_index(spark, lake).withColumn(
+        "lastModified",
+        F.when(fresh, F.lit("2024-07-01").cast("timestamp")).otherwise(F.col("lastModified")),
+    )
+    scans = []
+
+    def spy(*args, **kwargs):
+        scans.append(read_json_documents(*args, **kwargs))
+        return scans[-1]
+
+    monkeypatch.setattr(indexer, "read_json_documents", spy)
+    res = run_document_indexer(
+        spark, path_index, lake, spark.createDataFrame([], _EMPTY_INDEX),
+        ListPathsOptions(from_last_modified="2024-06-15"),
+    )
+    assert (res.paths_count, res.document_read_count, res.created_count) == (2, 2, 2)
+    assert res.document_read_failed_count == 0
+    [scan] = scans
+    read = sorted(unquote(urlparse(f).path)[len(lake) + 1:] for f in scan.inputFiles())
+    assert read == sorted(delta)
+
+
+def test_listed_file_that_no_longer_exists_is_a_failed_read(spark, tmp_path):
+    """A path the path index lists but the lake no longer holds counts as
+    a failed read (reference DataLakeIndexer.cs:98-103) and the run goes
+    on; when no listed file exists the run still completes."""
+    import shutil
+
+    root = tmp_path / "lake"
+    names = [f"partition_0/customer_0/document_{d}.json" for d in range(3)]
+    for d, name in enumerate(names):
+        (root / name).parent.mkdir(parents=True, exist_ok=True)
+        payload = {"stringvalue": name, "numbervalue": d, "booleanvalue": True}
+        (root / name).write_text(json.dumps(payload))
+    path_index = _path_index(spark, str(root)).localCheckpoint()
+    (root / names[1]).unlink()
+
+    res = run_document_indexer(
+        spark, path_index, str(root), spark.createDataFrame([], _EMPTY_INDEX), ListPathsOptions()
+    )
+    assert res.paths_count == 3
+    assert res.document_read_count == 3
+    assert res.document_read_failed_count == 1
+    assert res.processed_count == 2
+    assert (res.created_count, res.modified_count) == (2, 0)
+    indexed = {r["pathUrlEncoded"] for r in res.merged.collect()}
+    assert indexed == {names[0].replace("/", "%2f"), names[2].replace("/", "%2f")}
+
+    shutil.rmtree(root / "partition_0")
+    res = run_document_indexer(
+        spark, path_index, str(root), spark.createDataFrame([], _EMPTY_INDEX), ListPathsOptions()
+    )
+    assert (res.paths_count, res.document_read_count, res.document_read_failed_count) == (3, 3, 3)
+    assert (res.processed_count, res.created_count, res.merged.count()) == (0, 0, 0)
+
+
 def test_indexer_run_with_empty_delta_reports_zero_counts(spark, lake):
     """A tick where no path passes the watermark reads nothing and leaves
     the data index as it was."""
-    paths = list_lake_paths(spark, lake, glob="*.json")
-    from azuredatalakeindexer_spark.operators.mapper import listing_to_path_rows
-
-    path_index = listing_to_path_rows(
-        paths.select(
-            F.col("path").alias("name"),
-            F.col("isDirectory"),
-            F.col("fileLastModified").alias("lastModified"),
-        ),
-        now=F.lit("2024-06-01").cast("timestamp"),
-    )
+    path_index = _path_index(spark, lake)
     existing = spark.createDataFrame(
-        [("cGF0aA==", "kept", 1, True, "e", "path", None)],
-        "pathbase64 string, stringvalue string, numbervalue int, booleanvalue boolean, eTag string, pathUrlEncoded string, lastModified timestamp",
+        [("cGF0aA==", "kept", 1, True, "e", "path", None)], _EMPTY_INDEX
     )
     res = run_document_indexer(
         spark,
@@ -174,7 +255,7 @@ def test_event_drain_then_index_three_ticks(spark, tmp_path):
         pq.write_table(pa.table(list(map(list, zip(*rows))), schema=arrow),
                        str(events / f"ev-{tick}.parquet"))
 
-    index = spark.createDataFrame([], "pathbase64 string, stringvalue string, numbervalue int, booleanvalue boolean, eTag string, pathUrlEncoded string, lastModified timestamp")
+    index = spark.createDataFrame([], _EMPTY_INDEX)
 
     def tick(t: int):
         nonlocal index

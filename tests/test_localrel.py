@@ -89,6 +89,24 @@ def test_read_meta_parquet_roundtrip(spark, tmp_path):
     assert read_meta_parquet(spark, r) is None
 
 
+def test_read_meta_parquet_logs_a_decode_failure_before_falling_back(spark, tmp_path, caplog):
+    """A file that is not parquet is a decode failure: the fast path
+    returns None (the caller reads through Spark) and logs the exception
+    class at debug level instead of swallowing it silently."""
+    import logging
+
+    from azuredatalakeindexer_spark.functions.localrel import read_meta_parquet
+
+    bad = tmp_path / "garbled"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_bytes(b"not parquet at all")
+    with caplog.at_level(logging.DEBUG, logger="azuredatalakeindexer_spark.functions.localrel"):
+        assert read_meta_parquet(spark, str(bad)) is None
+    [rec] = [r for r in caplog.records if "read_meta_parquet" in r.getMessage()]
+    assert rec.levelno == logging.DEBUG
+    assert "ArrowInvalid" in rec.getMessage()
+
+
 def test_check_n_buckets_uses_driver_side_read(spark, tmp_path):
     """the stats n_buckets guard must not spend a Spark job (r15): pin
     behavior on a real stats relation — match passes, mismatch raises,
