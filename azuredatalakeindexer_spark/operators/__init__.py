@@ -18,22 +18,11 @@ from azuredatalakeindexer_spark.operators.metrics import doc_count, observe_read
 from azuredatalakeindexer_spark.operators.dedup import (
     connected_components,
     dedup_cluster_assignments,
-    embedding_near_dup_pairs,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_docs,
     simhash_pairs,
-)
-from azuredatalakeindexer_spark.operators.similarity import (
-    brute_force_topk,
-    cosine_expr,
-    lsh_bucketed_topk,
-    pq_encode,
-    learned_pq_codebooks,
-    pq_topk,
-    seed_pq_codebooks,
-    sign_bucket,
 )
 from azuredatalakeindexer_spark.operators.search import (
     bm25_topk,
@@ -43,7 +32,6 @@ from azuredatalakeindexer_spark.operators.search import (
     keyword_snippets,
     wildcard_match_terms,
     wildcard_topk,
-    rrf_fuse,
 )
 from azuredatalakeindexer_spark.operators.textops import (
     fingerprints,
@@ -85,15 +73,6 @@ __all__ = [
     "ngram_jaccard_pairs",
     "simhash_docs",
     "simhash_pairs",
-    "embedding_near_dup_pairs",
-    "brute_force_topk",
-    "pq_encode",
-    "pq_topk",
-    "learned_pq_codebooks",
-    "seed_pq_codebooks",
-    "lsh_bucketed_topk",
-    "cosine_expr",
-    "sign_bucket",
     "language_id",
     "quality_score",
     "token_stats",
@@ -126,5 +105,4 @@ __all__ = [
     "wildcard_topk",
     "facet_counts",
     "keyword_snippets",
-    "rrf_fuse",
 ]

@@ -15,8 +15,7 @@ ONE shuffle of token-count rows hash-partitioned by doc id, a broadcast
 of ``dim`` weights, zero Python.  Training (batch gradient descent) keeps
 the same shape per iteration: score, per-doc error, one groupBy(bucket)
 gradient — the ``dim``-row model round-trips the driver each iteration,
-which is legitimate model traffic (same pattern as
-``similarity.kmeans_centroids``), NOT data movement.
+which is legitimate model traffic, NOT data movement.
 
 The reference has no classifier; this extends its filter family (SURVEY
 §2.2) to the score-and-filter stage every LLM data pipeline needs.  The

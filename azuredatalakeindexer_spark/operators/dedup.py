@@ -373,10 +373,9 @@ def connected_components(
     rounds.
 
     The pair input is typically :func:`minhash_lsh_pairs`,
-    :func:`simhash_pairs`, :func:`ngram_jaccard_pairs`, or
-    :func:`embedding_near_dup_pairs` output; isolated vertices (docs in no
-    pair) are not represented — callers union them back as their own
-    singleton cluster if needed.
+    :func:`simhash_pairs` or :func:`ngram_jaccard_pairs` output; isolated
+    vertices (docs in no pair) are not represented — callers union them
+    back as their own singleton cluster if needed.
     """
     # materialize the (usually expensive) pair pipeline ONCE before the
     # symmetric-closure union — the two union branches would otherwise each
@@ -444,61 +443,6 @@ def dedup_cluster_assignments(
             .cast("int")
             .alias("is_canonical"),
         )
-    )
-
-
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    sign_dims: int = 8,
-    max_bucket_size: int = 64,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs with sign-bucket candidate
-    generation.
-
-    Bucket = the sign pattern of the first ``sign_dims`` dimensions (a fixed
-    axis-aligned random-hyperplane LSH).  Near-identical vectors agree on
-    almost all signs, so true near-dups nearly always share the bucket; the
-    exact cosine filter runs only within buckets.
-
-    Candidates route through :func:`_bounded_bucket_pairs` — the same
-    mega-bucket guard as :func:`minhash_lsh_pairs`/:func:`simhash_pairs`:
-    buckets above ``max_bucket_size`` members (embedding-space boilerplate —
-    e.g. a template page embedded 10⁶ times) emit a linear star around the
-    min-id member instead of the O(m²) clique, so no bucket can blow up the
-    pair count.  The star still connects every near-identical member under
-    the connected-components pass consumers apply next.  The id-only
-    candidate relation is rescored exactly: two hash-joins back to the
-    vector table (bounded by candidate count), so vectors never ride the
-    bucket shuffle or a collect_list.
-
-    Size ``sign_dims`` with the corpus: expected bucket size is
-    ``n / 2^sign_dims`` for isotropic embeddings, so pick
-    ``sign_dims ≈ log2(n / target_bucket_size)`` — e.g. 10⁹ vectors with
-    64-member target buckets wants ~24 sign dims, not the default 8 (a
-    fixture-scale default).  The star guard makes an undersized ``sign_dims``
-    degrade to lower candidate recall per bucket, never to a blown shuffle.
-    """
-    from azuredatalakeindexer_spark.operators.similarity import cosine_expr, sign_bucket
-
-    b = embeddings.select(
-        F.col(id_col),
-        sign_bucket(F.col(vec_col), sign_dims).alias("bucket"),
-    )
-    cand = _bounded_bucket_pairs(b, ["bucket"], id_col, max_bucket_size)
-    va = embeddings.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
-    vb = embeddings.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
-    return (
-        cand.join(va, "a")
-        .join(vb, "b")
-        .select(
-            F.col("a").alias("id_a"),
-            F.col("b").alias("id_b"),
-            F.round(cosine_expr(F.col("_va"), F.col("_vb")), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
     )
 
 
@@ -654,3 +598,4 @@ def cluster_canonical(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
+

@@ -7,7 +7,7 @@ engine — everything else is Catalyst expressions).  The decode libraries
 (PIL/ffmpeg/etc.) are not in this container, so the decode body is STUBBED
 behind ``fake=True`` with a deterministic byte-level feature extractor; the
 Spark-side plumbing — schema, Arrow batch shape, partitioning — is real and
-tested (tests/test_dedup_similarity.py, tests/test_lake_and_indexer.py).
+tested (tests/test_dedup.py, tests/test_lake_and_indexer.py).
 
 At 100 TB the pattern matters more than the stub: binary payloads are read
 with the ``binaryFile`` source (no driver involvement), batches stream

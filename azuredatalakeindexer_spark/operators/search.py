@@ -1,11 +1,11 @@
-"""Query-side search operators: BM25 ranking, facet counts, hybrid RRF
-fusion, and hit highlighting.
+"""Query-side search operators: BM25 ranking, facet counts, and hit
+highlighting.
 
 The reference pushes documents INTO Azure AI Search and delegates the query
-side — BM25 full-text ranking, facets, hybrid keyword+vector retrieval —
-to the service (`AzureSearchIndexer/PathIndexClient.cs:49-92` issues
-`SearchAsync` with filter/order/facet options; the index DDL marks fields
-`searchable`/`facetable`, `SearchIndexerTest/Program.cs:55-66`).  A user
+side — BM25 full-text ranking, facets, highlighting — to the service
+(`AzureSearchIndexer/PathIndexClient.cs:49-92` issues `SearchAsync` with
+filter/order/facet options; the index DDL marks fields `searchable`/
+`facetable`, `SearchIndexerTest/Program.cs:55-66`).  A user
 replacing the reference with this engine needs that query surface too, so
 these operators re-express it Spark-side over the same relations.
 
@@ -22,11 +22,6 @@ All pure Catalyst expressions with exact DuckDB oracles.  Scale shapes:
 - :func:`facet_counts` — one scan, one (field, value) hash aggregate with
   map-side combine; facet-value cardinality bounds the shuffle, and the
   per-field top-n window runs on the tiny post-agg relation.
-- :func:`rrf_fuse` — inputs are per-query top-k relations (k rows each),
-  so the rank windows and the fusion groupBy are driver-scale no matter
-  the corpus size; the expensive part is producing the inputs, which have
-  their own scale paths (bm25_topk above, similarity.brute_force_topk /
-  ivf_topk for the vector leg).
 - :func:`keyword_snippets` — embarrassingly parallel narrow projection.
 """
 
@@ -247,51 +242,6 @@ def facet_ranges(
         .groupBy("field", "range_from", "range_to")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("range_from").asc_nulls_first())
-    )
-
-
-def rrf_fuse(
-    results: Sequence[tuple[DataFrame, str]],
-    *,
-    id_col: str = "doc_id",
-    rrf_k: int = 60,
-    k: int = 20,
-) -> DataFrame:
-    """Reciprocal-Rank-Fusion of several ranked result sets — the hybrid
-    keyword+vector retrieval mode Azure AI Search exposes, re-expressed
-    over this engine's bm25 and ANN legs.
-
-    Each input is ``(df, score_col)``: a per-query candidate relation
-    ranked by ``score_col`` desc (ties on ``id_col`` asc).  Fusion score
-    ``rrf = Σ_legs 1/(rrf_k + rank_leg)`` (standard RRF, k=60 by
-    convention); documents missing from a leg contribute nothing.  Output
-    ``(id_col, rrf, n_legs)`` — rounded to 6 decimals, ranked desc with
-    id-asc tie-break, top ``k``.
-
-    Scale: the legs are already top-k relations (k rows), so the rank
-    windows (single-partition over k rows) and the fusion aggregate are
-    trivially small; never feed a full corpus through this — rank it with
-    the leg operator's own top-k first.
-    """
-    if not results:
-        raise ValueError("rrf_fuse needs at least one ranked input")
-    legs = []
-    for df, score_col in results:
-        w = Window.orderBy(F.col(score_col).desc(), F.col(id_col))
-        legs.append(
-            df.select(F.col(id_col), F.row_number().over(w).alias("_rank"))
-        )
-    union = legs[0]
-    for leg in legs[1:]:
-        union = union.unionByName(leg)
-    return (
-        union.groupBy(id_col)
-        .agg(
-            F.round(F.sum(F.lit(1.0) / (F.lit(float(rrf_k)) + F.col("_rank"))), 6).alias("rrf"),
-            F.count(F.lit(1)).alias("n_legs"),
-        )
-        .orderBy(F.col("rrf").desc(), F.col(id_col))
-        .limit(k)
     )
 
 
@@ -546,8 +496,7 @@ def expand_query_terms(terms: Sequence[str], synonyms: DataFrame) -> list[str]:
 
     ``synonyms`` is a ``(term, synonym)`` relation — model-sized by
     definition (a curated thesaurus), so collecting it to the driver is
-    legitimate model traffic, like the k×d centroid fetch in
-    similarity.kmeans_centroids.  Expansion is query-side only: documents
+    legitimate model traffic.  Expansion is query-side only: documents
     are never rewritten.  Returns the sorted, deduped union of the input
     terms and their mapped synonyms (lowercased) — feed it to
     :func:`bm25_topk` / :func:`scoring_profile_topk`.

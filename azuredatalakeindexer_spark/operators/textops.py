@@ -330,8 +330,7 @@ def chunk_documents(
     """RAG-ingestion chunking: split each document into overlapping
     ``chunk_tokens``-token windows advancing by ``stride = chunk_tokens -
     overlap`` — the standard retrieval-corpus preparation step upstream of
-    embedding + the vector index this engine maintains
-    (sources/ann_index.py), mirroring how the reference's indexer prepares
+    an embedding model, mirroring how the reference's indexer prepares
     documents for the search service (§3.1 read→map→upload, here
     read→chunk→embed→index).
 

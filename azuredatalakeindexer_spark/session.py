@@ -5,7 +5,7 @@ spark-submit and is NOT overridden here (we only set ``.master`` when no
 master is already configured).  The settings below are the ones that matter at
 100 TB scale: AQE for runtime re-planning and skew-join splitting,
 partition-size-driven scan splits, UTC session time, and Arrow for the few
-Pandas-UDF code paths (multimodal decode).
+Pandas-UDF code paths (greedy batch packing, lake writes).
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ def get_spark(app_name: str = "adls-indexer", cpus: int | None = None) -> SparkS
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
         )
-    return (
+    spark = (
         builder
         # AQE: coalesce tiny shuffle partitions, split skewed ones at runtime.
         .config("spark.sql.adaptive.enabled", "true")
@@ -81,7 +81,8 @@ def get_spark(app_name: str = "adls-indexer", cpus: int | None = None) -> SparkS
         # vs a 14 s floor) that vanish under v2 (24 interleaved reps, worst
         # 25.7 s, floors equal or better).  v2's weaker failure semantics
         # (partial output visible if a job dies mid-commit) are safe here:
-        # every persisted-index write lands in a staged directory and only
+        # every persisted-index write (text and profile indexes, path and
+        # deleted-path indexes) lands in a staged directory and only
         # becomes live via the atomic journal promote (sources/staging.py),
         # and on a real cluster object-store committers override this
         # anyway.
@@ -93,3 +94,14 @@ def get_spark(app_name: str = "adls-indexer", cpus: int | None = None) -> SparkS
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # Reading one glob path makes Spark probe it for a streaming-sink
+    # log; the indexer's brace glob has none, and each probe logs a WARN
+    # with a full FileNotFoundException stack trace.  Silence only that
+    # logger (its name moved in Spark 4.1).
+    log4j = spark._jvm.org.apache.logging.log4j
+    for name in (
+        "org.apache.spark.sql.execution.streaming.FileStreamSink",
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+    ):
+        log4j.core.config.Configurator.setLevel(name, log4j.Level.ERROR)
+    return spark

@@ -10,18 +10,6 @@ from azuredatalakeindexer_spark.sources.bucketed import colocated_join, write_bu
 from azuredatalakeindexer_spark.sources.lake import list_lake_paths, read_json_documents
 from azuredatalakeindexer_spark.sources.ddl import create_index_table, index_field_capabilities
 from azuredatalakeindexer_spark.sources.synthetic import generate_paths, write_lake
-from azuredatalakeindexer_spark.sources.ann_index import (
-    build_ivf_index,
-    build_pq_index,
-    delete_from_ivf_index,
-    delete_from_pq_index,
-    query_ivf_index,
-    query_pq_index,
-    run_stream_pq_index,
-    run_stream_ann_index,
-    upsert_ivf_index,
-    upsert_pq_index,
-)
 from azuredatalakeindexer_spark.sources.profile_index import (
     build_profile_index,
     facets_from_index,
@@ -76,16 +64,6 @@ __all__ = [
     "read_jsonl_corpus",
     "read_csv_corpus",
     "split_corrupt",
-    "build_ivf_index",
-    "build_pq_index",
-    "upsert_ivf_index",
-    "delete_from_ivf_index",
-    "upsert_pq_index",
-    "delete_from_pq_index",
-    "query_ivf_index",
-    "query_pq_index",
-    "run_stream_pq_index",
-    "run_stream_ann_index",
     "build_text_index",
     "query_text_index",
     "query_phrase_index",

@@ -15,10 +15,12 @@ The indexer never scans the lake: it hands :func:`read_json_documents` the
 files the path index listed (``files=``), which become one brace glob under
 the root, so the parse costs O(delta) however large the lake is (the
 reference downloads exactly the listed paths, DataLakeIndexer.cs:55-130).
-``root`` is a literal directory: it is glob-escaped for the reader and
-stripped from each file's path as a plain string, so a root holding regex
-or glob characters (``+``, ``(``, ``[``, ``$``) still yields ``path``
-relative to it.
+``root`` is a literal directory: it is qualified once through Hadoop (so
+``/x/lake``, ``file:///x/lake`` and ``abfss://…`` all take the form the
+reader reports file paths in), glob-escaped for the reader and stripped
+from each file's path as a plain string, so a root holding regex or glob
+characters (``+``, ``(``, ``[``, ``$``) still yields ``path`` relative to
+it.
 """
 
 from __future__ import annotations
@@ -29,9 +31,17 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from azuredatalakeindexer_spark.functions.keys import url_encode_path
+from azuredatalakeindexer_spark.sources.staging import _hadoop_fs
 
 #: Hadoop glob metacharacters (``GlobPattern``), escaped with a backslash
 _GLOB_META = frozenset("\\{}[]*?,")
+
+
+def _qualified(spark: SparkSession, root: str) -> str:
+    """``root`` as Hadoop qualifies it (``file:/x/lake`` for ``/x/lake``
+    and ``file:///x/lake``) — the prefix of every file path Spark reports."""
+    fs, path = _hadoop_fs(spark, root)
+    return fs.makeQualified(path).toString()
 
 
 def _relative(path: Column, root: str) -> Column:
@@ -55,8 +65,6 @@ def _files_glob(root: str, files: list[str]) -> str:
     ``/`` so the group always expands, and members carry three
     backslashes per metacharacter so one escape survives.  A member that
     matches no file is skipped; only a glob that matches nothing raises.
-    (Spark logs one "Assume no metadata directory" warning per read of a
-    single glob path; it is harmless.)
     """
     members = ",".join("/" + _glob_escape(f, depth=3) for f in files)
     return _glob_escape(root.rstrip("/")) + "{" + members + "}"
@@ -75,6 +83,7 @@ def list_lake_paths(spark: SparkSession, root: str, glob: str | None = None) -> 
     Column pruning matters: selecting only metadata columns from the
     ``binaryFile`` source never reads file bodies.
     """
+    root = _qualified(spark, root)
     reader = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
@@ -100,6 +109,7 @@ def read_file_contents(spark: SparkSession, root: str, glob: str | None = None) 
     (DataLakeIndexer.cs:82-87); Spark's ``binaryFile`` source is the same
     operation as a distributed scan.
     """
+    root = _qualified(spark, root)
     reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
@@ -134,6 +144,7 @@ def read_json_documents(
     exist is skipped, so ``len(files) - len(df.inputFiles())`` counts the
     missing ones — when none exists the result is empty.
     """
+    root = _qualified(spark, root)
     # build a fresh StructType — StructType.add mutates the receiver
     full = StructType(list(schema.fields) + [StructField("_corrupt_record", StringType(), True)])
     reader = (

@@ -305,8 +305,7 @@ def build_profile_index(
         f"{path}/meta",
     )
     # JSON sidecar: every op learns the layout with one driver-side FS
-    # read instead of a Spark parquet job (same pattern as the ANN
-    # dirmeta.json — r9 verdict wrong-#4 fixed overhead)
+    # read instead of a Spark parquet job
     from azuredatalakeindexer_spark.sources.staging import _write_file_atomic
 
     _write_file_atomic(

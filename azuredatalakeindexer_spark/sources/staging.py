@@ -1,9 +1,9 @@
 """Staged two-phase commit for persisted-index maintenance writes.
 
-WHY.  The incremental maintenance ops (LSM segment writes + compaction,
-IVF/PQ upsert/delete) used to rewrite live partition directories in
-place: a crash mid-sequence could leave a partially-rewritten index —
-some bucket directories new, some old, stats inconsistent with postings.
+WHY.  The incremental maintenance ops (LSM segment writes + compaction)
+used to rewrite live partition directories in place: a crash
+mid-sequence could leave a partially-rewritten index — some bucket
+directories new, some old, stats inconsistent with postings.
 The fix is the standard two-phase layout every table format
 (Delta/Iceberg/Hive-ACID) builds on:
 
@@ -58,8 +58,9 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 class ConcurrentMaintenanceError(RuntimeError):
@@ -420,6 +421,43 @@ def recover_staged(
     return n
 
 
+def _merge_flat_table(
+    spark: SparkSession,
+    root: str,
+    batch: DataFrame,
+    merge: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Replace the flat parquet table at ``root`` with
+    ``merge(existing ∪ batch)`` — or ``batch`` alone while ``root`` holds
+    no table — through one staged commit rooted at ``root``.
+
+    The merge is written under a hidden staging directory, then the
+    journaled promote moves the old files out and the new ones in, so
+    ``spark.read.parquet(root)`` keeps reading a flat table on any Hadoop
+    filesystem.  A crash leaves either the old table plus an orphaned
+    staging (dropped by the next call's recovery) or a journal that the
+    next call rolls forward.
+    """
+    recover_for_maintenance(spark, root)
+    fs, hdir = _hadoop_fs(spark, root)
+    live = [
+        st.getPath().getName()
+        for st in (fs.listStatus(hdir) if fs.exists(hdir) else [])
+        if not st.getPath().getName().startswith(STAGING_PREFIX)
+    ]
+    if any(name.endswith(".parquet") for name in live):
+        batch = merge(spark.read.parquet(root).unionByName(batch))
+    commit = StagedCommit(spark, root)
+    staged = commit.stage("merged")
+    batch.write.parquet(staged)
+    new = [st.getPath().getName() for st in fs.listStatus(_jpath(spark, staged))]
+    for name in sorted(set(live) - set(new)):
+        commit.remove(name)
+    for name in new:
+        commit.swap(f"merged/{name}", name)
+    commit.promote()
+
+
 def recover_for_maintenance(spark: SparkSession, root: str) -> int:
     """Recovery gate every maintenance op runs first: reclaim crashed
     (stale) stagings, REFUSE to run concurrently with a live one."""
@@ -440,6 +478,6 @@ def recover_for_query(spark: SparkSession, root: str) -> int:
 
 def recover_index(spark: SparkSession, root: str) -> int:
     """Admin entry point: finish or discard interrupted maintenance
-    commits on a persisted index (text or IVF/PQ), REGARDLESS of lease
+    commits on a persisted index (text or profile), REGARDLESS of lease
     age — run only when the writer is known dead."""
     return recover_staged(spark, root)

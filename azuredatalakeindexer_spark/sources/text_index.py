@@ -1,4 +1,4 @@
-"""Persisted inverted text index — the BM25 analog of sources/ann_index.py.
+"""Persisted inverted text index.
 
 The reference's entire purpose is MAINTAINING a search index so queries
 never rescan the lake ("querying this index ... is much faster than
@@ -221,10 +221,9 @@ def build_text_index(
 
     Cost: one corpus scan + one (term, doc) aggregate (map-side combined —
     the shuffle carries distinct per-doc terms, not the token stream) +
-    one bucket-partitioned write.  The amortized-away pass, exactly like
-    ``build_ivf_index``.  ``doclens`` is partitioned by an id-hash bucket
-    so incremental upserts rewrite only affected directories, same as the
-    postings.
+    one bucket-partitioned write — the amortized-away pass.  ``doclens``
+    is partitioned by an id-hash bucket so incremental upserts rewrite only
+    affected directories, same as the postings.
 
     ``positions=True`` stores Lucene-style positional postings (sorted
     1-based position lists per (term, doc)) so exact-phrase queries can be
@@ -1397,8 +1396,8 @@ def highlight_from_index(
     (k rows — the service\'s result page, model-sized by construction),
     their dbuckets computed, and the docstore read statically prunes to
     those dbuckets with the id IN-list pushed into the surviving files —
-    the corpus text relation is never scanned (plan-audited in
-    PLANS.md; the scan-time ``search_highlight`` touches every doc).
+    the corpus text relation is never scanned (the scan-time
+    ``search_highlight`` touches every doc).
     """
 
     if not hadoop_path_exists(spark, f"{path}/docstore"):

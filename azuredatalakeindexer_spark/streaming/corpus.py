@@ -25,13 +25,11 @@ against the state partitioned by hash — with the state written bucketed on
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from azuredatalakeindexer_spark.sources.staging import _merge_flat_table
 
 
 def _content_hash(text_col: str) -> F.Column:
@@ -40,23 +38,16 @@ def _content_hash(text_col: str) -> F.Column:
 
 
 def _merge_dedup_state(spark: SparkSession, batch_agg: DataFrame, state_dir: str) -> None:
-    """Associative merge of per-batch dedup aggregates into the state table."""
-    if os.path.isdir(state_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(state_dir)
-    ):
-        existing = spark.read.parquet(state_dir)
-        merged = (
-            existing.unionByName(batch_agg)
-            .groupBy("content_hash")
-            .agg(F.min("doc_id").alias("doc_id"), F.sum("dup_count").alias("dup_count"))
-        )
-    else:
-        merged = batch_agg
-    tmp = state_dir.rstrip("/") + f"__tmp_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(state_dir):
-        shutil.rmtree(state_dir)
-    os.replace(tmp, state_dir)
+    """Associative merge of per-batch dedup aggregates into the state table
+    (landed through a staged commit, ``sources/staging._merge_flat_table``)."""
+    _merge_flat_table(
+        spark,
+        state_dir,
+        batch_agg,
+        lambda both: both.groupBy("content_hash").agg(
+            F.min("doc_id").alias("doc_id"), F.sum("dup_count").alias("dup_count")
+        ),
+    )
 
 
 def run_stream_exact_dedup(
@@ -132,23 +123,14 @@ def _doc_bands(
 
 
 def _merge_band_state(spark: SparkSession, batch_mins: DataFrame, state_dir: str) -> None:
-    """Associative merge of per-batch band-bucket minima into the state."""
-    if os.path.isdir(state_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(state_dir)
-    ):
-        existing = spark.read.parquet(state_dir)
-        merged = (
-            existing.unionByName(batch_mins)
-            .groupBy("band", "bh")
-            .agg(F.min("bmin").alias("bmin"))
-        )
-    else:
-        merged = batch_mins
-    tmp = state_dir.rstrip("/") + f"__tmp_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(state_dir):
-        shutil.rmtree(state_dir)
-    os.replace(tmp, state_dir)
+    """Associative merge of per-batch band-bucket minima into the state
+    (landed through a staged commit, ``sources/staging._merge_flat_table``)."""
+    _merge_flat_table(
+        spark,
+        state_dir,
+        batch_mins,
+        lambda both: both.groupBy("band", "bh").agg(F.min("bmin").alias("bmin")),
+    )
 
 
 def run_stream_minhash_state(

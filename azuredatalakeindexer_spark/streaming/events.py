@@ -13,14 +13,12 @@ same final table no matter how the stream is chopped.  ``availableNow``
 replaces the reference's drain-termination (T7).
 
 Production sink would be Delta ``MERGE INTO``; on plain parquet the merge is
-read → anti-join+union → write-new → atomic swap.
+read → anti-join+union → staged write → journaled promote
+(``sources/staging.py``), so a crash at any point leaves a table the next
+drain recovers, on any Hadoop filesystem.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +30,7 @@ from azuredatalakeindexer_spark.schemas import (
     EVENT_TYPE_BLOB_CREATED,
     EVENT_TYPE_BLOB_DELETED,
 )
+from azuredatalakeindexer_spark.sources.staging import _merge_flat_table
 
 
 def stream_events(spark: SparkSession, events_dir: str, schema: StructType, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -52,22 +51,18 @@ def _merge_batch(spark: SparkSession, rows: DataFrame, target_dir: str) -> None:
     Batch-split invariant: an incoming row replaces an existing row for the
     same key only if (fileLastModified, _seq) is strictly newer — so merging
     {e1} then {e2} equals merging {e1, e2}.
+
+    The merged table lands through one staged commit rooted at
+    ``target_dir`` (``sources/staging._merge_flat_table``).
     """
-    rows = dedup_last_writer(rows, ["key"], "fileLastModified", tiebreak_col="_seq")
-    if os.path.isdir(target_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(target_dir)
-    ):
-        existing = spark.read.parquet(target_dir)
-        merged = dedup_last_writer(
-            existing.unionByName(rows), ["key"], "fileLastModified", tiebreak_col="_seq"
-        )
-    else:
-        merged = rows
-    tmp = target_dir.rstrip("/") + f"__tmp_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(target_dir):
-        shutil.rmtree(target_dir)
-    os.replace(tmp, target_dir)
+    _merge_flat_table(
+        spark,
+        target_dir,
+        dedup_last_writer(rows, ["key"], "fileLastModified", tiebreak_col="_seq"),
+        lambda both: dedup_last_writer(
+            both, ["key"], "fileLastModified", tiebreak_col="_seq"
+        ),
+    )
 
 
 def run_event_stream_upsert(

@@ -19,11 +19,9 @@ passes are kept in the detail file.
 
 The same oracle SQL is timed on DuckDB over the same parquet files so the
 spark/duckdb ratio is a falsifiable per-round number (VERDICT r2 §perf).
-ANN recall@10 of the approximate paths (including the LEARNED k-means
-quantizer) vs the brute-force baseline is reported per round, and the
-persisted-index lifecycle (build vs per-batch upsert/delete vs query) is
-timed separately so incremental maintenance cost is measured, not assumed
-(VERDICT r5 next-#3/#7).
+The persisted-index lifecycle (build vs per-batch upsert/delete vs query)
+is timed separately so incremental maintenance cost is measured, not
+assumed.
 """
 
 from __future__ import annotations
@@ -63,10 +61,6 @@ HEADLINE = [
     "ngram_jaccard",
     "fuzzy_decontam",
     "train_corpus",
-    "embedding_topk",
-    "ann_lsh_topk",
-    "ann_lsh_mt_topk",
-    "ann_ivf_topk",
     "lang_id",
     "quality_score",
     "doc_fingerprints",
@@ -77,13 +71,10 @@ HEADLINE = [
     "span_dedup",
     "events_range_join",
     "classifier_scores",
-    "ann_index_topk",
-    "semantic_dedup",
     "domain_quality_gate",
     "search_bm25",
     "search_phrase",
     "search_near",
-    "search_hybrid_rrf",
     "text_index_topk",
     "bpe_train",
     # persisted-index incremental maintenance (end-to-end registered
@@ -92,8 +83,6 @@ HEADLINE = [
     "text_index_delete_topk",
     "text_index_lsm_topk",
     "stream_text_index",
-    "ann_upsert_topk",
-    "saved_hybrid_search",
     "bpe_pipeline",
     # r8: rollup-served autocomplete + index-served proximity
     "text_index_suggest",
@@ -101,16 +90,12 @@ HEADLINE = [
     # r8: fuzzy + wildcard query surface (one scan-time, one index-served)
     "search_fuzzy",
     "text_index_wildcard",
-    # r8: PQ/ADC — the ANN memory-compression path
-    "ann_pq_topk",
     # r9: multi-field profile index (build+serve and full maintenance
-    # lifecycle), docstore-served highlight, match-set facets, filtered
-    # saved-index vector query (directory cell pre-pruning)
+    # lifecycle), docstore-served highlight, match-set facets
     "text_index_profile_topk",
     "text_index_profile_upsert",
     "text_index_highlight_topk",
     "search_with_facets",
-    "ann_filtered_index_topk",
     # r10: index-served synonym expansion + simple-query syntax (the last
     # scan-time-only search-suite members, now served).  The third r10
     # entry, stream_highlight_lsm, is deliberately NOT headlined: it is a
@@ -158,13 +143,10 @@ LIFECYCLE_QUERIES = {
     "text_index_lsm_topk",
     "text_index_profile_upsert",
     "stream_text_index",
-    "ann_upsert_topk",
-    "saved_hybrid_search",
     "bpe_pipeline",
     "text_index_profile_topk",
     "text_index_highlight_topk",
     "search_with_facets",
-    "ann_filtered_index_topk",
     "text_index_synonyms",
     "text_index_simple_query",
     "text_index_profile_synonyms",
@@ -221,89 +203,6 @@ LIFECYCLE_BENCH_EXCLUDED = {
         "filtered (same segmented read) + text_index_profile_upsert"
     ),
 }
-
-
-def sustained_pq_metrics(spark, sf_dir: str, n_batches: int = 16) -> dict:
-    """Sustained IVF-PQ ingestion (VERDICT r8 stretch-#8 — the curve, not
-    the 1%-batch point): stream the embeddings table into the saved PQ
-    index as ``n_batches`` micro-batches (batch 0 builds, each later
-    batch is an ``upsert_pq_index`` MergeOrUpload bounded by its own
-    affected cells), with BOTH quantizers frozen on the full corpus (the
-    production train-offline regime — the stream only assigns/encodes).
-
-    Reports per-batch upsert seconds (the claim under test: flat in
-    index size — cell-bounded rewrites + the dbucket-pruned directory
-    victim lookup; the index grows ~linearly under it) and the post-batch
-    query seconds (should stay flat too: probed-cell reads only grow with
-    cell size, not batch count).  Enabled via
-    ``SPARK_GRAFT_SUSTAINED_PQ_BATCHES=N`` (a scale study, not a
-    headline query — same discipline as ``sustained_lsm_metrics``).
-    """
-    import pyspark.sql.functions as F
-
-    from azuredatalakeindexer_spark.operators.similarity import (
-        seed_centroids,
-        seed_pq_codebooks,
-    )
-    from azuredatalakeindexer_spark.sources.ann_index import (
-        build_pq_index,
-        query_pq_index,
-        upsert_pq_index,
-    )
-    from azuredatalakeindexer_spark.sources.fixtures import load_table
-
-    out: dict = {
-        "n_batches": n_batches,
-        "upsert_sec": [],
-        "query_sec_by_batch": [],  # [batches applied, seconds]
-        "rows_per_batch": None,
-    }
-    tmp = tempfile.mkdtemp(prefix="bench_sustained_pq_")
-    path = f"{tmp}/pq"
-
-    def timed(fn) -> float:
-        _release_session_state(spark)
-        t0 = time.time()
-        fn()
-        return round(time.time() - t0, 3)
-
-    try:
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        # frozen models go to parquet, NOT localCheckpoint: the per-step
-        # _release_session_state would drop checkpoint blocks mid-run
-        seed_centroids(emb, 16, "embedding", "vec_id", None).write.parquet(
-            f"{tmp}/cents"
-        )
-        seed_pq_codebooks(emb, 4, 16, "embedding", "vec_id").write.parquet(
-            f"{tmp}/cb"
-        )
-        cents = spark.read.parquet(f"{tmp}/cents")
-        cb = spark.read.parquet(f"{tmp}/cb")
-        q = emb.where(F.col("vec_id") < 5)
-        batch = F.pmod(F.hash("vec_id"), F.lit(n_batches))
-        out["rows_per_batch"] = emb.where(batch == 0).count()
-        build_pq_index(
-            emb.where(batch == 0), path,
-            n_centroids=16, m=4, k_pq=16, centroids=cents, codebooks=cb,
-        )
-        for i in range(1, n_batches):
-            delta = emb.where(batch == i)
-            out["upsert_sec"].append(
-                timed(lambda d=delta: upsert_pq_index(spark, path, d).count())
-            )
-            out["query_sec_by_batch"].append(
-                [
-                    i + 1,
-                    timed(
-                        lambda: query_pq_index(
-                            spark, path, q, k=10, n_probe=2, shortlist=50
-                        ).count()
-                    ),
-                ]
-            )
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _above_floor(current_min: float, floor: float | None) -> bool:
@@ -439,148 +338,19 @@ def duckdb_timings(
     return out
 
 
-def ann_recall_metrics(spark, sf_dir: str) -> dict[str, float]:
-    """Recall@10 of each approximate ANN path vs the exact baseline."""
-    import pyspark.sql.functions as F
-
-    from azuredatalakeindexer_spark.operators.similarity import (
-        ann_recall,
-        brute_force_topk,
-        ivf_topk,
-        kmeans_centroids,
-        learned_pq_codebooks,
-        lsh_bucketed_topk,
-        lsh_multitable_topk,
-        pq_topk,
-    )
-    from azuredatalakeindexer_spark.sources.fixtures import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").cache()
-    q = emb.where(F.col("vec_id") < 20)
-    bf = brute_force_topk(emb, q, k=10).cache()
-    bf.count()
-    # sign-LSH's design regime is NEAR-DUP retrieval, and the fixture's
-    # exact top-10 tops out at cosine ~0.5 (no true near-dups), so the
-    # regime metric uses PLANTED pairs: add a deterministic ±0.05
-    # element-wise pattern to 20 corpus vectors (unit-norm 64-dim fixture
-    # → cosine ≈ 0.93 to the source; ADDITIVE so near-zero dims can flip
-    # their sign bit — the case multi-probe exists to recover), query
-    # under fresh ids, and
-    # score whether the source is retrieved in the top-k.  General
-    # weak-cosine top-k belongs to IVF (see lsh_bucketed_topk docs).
-    qid_off = 10_000_000
-    planted = q.select(
-        (F.col("vec_id") + qid_off).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x + 0.05 * F.when((F.col("vec_id") + i) % 2 == 0, 1.0).otherwise(-1.0),
-        ).alias("embedding"),
-    )
-    lsh_planted = lsh_bucketed_topk(emb, planted, k=10, sign_dims=8, n_flip_bits=2)
-    planted_hits = (
-        lsh_planted.where(F.col("neighbor_id") == F.col("query_id") - qid_off).count()
-    )
-    # the learned coarse quantizer — the production IVF path (bench uses
-    # the same config as the documented default, seed quantizer ivf_c32_p4)
-    learned = kmeans_centroids(emb, k=32, iters=8)
-    # HELD-OUT quantizer comparison (r7): the legacy in-sample rows below
-    # use queries vec_id<20, which are THEMSELVES the seed quantizer's
-    # first-32 centroids — each query sits at the center of its own Voronoi
-    # cell, inflating seed recall to ~0.96 by construction (measured: the
-    # same quantizer on disjoint queries drops to ~0.31).  The fair
-    # learned-vs-seed comparison uses queries disjoint from both
-    # quantizers' centroid/seed sources; this fixture is near-isotropic
-    # (mean pairwise cos ≈ 0), so ~0.3-0.45 is the honest recall regime
-    # for ANY 32-cell/4-probe quantizer here.
-    q_ho = emb.where((F.col("vec_id") >= 100) & (F.col("vec_id") < 120))
-    bf_ho = brute_force_topk(emb, q_ho, k=10).cache()
-    bf_ho.count()
-    out = {
-        "lsh_d8_p0": ann_recall(bf, lsh_bucketed_topk(emb, q, k=10, sign_dims=8)),
-        "lsh_d8_f2": ann_recall(
-            bf, lsh_bucketed_topk(emb, q, k=10, sign_dims=8, n_flip_bits=2)
-        ),
-        "lsh_d4_f4": ann_recall(
-            bf, lsh_bucketed_topk(emb, q, k=10, sign_dims=4, n_flip_bits=4)
-        ),
-        "lsh_d8_f2_planted_neardup": planted_hits / q.count(),
-        "lsh_mt_8x8": ann_recall(
-            bf, lsh_multitable_topk(emb, q, k=10, sign_dims=8, n_tables=8)
-        ),
-        "ivf_c16_p2": ann_recall(bf, ivf_topk(emb, q, k=10, n_centroids=16, n_probe=2)),
-        # the documented DEFAULT ANN path: recall >= 0.8 (floor also pinned
-        # in tests/test_dedup_similarity.py::test_ann_recall_floors)
-        "ivf_c32_p4": ann_recall(bf, ivf_topk(emb, q, k=10, n_centroids=32, n_probe=4)),
-        "ivf_learned_c32_p4": ann_recall(
-            bf, ivf_topk(emb, q, k=10, n_centroids=32, n_probe=4, centroids=learned)
-        ),
-        # fair comparison: queries disjoint from the seed set (see note above)
-        "ivf_c32_p4_holdout": ann_recall(
-            bf_ho, ivf_topk(emb, q_ho, k=10, n_centroids=32, n_probe=4)
-        ),
-        "ivf_learned_c32_p4_holdout": ann_recall(
-            bf_ho,
-            ivf_topk(emb, q_ho, k=10, n_centroids=32, n_probe=4, centroids=learned),
-        ),
-        # PQ/ADC with a corpus-proportional shortlist (2%, floor 100):
-        # recall is governed by the shortlist ratio, not |corpus|, and the
-        # rescored cosines are exact — shortlist >= corpus degenerates to
-        # brute force (test-pinned)
-        "pq_m4_k16_s2pct": ann_recall(
-            bf,
-            pq_topk(
-                emb,
-                q,
-                k=10,
-                m=4,
-                k_pq=16,
-                shortlist=max(100, emb.count() // 50),
-            ),
-        ),
-        # trained-vs-seed PQ codebooks on the held-out queries (same
-        # honesty discipline as the ivf_*_holdout rows): Lloyd's per
-        # subspace in L2 — the quantizer the Jégou pipeline trains offline
-        "pq_m4_k16_s2pct_holdout": ann_recall(
-            bf_ho,
-            pq_topk(
-                emb, q_ho, k=10, m=4, k_pq=16,
-                shortlist=max(100, emb.count() // 50),
-            ),
-        ),
-        "pq_learned_m4_k16_s2pct_holdout": ann_recall(
-            bf_ho,
-            pq_topk(
-                emb, q_ho, k=10, m=4, k_pq=16,
-                shortlist=max(100, emb.count() // 50),
-                codebooks=learned_pq_codebooks(emb, m=4, k_pq=16, iters=5),
-            ),
-        ),
-    }
-    bf_ho.unpersist()
-    bf.unpersist()
-    emb.unpersist()
-    return {k: round(v, 3) for k, v in out.items()}
-
-
 def index_lifecycle_metrics(spark, sf_dir: str) -> dict[str, float]:
     """Build-vs-incremental cost split for the persisted indexes.
 
     Incremental maintenance is the reference's entire reason to exist
     (reference README.md:3-4): this measures that a 1%-batch MergeOrUpload
     or delete costs a fraction of the full rebuild (it rewrites only
-    affected bucket/cell partitions) and that serving reads are sub-build
+    affected bucket partitions) and that serving reads are sub-build
     by orders of magnitude.  All timings are SECOND-execution-free (each
     step runs once — the steps are writes, warm-up would mutate state),
     but the session itself is warm by the time this runs.
     """
     import pyspark.sql.functions as F
 
-    from azuredatalakeindexer_spark.sources.ann_index import (
-        build_ivf_index,
-        delete_from_ivf_index,
-        query_ivf_index,
-        upsert_ivf_index,
-    )
     from azuredatalakeindexer_spark.sources.fixtures import load_table
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
@@ -640,56 +410,6 @@ def index_lifecycle_metrics(spark, sf_dir: str) -> dict[str, float]:
         )
         timed("text_seg_compact", lambda: compact_text_index(spark, tpath, n_buckets=64))
 
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        ebase = emb.where(F.col("vec_id") % 100 != 0)
-        edelta = emb.where(F.col("vec_id") % 100 == 0)
-        apath = f"{tmp}/ivf"
-        timed("ann_build_full", lambda: build_ivf_index(ebase, apath, n_centroids=32))
-        timed(
-            "ann_upsert_1pct_batch",
-            lambda: upsert_ivf_index(spark, apath, edelta).count(),
-        )
-        timed(
-            "ann_delete_1pct_batch",
-            lambda: delete_from_ivf_index(spark, apath, edelta.select("vec_id")),
-        )
-        timed(
-            "ann_query_topk",
-            lambda: query_ivf_index(
-                spark, apath, emb.where(F.col("vec_id") < 20), k=10, n_probe=4
-            ).count(),
-        )
-
-        # IVF-PQ: the compressed layout maintains TWO cell-partitioned
-        # tiers (codes + raw postings) per batch, so its maintenance cost
-        # is roughly 2× the IVF rows above — still cell-bounded, still a
-        # fraction of the full rebuild
-        from azuredatalakeindexer_spark.sources.ann_index import (
-            build_pq_index,
-            delete_from_pq_index,
-            query_pq_index,
-            upsert_pq_index,
-        )
-
-        ppath = f"{tmp}/pq"
-        timed(
-            "pq_build_full",
-            lambda: build_pq_index(ebase, ppath, n_centroids=32, m=4, k_pq=16),
-        )
-        timed(
-            "pq_upsert_1pct_batch",
-            lambda: upsert_pq_index(spark, ppath, edelta).count(),
-        )
-        timed(
-            "pq_delete_1pct_batch",
-            lambda: delete_from_pq_index(spark, ppath, edelta.select("vec_id")),
-        )
-        timed(
-            "pq_query_topk",
-            lambda: query_pq_index(
-                spark, ppath, emb.where(F.col("vec_id") < 20), k=10, n_probe=4
-            ).count(),
-        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
@@ -899,7 +619,6 @@ def main() -> None:
         else cold
     )
 
-    recall = ann_recall_metrics(spark, sf_dir)
     lifecycle = index_lifecycle_metrics(spark, sf_dir)
     n_sustained = int(os.environ.get("SPARK_GRAFT_SUSTAINED_BATCHES", "0") or 0)
     sustained = (
@@ -910,14 +629,6 @@ def main() -> None:
             compact_every=int(os.environ.get("SPARK_GRAFT_COMPACT_EVERY", "8")),
         )
         if n_sustained
-        else None
-    )
-    n_sustained_pq = int(
-        os.environ.get("SPARK_GRAFT_SUSTAINED_PQ_BATCHES", "0") or 0
-    )
-    sustained_pq = (
-        sustained_pq_metrics(spark, sf_dir, n_batches=n_sustained_pq)
-        if n_sustained_pq
         else None
     )
 
@@ -944,10 +655,8 @@ def main() -> None:
         "spark_passes": spark_passes,
         "duckdb": duck,
         "duckdb_passes": duck_passes,
-        "ann_recall": recall,
         "index_lifecycle": lifecycle,
         **({"sustained_lsm": sustained} if sustained else {}),
-        **({"sustained_pq": sustained_pq} if sustained_pq else {}),
         "notes": {
             "indexer_run": "Spark side materializes a real JSON lake "
             "(one file per doc) and runs S3/S4 file reads end-to-end; "
@@ -961,9 +670,8 @@ def main() -> None:
             "partitioned_runs / stream_* (VERDICT r6 wrong-#3)",
             "index_lifecycle": "build_full indexes ~99% of the table; "
             "upsert/delete apply a ~1% batch and must be bounded by "
-            "affected cell partitions (IVF/PQ rows) or by the batch "
-            "itself (text segmented/LSM rows; see BENCH_sf10_r07.json for "
-            "the scale crossover)",
+            "the batch itself (text segmented/LSM rows; see "
+            "BENCH_sf10_r07.json for the scale crossover)",
             "headline_composition": f"{len(LIFECYCLE_QUERIES)} of the "
             f"{len(HEADLINE)} headline queries are persisted-index "
             "LIFECYCLE queries (bench.py::LIFECYCLE_QUERIES): each "
@@ -1060,11 +768,9 @@ def main() -> None:
                     for k, v in spark_passes.items()
                     if v.get("above_floor")
                 ),
-                "ann_recall": recall,
-                "index_lifecycle": lifecycle,
+                        "index_lifecycle": lifecycle,
                 **({"sustained_lsm": sustained} if sustained else {}),
-                **({"sustained_pq": sustained_pq} if sustained_pq else {}),
-                "detail": "BENCH_detail.json",
+                        "detail": "BENCH_detail.json",
                 "sf": sf,
             }
         )

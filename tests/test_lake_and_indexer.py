@@ -5,6 +5,7 @@ schema-on-read parse with fault isolation (S4), the J1 join, the mapper
 from __future__ import annotations
 
 import json
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -223,6 +224,17 @@ def test_event_drain_then_index_three_ticks(spark, tmp_path):
     every file; tick 2 rewrites one path, which indexes as 1 modified and
     0 created; tick 3 drains nothing new and is an empty tick.  Deletions
     are not covered: they do not reach the data index yet."""
+    _three_ticks(spark, tmp_path, uri=False)
+
+
+def test_event_drain_then_index_three_ticks_file_uri(spark, tmp_path):
+    """The same three ticks with every directory (lake, events, both path
+    indexes, checkpoint, data index) passed as a ``file://`` URI, the way
+    a Hadoop filesystem such as ADLS is addressed."""
+    _three_ticks(spark, tmp_path, uri=True)
+
+
+def _three_ticks(spark, tmp_path, uri: bool) -> None:
     from datetime import datetime, timedelta, timezone
 
     import pyarrow as pa
@@ -230,10 +242,13 @@ def test_event_drain_then_index_three_ticks(spark, tmp_path):
 
     from azuredatalakeindexer_spark.streaming.events import run_event_stream_upsert
 
+    def loc(name: str) -> str:
+        return f"file://{tmp_path / name}" if uri else str(tmp_path / name)
+
     lake = tmp_path / "lake"
     events = tmp_path / "events"
     events.mkdir()
-    pi_dir, del_dir, ckpt = (str(tmp_path / n) for n in ("paths", "deleted", "ckpt"))
+    pi_dir, del_dir, ckpt = (loc(n) for n in ("paths", "deleted", "ckpt"))
     t0 = datetime(2024, 6, 1, tzinfo=timezone.utc)
     event_schema = "event_id long, eventType string, eventTime timestamp, url string"
     arrow = pa.schema([
@@ -261,17 +276,17 @@ def test_event_drain_then_index_three_ticks(spark, tmp_path):
         nonlocal index
         now = t0 + timedelta(hours=t)
         run_event_stream_upsert(
-            spark, str(events), spark.createDataFrame([], event_schema).schema,
+            spark, loc("events"), spark.createDataFrame([], event_schema).schema,
             pi_dir, del_dir, ckpt, now=now.isoformat(), shuffle_partitions=2,
         )
         res = run_document_indexer(
-            spark, spark.read.parquet(pi_dir), str(lake), index,
+            spark, spark.read.parquet(pi_dir), loc("lake"), index,
             ListPathsOptions(from_last_modified=now.isoformat()),
         )
-        res.merged.write.parquet(str(tmp_path / f"data_t{t}"))
+        res.merged.write.parquet(loc(f"data_t{t}"))
         if res.batch is not None:
             res.batch.unpersist()
-        index = spark.read.parquet(str(tmp_path / f"data_t{t}"))
+        index = spark.read.parquet(loc(f"data_t{t}"))
         return res
 
     write(1, names)
@@ -288,3 +303,84 @@ def test_event_drain_then_index_three_ticks(spark, tmp_path):
     r3 = tick(3)
     assert (r3.paths_count, r3.created_count, r3.modified_count) == (0, 0, 0)
     assert index.count() == 6
+
+
+@pytest.mark.parametrize("crash", ["before_promote", "mid_promote"])
+def test_drain_crash_then_next_drain_gives_lww_table(spark, tmp_path, monkeypatch, crash):
+    """A drain that dies inside its path-index commit — before the promote,
+    or after the journal with only some swaps done — leaves a table the
+    next drain recovers: it drops or rolls forward the staged commit,
+    replays the uncommitted micro-batch, and lands the last-writer-wins
+    table over every event (newest ``eventTime``, ties to the higher
+    event id)."""
+    from datetime import datetime, timedelta, timezone
+    from unittest.mock import patch
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import azuredatalakeindexer_spark.sources.staging as staging
+    from azuredatalakeindexer_spark.streaming.events import run_event_stream_upsert
+
+    # the crashed drain's staging is this process's own: let the next
+    # drain take it over at once instead of waiting out the lease
+    monkeypatch.setattr(staging, "LEASE_TTL_SEC", 0.0)
+    t0 = datetime(2024, 6, 1, tzinfo=timezone.utc)
+    url = "https://acct.dfs.core.windows.net/stuff-large/partition_0/doc_{}.json"
+    # (event id, minutes after t0, doc): doc 1 is rewritten, doc 2 gets an
+    # older late arrival, doc 3 a same-time redelivery with a higher id
+    ticks = [
+        [(0, 0, 0), (1, 0, 1), (2, 5, 2), (3, 1, 3)],
+        [(4, 9, 1), (5, 2, 2), (6, 1, 3), (7, 3, 4)],
+    ]
+    arrow = pa.schema([
+        ("event_id", pa.int64()), ("eventType", pa.string()),
+        ("eventTime", pa.timestamp("us", tz="UTC")), ("url", pa.string()),
+    ])
+    events = tmp_path / "events"
+    events.mkdir()
+    pi_dir, del_dir, ckpt = (str(tmp_path / n) for n in ("paths", "deleted", "ckpt"))
+    schema = spark.createDataFrame(
+        [], "event_id long, eventType string, eventTime timestamp, url string"
+    ).schema
+
+    def land(i: int) -> None:
+        rows = [(e, "Microsoft.Storage.BlobCreated", t0 + timedelta(minutes=m), url.format(d))
+                for e, m, d in ticks[i]]
+        pq.write_table(pa.table(list(map(list, zip(*rows))), schema=arrow),
+                       str(events / f"ev-{i}.parquet"))
+
+    def drain() -> None:
+        run_event_stream_upsert(spark, str(events), schema, pi_dir, del_dir, ckpt,
+                                now=t0.isoformat(), shuffle_partitions=2)
+
+    def winners(n_ticks: int) -> set[int]:
+        best: dict[int, tuple[int, int]] = {}
+        for e, m, d in (ev for t in ticks[:n_ticks] for ev in t):
+            best[d] = max(best.get(d, (m, e)), (m, e))
+        return {e for _, e in best.values()}
+
+    def table_seqs() -> list[int]:
+        return sorted(r["_seq"] for r in spark.read.parquet(pi_dir).collect())
+
+    land(0)
+    drain()
+    assert table_seqs() == sorted(winners(1))
+
+    def partial_exec(spk, root, stage_dir, plan):
+        staging._apply_swaps(spk, root, stage_dir, plan["swaps"][: max(1, len(plan["swaps"]) // 2)])
+        raise RuntimeError("simulated crash mid-promotion")
+
+    land(1)
+    if crash == "before_promote":
+        injected = patch.object(staging.StagedCommit, "promote",
+                                side_effect=RuntimeError("simulated crash before promote"))
+    else:
+        injected = patch.object(staging, "_execute_plan", side_effect=partial_exec)
+    with injected, pytest.raises(Exception, match="simulated crash"):
+        drain()
+    if crash == "before_promote":
+        assert table_seqs() == sorted(winners(1))  # the old table still serves
+    drain()
+    assert table_seqs() == sorted(winners(2))
+    assert not [n for n in os.listdir(pi_dir) if n.startswith(staging.STAGING_PREFIX)]

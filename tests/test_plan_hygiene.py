@@ -1,6 +1,6 @@
 """Repo-wide plan hygiene: NO query may plan a CartesianProduct, and
 BroadcastNestedLoopJoin is allowed only where it is the documented design
-(brute-force scoring of a broadcast query set / broadcast centroid table).
+(a crossJoin of a single-row statistics frame).
 
 This is the standing guarantee behind SCALE.md: candidate generation and
 joins are always equi-keyed at any scale; a regression that sneaks an
@@ -14,18 +14,8 @@ import pytest
 import __spark_entry__ as entrymod
 
 #: BroadcastNestedLoopJoin is the *intended* physical strategy here: the
-#: broadcast side is a bounded query/centroid set, the stream side scans once
+#: broadcast side is a single-row statistics frame, the stream side scans once
 BNLJ_ALLOWED = {
-    "embedding_topk",      # brute-force baseline: broadcast queries over corpus
-    "embedding_topk_np",   # gates the Arrow BLAS top-k against the same
-                           # brute-force broadcast-BNLJ baseline as embedding_topk
-    "embedding_near_dup",  # bucket equi-join + id< predicate can plan BNLJ on tiny fixture
-    "ann_lsh_topk",        # bucket join with explode on broadcast side
-    "ann_ivf_topk",        # broadcast 16-row centroid table (documented crossJoin)
-    "ann_pq_topk",         # broadcast 64-row codebook table (pq_encode build
-                           # pass); ADC + rescore are equi-joins
-    "ann_filtered_topk",   # same assign_cells crossJoin on the filtered corpus
-    "semantic_dedup",      # broadcast 32-row centroid table (same assign_cells crossJoin)
     "run_metrics",         # crossJoin of three SINGLE-ROW aggregate frames
     "events_gapfill",      # crossJoin of a SINGLE-ROW bounds frame (grid seed)
     "value_histogram",     # crossJoin of the SINGLE-ROW global-bounds frame
@@ -38,7 +28,6 @@ BNLJ_ALLOWED = {
     "search_phrase",       # same SINGLE-ROW corpus-stats frame
     "search_near",         # same SINGLE-ROW corpus-stats frame
     "search_near_unordered",  # same SINGLE-ROW corpus-stats frame
-    "search_hybrid_rrf",   # same bm25 stats frame + SINGLE-ROW query vector
     "search_profile",      # same SINGLE-ROW per-field corpus-stats frame
     "search_profile_tags", # same SINGLE-ROW per-field corpus-stats frame
     "search_simple_query", # same bm25 SINGLE-ROW stats frame
@@ -68,14 +57,6 @@ SKIP = {
     "text_index_fuzzy",      # builds the temp index at plan-build time
     "text_index_wildcard",   # builds the temp index at plan-build time
     "text_index_fuzzy_lsm",  # builds the temp index at plan-build time
-    "saved_hybrid_search",
-    "ann_upsert_topk",
-    "ann_delete_topk",
-    "stream_ann_index",
-    "ann_pq_index_topk",     # builds the temp IVF-PQ index at plan-build time
-    "ann_pq_upsert_topk",    # builds + maintains the temp IVF-PQ index
-    "ann_pq_delete_topk",
-    "stream_pq_index",       # drains the stream at plan-build time
     "bpe_train",          # iterative: runs vocabulary jobs while building
     "bpe_encode",         # collects the learned merges at plan-build time
     "stream_sessionize",
@@ -106,16 +87,12 @@ def test_no_allpairs_plans(spark, name):
 
 
 def test_new_sampling_quant_plan_shapes(spark):
-    """Scale pins for the round-4 operators: quantization is a pure narrow
-    scan (zero exchanges), sharding shuffles once on the shard key (plus at
-    most the fixture-parallelism repartition), and temperature_mix joins
-    its broadcast rate table with a BroadcastHashJoin — the corpus side
-    never sort-merge-shuffles."""
+    """Scale pins for the sampling operators: sharding shuffles once on the
+    shard key (plus at most the fixture-parallelism repartition), and
+    temperature_mix joins its broadcast rate table with a BroadcastHashJoin
+    — the corpus side never sort-merge-shuffles."""
     sf = "/root/testdata/sf0.001"
     qs = entrymod.queries()
-
-    plan = qs["embedding_quantize"](spark, sf)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
     plan = qs["shuffle_shards"](spark, sf)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 2

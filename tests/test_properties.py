@@ -158,47 +158,6 @@ def test_connected_components_edge_order_invariant(spark, edges):
 
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
-    st.lists(
-        st.lists(
-            st.floats(min_value=-10, max_value=10, allow_nan=False, width=32),
-            min_size=4,
-            max_size=4,
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_quantize_roundtrip_error_bound_property(spark, vecs):
-    """For arbitrary float vectors: int8 codes stay in range and per-element
-    reconstruction error is within half a quantization step of the
-    per-vector scale."""
-    from azuredatalakeindexer_spark.operators.similarity import (
-        dequantize_embeddings,
-        quantize_embeddings,
-    )
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    q = quantize_embeddings(df, bits=8)
-    deq = dequantize_embeddings(q)
-    joined = df.select("vec_id", F.col("embedding").alias("orig")).join(
-        deq.select("vec_id", "embedding", "scale"), "vec_id"
-    )
-    rows = joined.select(
-        F.array_min(F.col("embedding")).alias("lo"),
-        F.array_max(F.col("embedding")).alias("hi"),
-        F.array_max(
-            F.zip_with("orig", "embedding", lambda a, b: F.abs(a - b) / F.col("scale"))
-        ).alias("rel_err"),
-    ).collect()
-    for r in rows:
-        assert r["rel_err"] <= 0.5 / 127 + 1e-9
-
-
-@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
     st.sets(st.integers(min_value=0, max_value=10_000), min_size=1, max_size=60),
     st.integers(min_value=1, max_value=8),
 )

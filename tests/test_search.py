@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import math
 
-import pyspark.sql.functions as F
 import pytest
 
 from azuredatalakeindexer_spark.operators.search import (
@@ -18,7 +17,6 @@ from azuredatalakeindexer_spark.operators.search import (
     bm25_topk,
     facet_counts,
     keyword_snippets,
-    rrf_fuse,
 )
 
 # Heavyweight lifecycle-integration suite: skipped in the default run so
@@ -107,28 +105,6 @@ def test_facet_counts_stringifies_non_string_columns(spark):
     df = spark.createDataFrame([(1, True), (1, False), (2, True)], "k int, flag boolean")
     out = {(r["field"], r["value"]): r["n"] for r in facet_counts(df, ["k", "flag"]).collect()}
     assert out[("k", "1")] == 2 and out[("flag", "true")] == 2
-
-
-def test_rrf_fuse_hand_computed(spark):
-    # leg A ranks: 10(1), 20(2), 30(3); leg B ranks: 20(1), 40(2)
-    a = spark.createDataFrame([(10, 0.9), (20, 0.8), (30, 0.7)], "doc_id long, s double")
-    b = spark.createDataFrame([(20, 0.99), (40, 0.5)], "doc_id long, s double")
-    out = {r["doc_id"]: (r["rrf"], r["n_legs"]) for r in
-           rrf_fuse([(a, "s"), (b, "s")], k=10).collect()}
-    assert out[20] == (pytest.approx(round(1 / 62 + 1 / 61, 6)), 2)
-    assert out[10] == (pytest.approx(round(1 / 61, 6)), 1)
-    assert out[40] == (pytest.approx(round(1 / 62, 6)), 1)
-    # doc in both legs outranks any single-leg doc here
-    ranked = sorted(out.items(), key=lambda kv: (-kv[1][0], kv[0]))
-    assert ranked[0][0] == 20
-
-
-def test_rrf_fuse_tie_breaks_rank_on_id(spark):
-    # equal scores -> rank order decided by doc_id asc
-    a = spark.createDataFrame([(7, 1.0), (3, 1.0)], "doc_id long, s double")
-    out = {r["doc_id"]: r["rrf"] for r in rrf_fuse([(a, "s")], k=10).collect()}
-    assert out[3] == pytest.approx(round(1 / 61, 6))
-    assert out[7] == pytest.approx(round(1 / 62, 6))
 
 
 def test_keyword_snippets_position_and_window(spark):
@@ -653,3 +629,4 @@ def test_suggest_with_context_disambiguates(spark):
         suggest_with_context(docs, "", "y")
     with _pytest.raises(ValueError):
         suggest_with_context(docs, "new", "")
+

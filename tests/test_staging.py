@@ -154,44 +154,6 @@ def test_mid_promote_crash_rolls_forward_from_journal(spark, tmp_path):
     assert _snapshot(spark, path) == expected
 
 
-def test_ivf_maintenance_abort_and_rollforward(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(staging, "LEASE_TTL_SEC", 0.0)
-    from azuredatalakeindexer_spark.sources.ann_index import (
-        build_ivf_index,
-        delete_from_ivf_index,
-        query_ivf_index,
-        upsert_ivf_index,
-    )
-
-    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    q = emb.where(F.col("vec_id") < 3)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, n_centroids=8)
-
-    def snap():
-        return [tuple(r) for r in
-                query_ivf_index(spark, path, q, k=5, n_probe=2).collect()]
-
-    before = snap()
-    ids = spark.range(5, 25).withColumnRenamed("id", "vec_id")
-    with patch.object(StagedCommit, "promote", side_effect=RuntimeError("boom")):
-        with pytest.raises(RuntimeError):
-            delete_from_ivf_index(spark, path, ids)
-        assert snap() == before
-        delta = emb.where(F.col("vec_id") < 5).select(
-            "vec_id", F.col("embedding")
-        )
-        with pytest.raises(RuntimeError):
-            upsert_ivf_index(spark, path, delta)
-        assert snap() == before
-    # successful delete applies and cleans the orphans
-    n = delete_from_ivf_index(spark, path, ids)
-    assert n == 20
-    assert not _staging_dirs(path)
-    after = snap()
-    assert all(r[1] not in range(5, 25) for r in after)
-
-
 def test_crash_at_every_swap_index_rolls_forward_exactly(spark, tmp_path):
     """Exhaustive crash-point sweep: for EVERY prefix length k of the
     promotion journal (0 = crash right after the journal is durable,
@@ -255,94 +217,6 @@ def _snapshot_b8(spark, path):
     s = [tuple(r) for r in suggest_from_index(spark, path, "w", k=10).collect()]
     st = spark.read.parquet(f"{path}/stats").first()
     return q, s, (st["n_docs"], st["sum_dl"])
-
-
-def test_pq_two_tier_crash_sweep_never_mixes_tiers(spark, tmp_path):
-    """The IVF-PQ upsert rewrites TWO relations (codes + postings) under
-    one journal.  Crash at EVERY journal prefix, recover, and assert the
-    index is exactly the post-op state — in particular that codes and
-    postings hold the same id set at every crash point (an ADC code
-    without its rescore vector, or vice versa, is the corruption the
-    single journal exists to prevent)."""
-    from azuredatalakeindexer_spark.sources.ann_index import (
-        build_pq_index,
-        query_pq_index,
-        upsert_pq_index,
-    )
-
-    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    base = emb.where(F.col("vec_id") >= 10)
-    neg = F.transform(F.col("embedding"), lambda x: -x).alias("embedding")
-    delta = emb.where(F.col("vec_id") < 5).unionByName(
-        emb.where((F.col("vec_id") >= 10) & (F.col("vec_id") < 13)).select(
-            F.col("vec_id"), neg
-        )
-    )
-    q = emb.where(F.col("vec_id") < 3)
-
-    def snap(path):
-        rows = [
-            tuple(r)
-            for r in query_pq_index(
-                spark, path, q, k=5, n_probe=2, shortlist=20
-            ).collect()
-        ]
-        post = sorted(
-            tuple(r)
-            for r in spark.read.parquet(f"{path}/postings")
-            .select("vec_id", "cell")
-            .collect()
-        )
-        codes = sorted(
-            tuple(r)
-            for r in spark.read.parquet(f"{path}/codes")
-            .select("vec_id", "cell")
-            .distinct()
-            .collect()
-        )
-        assert post == codes  # tier sync — at every observation point
-        directory = sorted(
-            tuple(r)
-            for r in spark.read.parquet(f"{path}/directory")
-            .select("vec_id", "cell")
-            .collect()
-        )
-        assert post == directory  # the id→cell lookup rides the journal too
-        return rows, post
-
-    clean = str(tmp_path / "clean")
-    build_pq_index(base, clean, n_centroids=8, m=4, k_pq=16)
-    upsert_pq_index(spark, clean, delta)
-    expected = snap(clean)
-
-    lens = []
-    real_exec = staging._execute_plan
-
-    def count_exec(spk, root, stage_dir, plan):
-        lens.append(len(plan["swaps"]))
-        return real_exec(spk, root, stage_dir, plan)
-
-    probe = str(tmp_path / "probe")
-    build_pq_index(base, probe, n_centroids=8, m=4, k_pq=16)
-    with patch.object(staging, "_execute_plan", side_effect=count_exec):
-        upsert_pq_index(spark, probe, delta)
-    n_swaps = lens[0]
-    assert n_swaps >= 2  # at least one postings and one codes swap
-    assert snap(probe) == expected
-
-    for k in range(n_swaps + 1):
-        path = str(tmp_path / f"k{k}")
-        build_pq_index(base, path, n_centroids=8, m=4, k_pq=16)
-
-        def partial(spk, root, stage_dir, plan, _k=k):
-            staging._apply_swaps(spk, root, stage_dir, plan["swaps"][:_k])
-            raise RuntimeError("crash")
-
-        with patch.object(staging, "_execute_plan", side_effect=partial):
-            with pytest.raises(RuntimeError, match="crash"):
-                upsert_pq_index(spark, path, delta)
-        assert recover_staged(spark, path) == 1
-        assert snap(path) == expected, f"crash at swap {k}"
 
 
 def test_second_writer_refuses_while_lease_live(spark, tmp_path):
@@ -535,3 +409,4 @@ def test_scattered_swap_subset_rolls_forward_exactly(spark, tmp_path):
         assert recover_staged(spark, path) == 1
         assert not _staging_dirs(path)
         assert _snapshot_b8(spark, path) == expected, f"parity {parity}"
+

@@ -1,15 +1,13 @@
 """Attribute the per-batch fixed overhead of the index maintenance ops.
 
-The r9 verdict (What's-wrong #4) flagged a driver-to-driver doubling of
-``ann_upsert_topk`` (6.48 → 13.53 s) after the round added lease writes,
-recover probes, atomic journal writes, and ``_dedupe_vec_delta`` — each
-metadata-class alone, unmeasured together.  This tool times one
-build→upsert→query lifecycle at the given SF dir and attributes wall time
-to the instrumented components (monkeypatched timers + Spark job counts
-per phase), so a regression can be pinned to a component instead of
-guessed at.
+Lease writes, recover probes and atomic journal writes are each
+metadata-class alone, but together they can double a small batch's
+maintenance cost.  This tool times one build→upsert→query lifecycle at the
+given SF dir and attributes wall time to the instrumented components
+(monkeypatched timers + Spark job counts per phase), so a regression can
+be pinned to a component instead of guessed at.
 
-Usage:  python tools/profile_maintenance.py [sf_dir] [ann|text|profile]
+Usage:  python tools/profile_maintenance.py [sf_dir] [text|profile]
 """
 
 from __future__ import annotations
@@ -43,7 +41,7 @@ def _timed(label, fn):
 
 
 def _patch_all():
-    from azuredatalakeindexer_spark.sources import ann_index, staging
+    from azuredatalakeindexer_spark.sources import staging
 
     staging.recover_staged = _timed("recover_staged", staging.recover_staged)
     staging._write_file_atomic = _timed(
@@ -51,9 +49,6 @@ def _patch_all():
     )
     staging.StagedCommit.promote = _timed(
         "StagedCommit.promote", staging.StagedCommit.promote
-    )
-    ann_index._dedupe_vec_delta = _timed(
-        "_dedupe_vec_delta(expr only)", ann_index._dedupe_vec_delta
     )
     # Spark 4: instances are pyspark.sql.classic.dataframe.DataFrame, which
     # OVERRIDES the pyspark.sql.DataFrame base methods — patch the classic
@@ -90,7 +85,7 @@ def _phase(sc, label, fn):
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    which = sys.argv[2] if len(sys.argv) > 2 else "ann"
+    which = sys.argv[2] if len(sys.argv) > 2 else "text"
     _patch_all()
 
     from azuredatalakeindexer_spark.session import get_spark
@@ -99,36 +94,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    if which == "ann":
-        from azuredatalakeindexer_spark.sources.ann_index import (
-            build_ivf_index,
-            query_ivf_index,
-            upsert_ivf_index,
-        )
-
-        emb = spark.read.parquet(f"{sf}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-        base = emb.where(F.col("vec_id") >= 10)
-        neg = F.transform(F.col("embedding"), lambda x: -x).alias("embedding")
-        delta = emb.where(F.col("vec_id") < 10).unionByName(
-            emb.where((F.col("vec_id") >= 10) & (F.col("vec_id") < 15)).select(
-                F.col("vec_id"), neg
-            )
-        )
-        q = emb.where(F.col("vec_id") < 5)
-        root = tempfile.mkdtemp(prefix="prof_ivf_")
-        try:
-            _phase(sc, "build", lambda: build_ivf_index(base, root, n_centroids=16))
-            _phase(sc, "upsert", lambda: upsert_ivf_index(spark, root, delta))
-            _phase(
-                sc,
-                "query",
-                lambda: query_ivf_index(spark, root, q, k=5, n_probe=2).count(),
-            )
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-    elif which == "text":
+    if which == "text":
         from azuredatalakeindexer_spark.sources.text_index import (
             build_text_index,
             query_text_index,
