@@ -2774,7 +2774,7 @@ def _stream_run(spark, sf, target: str) -> DataFrame:
         ckpt = os.path.join(root, "ckpt")
         run_event_stream_upsert(
             spark, events_dir, schema, pi_dir, del_dir, ckpt, now=W,
-            max_files_per_trigger=1, shuffle_partitions=8,
+            max_files_per_trigger=1,
         )
         # persist BOTH indexes before the temp dir disappears, return lazy
         # reads — at real scale "one row per lake file" is the unbounded

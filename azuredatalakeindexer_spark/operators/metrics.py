@@ -1,4 +1,4 @@
-"""Run metrics (A2, A3, A4, A6) — `observe()`-based counters.
+"""Run metrics (A2, A3, A6) — `observe()`-based counters.
 
 The reference threads seven counters through its pipeline
 (``IndexerRunMetrics``: reference Models/IndexerRunMetrics.cs:3-12, assembled
@@ -70,8 +70,3 @@ def doc_count(df: DataFrame) -> int:
     """A6/S9: index cardinality (reference Program.cs:81-82)."""
     return df.count()
 
-
-def throughput(count: int, elapsed_sec: float) -> float:
-    """A4: docs/sec metric (reference PathIndexClient.cs:58-61,
-    DataLakeIndexer.cs:69) — instrumentation, not a query operator."""
-    return count / elapsed_sec if elapsed_sec > 0 else float("inf")

@@ -1,9 +1,9 @@
-"""Schemas for the engine's four logical tables (SURVEY §1).
+"""Schemas for the engine's logical tables (SURVEY §1).
 
 Reference shapes:
 - ``PathIndexModel``  -> reference AzureSearchIndexer/IndexDefinitions/PathIndexModel.cs:9-26
 - ``TestIndexModel`` / ``SomeOtherIndexModel`` -> reference IndexModels/TextIndexModel.cs:5-34
-- ``BlobEvent``       -> reference DatalakePathIndexerFunc/BlobEventModel.cs:5-102
+- blob event types   -> reference DatalakePathIndexerFunc/BlobEventModel.cs:5-102
 
 Field capabilities (key/searchable/filterable/sortable/facetable/analyzer) are
 carried as ``StructField.metadata`` — in Spark they are planning hints, not
@@ -15,10 +15,8 @@ filterable/sortable is natively so in a DataFrame.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -65,55 +63,7 @@ DATA_INDEX_SCHEMA = StructType(
     ]
 )
 
-# --- blob event (Event Grid message; BlobEventModel.cs:5-102) ---------------
-ACL_SCHEMA = StructType(
-    [
-        StructField("access", StringType(), True),
-        StructField("permission", StringType(), True),
-        StructField("owner", StringType(), True),
-        StructField("group", StringType(), True),
-    ]
-)
-
-BLOB_EVENT_DATA_SCHEMA = StructType(
-    [
-        StructField("api", StringType(), True),
-        StructField("clientRequestId", StringType(), True),
-        StructField("requestId", StringType(), True),
-        StructField("eTag", StringType(), True),
-        StructField("contentType", StringType(), True),
-        StructField("contentLength", LongType(), True),
-        StructField("contentOffset", LongType(), True),
-        StructField("blobType", StringType(), True),
-        StructField("blobUrl", StringType(), True),
-        StructField("url", StringType(), True),
-        StructField("sequencer", StringType(), True),
-        StructField("identity", StringType(), True),
-        StructField(
-            "blobProperties",
-            ArrayType(StructType([StructField("acl", ArrayType(ACL_SCHEMA), True)])),
-            True,
-        ),
-        StructField(
-            "storageDiagnostics",
-            StructType([StructField("batchId", StringType(), True)]),
-            True,
-        ),
-    ]
-)
-
-BLOB_EVENT_SCHEMA = StructType(
-    [
-        StructField("topic", StringType(), True),
-        StructField("subject", StringType(), True),
-        StructField("eventType", StringType(), False),
-        StructField("id", StringType(), True),
-        StructField("dataVersion", StringType(), True),
-        StructField("metadataVersion", StringType(), True),
-        StructField("eventTime", TimestampType(), True),
-        StructField("data", BLOB_EVENT_DATA_SCHEMA, True),
-    ]
-)
-
+# --- blob event types (Event Grid message; BlobEventModel.cs:5-102) ------
+# the drain reads flat (event_id, eventType, eventTime, url) rows (streaming/events.py)
 EVENT_TYPE_BLOB_CREATED = "Microsoft.Storage.BlobCreated"
 EVENT_TYPE_BLOB_DELETED = "Microsoft.Storage.BlobDeleted"

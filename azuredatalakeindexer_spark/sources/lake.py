@@ -1,5 +1,5 @@
-"""Lake sources: recursive listing (S1), file-content read (S3), JSON parse
-(S4).
+"""Lake sources: recursive listing (S1), the read of the listed files (S3)
+and their JSON parse (S4).
 
 The reference hand-rolls a parallel BFS over directories with a bounded
 work-queue (≤256 concurrent listing calls, reference
@@ -96,28 +96,6 @@ def list_lake_paths(spark: SparkSession, root: str, glob: str | None = None) -> 
         rel.alias("path"),
         url_encode_path(rel).alias("pathUrlEncoded"),
         F.lit(False).alias("isDirectory"),
-        F.col("modificationTime").alias("fileLastModified"),
-        F.col("length"),
-    )
-
-
-def read_file_contents(spark: SparkSession, root: str, glob: str | None = None) -> DataFrame:
-    """S3: per-file content read → ``(path, content binary, fileLastModified,
-    length)``.
-
-    The reference downloads each blob inside a semaphore-bounded task
-    (DataLakeIndexer.cs:82-87); Spark's ``binaryFile`` source is the same
-    operation as a distributed scan.
-    """
-    root = _qualified(spark, root)
-    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(_glob_escape(root))
-    rel = _relative(F.col("path"), root)
-    return df.select(
-        rel.alias("path"),
-        F.col("content"),
         F.col("modificationTime").alias("fileLastModified"),
         F.col("length"),
     )

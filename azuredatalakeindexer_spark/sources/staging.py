@@ -428,8 +428,15 @@ def _merge_flat_table(
     merge: Callable[[DataFrame], DataFrame],
 ) -> None:
     """Replace the flat parquet table at ``root`` with
-    ``merge(existing ∪ batch)`` — or ``batch`` alone while ``root`` holds
+    ``merge(existing ∪ batch)`` — or ``merge(batch)`` while ``root`` holds
     no table — through one staged commit rooted at ``root``.
+
+    ``merge`` must give the same result whether or not the batch was
+    merged first (a last-writer-wins window, an associative aggregate),
+    so callers pass the raw batch and one merge pass both resolves the
+    batch's own duplicate keys and combines it with the table.  The table
+    is only ever written by this function from a batch of the same shape,
+    so it is read back with ``batch.schema``: no schema-inference job.
 
     The merge is written under a hidden staging directory, then the
     journaled promote moves the old files out and the new ones in, so
@@ -446,10 +453,10 @@ def _merge_flat_table(
         if not st.getPath().getName().startswith(STAGING_PREFIX)
     ]
     if any(name.endswith(".parquet") for name in live):
-        batch = merge(spark.read.parquet(root).unionByName(batch))
+        batch = spark.read.schema(batch.schema).parquet(root).unionByName(batch)
     commit = StagedCommit(spark, root)
     staged = commit.stage("merged")
-    batch.write.parquet(staged)
+    merge(batch).write.parquet(staged)
     new = [st.getPath().getName() for st in fs.listStatus(_jpath(spark, staged))]
     for name in sorted(set(live) - set(new)):
         commit.remove(name)

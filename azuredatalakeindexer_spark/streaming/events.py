@@ -12,10 +12,13 @@ so the merge is written to be batch-split-invariant: last-writer-wins compares
 same final table no matter how the stream is chopped.  ``availableNow``
 replaces the reference's drain-termination (T7).
 
-Production sink would be Delta ``MERGE INTO``; on plain parquet the merge is
-read → anti-join+union → staged write → journaled promote
-(``sources/staging.py``), so a crash at any point leaves a table the next
-drain recovers, on any Hadoop filesystem.
+Production sink would be Delta ``MERGE INTO``; on plain parquet each
+micro-batch lands each index as read (with the batch's own schema, so no
+inference job) → union → one LWW window → staged write → journaled promote
+(``sources/staging.py``): one shuffle and one write per index, and a crash
+at any point leaves a table the next drain recovers, on any Hadoop
+filesystem.  The first batch into an empty index gets the same window
+alone.
 """
 
 from __future__ import annotations
@@ -46,19 +49,23 @@ def stream_events(spark: SparkSession, events_dir: str, schema: StructType, max_
 
 
 def _merge_batch(spark: SparkSession, rows: DataFrame, target_dir: str) -> None:
-    """LWW merge of deduped path rows into a parquet table (S6 on files).
+    """LWW merge of raw path rows into a parquet table (S6 on files).
 
-    Batch-split invariant: an incoming row replaces an existing row for the
-    same key only if (fileLastModified, _seq) is strictly newer — so merging
-    {e1} then {e2} equals merging {e1, e2}.
+    One ``dedup_last_writer`` window over ``existing ∪ rows`` (or over
+    ``rows`` alone while the table is empty) keeps, per key, the row with
+    the newest (fileLastModified, _seq).  That resolves the batch's own
+    duplicate keys and its conflicts with the table in the same shuffle,
+    and it is batch-split invariant: merging {e1} then {e2} equals merging
+    {e1, e2}.
 
-    The merged table lands through one staged commit rooted at
-    ``target_dir`` (``sources/staging._merge_flat_table``).
+    The existing table is read with ``rows``' schema and the merged table
+    lands through one staged commit rooted at ``target_dir``
+    (``sources/staging._merge_flat_table``).
     """
     _merge_flat_table(
         spark,
         target_dir,
-        dedup_last_writer(rows, ["key"], "fileLastModified", tiebreak_col="_seq"),
+        rows,
         lambda both: dedup_last_writer(
             both, ["key"], "fileLastModified", tiebreak_col="_seq"
         ),
@@ -74,7 +81,6 @@ def run_event_stream_upsert(
     checkpoint_dir: str,
     now: str | None = None,
     max_files_per_trigger: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> None:
     """T1+T2: drain the event stream (availableNow) into the path index and
     the deleted-path index (reference PathIndexerFunc.cs:18-74).
@@ -82,45 +88,21 @@ def run_event_stream_upsert(
     ``now`` pins the F9 ``lastModified`` stamp for deterministic tests (the
     reference stamps ``DateTimeOffset.UtcNow``, PathIndexerFunc.cs:22).
 
-    ``shuffle_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    drain (restored afterwards): every micro-batch rewrites the merged index
-    with one file per shuffle partition, so a session-default 200 turns each
-    LWW merge into 200 tiny parquet writes.  Size it to the index volume.
+    Each micro-batch rewrites each index through one LWW shuffle; AQE
+    coalescing (on in ``session.get_spark``) sizes that shuffle's output
+    to the index, so the drain sets no partition count of its own.
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        _run_upsert_drain(
-            spark, events_dir, schema, path_index_dir, deleted_index_dir,
-            checkpoint_dir, now, max_files_per_trigger,
-        )
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _run_upsert_drain(
-    spark: SparkSession,
-    events_dir: str,
-    schema: StructType,
-    path_index_dir: str,
-    deleted_index_dir: str,
-    checkpoint_dir: str,
-    now: str | None,
-    max_files_per_trigger: int | None,
-) -> None:
     stream = stream_events(spark, events_dir, schema, max_files_per_trigger)
     stamp = F.lit(now).cast("timestamp") if now else F.current_timestamp()
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
-        batch = batch.cache()
+        # no cache: each index's shuffle map stage scans the micro-batch's
+        # event files itself, which is cheaper than a job to materialize them
         created = batch.where(F.col("eventType") == EVENT_TYPE_BLOB_CREATED)
         deleted = batch.where(F.col("eventType") == EVENT_TYPE_BLOB_DELETED)
         for df, target in ((created, path_index_dir), (deleted, deleted_index_dir)):
             rows = events_to_path_rows(df, now=stamp, seq_col="event_id")
             _merge_batch(batch.sparkSession, rows, target)
-        batch.unpersist()
 
     (
         stream.writeStream.foreachBatch(handle)

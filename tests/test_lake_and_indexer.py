@@ -277,7 +277,7 @@ def _three_ticks(spark, tmp_path, uri: bool) -> None:
         now = t0 + timedelta(hours=t)
         run_event_stream_upsert(
             spark, loc("events"), spark.createDataFrame([], event_schema).schema,
-            pi_dir, del_dir, ckpt, now=now.isoformat(), shuffle_partitions=2,
+            pi_dir, del_dir, ckpt, now=now.isoformat(),
         )
         res = run_document_indexer(
             spark, spark.read.parquet(pi_dir), loc("lake"), index,
@@ -303,6 +303,78 @@ def _three_ticks(spark, tmp_path, uri: bool) -> None:
     r3 = tick(3)
     assert (r3.paths_count, r3.created_count, r3.modified_count) == (0, 0, 0)
     assert index.count() == 6
+
+
+def test_drain_lands_lww_tables_in_one_shuffle_per_index(spark, tmp_path):
+    """Two micro-batches of created and deleted events, each holding
+    duplicate keys, drain first into empty indexes and then into the
+    tables the first drain wrote.  After each drain both indexes equal the
+    last-writer-wins model (newest ``eventTime``, ties to the higher event
+    id), and the second drain costs one shuffle and one write per index:
+    at most 4 Spark jobs."""
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from azuredatalakeindexer_spark.streaming.events import run_event_stream_upsert
+
+    created, deleted = "Microsoft.Storage.BlobCreated", "Microsoft.Storage.BlobDeleted"
+    t0 = datetime(2024, 6, 1, tzinfo=timezone.utc)
+    url = "https://acct.dfs.core.windows.net/stuff-large/partition_0/doc_{}.json"
+    # (event id, type, minutes after t0, doc).  Batch 1: doc 1 repeats with
+    # an older eventTime, doc 2 with the same eventTime and a higher id, and
+    # doc 5 is deleted twice.  Batch 2 rewrites doc 1, sends doc 2 a late
+    # (older) arrival, ties doc 3 with a higher id, adds doc 4 and deletes
+    # doc 5 again and doc 6 once.
+    batches = [
+        [(10, created, 5, 1), (11, created, 3, 1), (12, created, 4, 2),
+         (13, created, 4, 2), (14, created, 2, 3), (15, deleted, 6, 5),
+         (16, deleted, 7, 5), (9, created, 1, 3)],
+        [(20, created, 9, 1), (21, created, 1, 2), (22, created, 2, 3),
+         (23, created, 8, 4), (24, deleted, 6, 5), (25, deleted, 8, 6)],
+    ]
+    arrow = pa.schema([
+        ("event_id", pa.int64()), ("eventType", pa.string()),
+        ("eventTime", pa.timestamp("us", tz="UTC")), ("url", pa.string()),
+    ])
+    events = tmp_path / "events"
+    events.mkdir()
+    pi_dir, del_dir, ckpt = (str(tmp_path / n) for n in ("paths", "deleted", "ckpt"))
+    schema = spark.createDataFrame(
+        [], "event_id long, eventType string, eventTime timestamp, url string"
+    ).schema
+    epoch0 = int(t0.timestamp())
+
+    def model(n: int, kind: str) -> set[tuple[int, int]]:
+        best: dict[int, tuple[int, int]] = {}
+        for e, k, m, d in (ev for b in batches[:n] for ev in b):
+            if k == kind:
+                best[d] = max(best.get(d, (m, e)), (m, e))
+        return {(e, epoch0 + 60 * m) for m, e in best.values()}
+
+    def table(d: str) -> set[tuple[int, int]]:
+        rows = spark.read.parquet(d).select(
+            "key", "_seq", F.col("fileLastModified").cast("long").alias("t")
+        ).collect()
+        assert len({r["key"] for r in rows}) == len(rows)
+        return {(r["_seq"], r["t"]) for r in rows}
+
+    def drain(i: int) -> int:
+        rows = [(e, k, t0 + timedelta(minutes=m), url.format(d)) for e, k, m, d in batches[i]]
+        pq.write_table(pa.table(list(map(list, zip(*rows))), schema=arrow),
+                       str(events / f"ev-{i}.parquet"))
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        job0 = int(dag.nextJobId())
+        run_event_stream_upsert(spark, str(events), schema, pi_dir, del_dir, ckpt,
+                                now=t0.isoformat())
+        return int(dag.nextJobId()) - job0
+
+    for n in (1, 2):
+        jobs = drain(n - 1)
+        assert table(pi_dir) == model(n, created)
+        assert table(del_dir) == model(n, deleted)
+    assert jobs <= 4
 
 
 @pytest.mark.parametrize("crash", ["before_promote", "mid_promote"])
@@ -352,7 +424,7 @@ def test_drain_crash_then_next_drain_gives_lww_table(spark, tmp_path, monkeypatc
 
     def drain() -> None:
         run_event_stream_upsert(spark, str(events), schema, pi_dir, del_dir, ckpt,
-                                now=t0.isoformat(), shuffle_partitions=2)
+                                now=t0.isoformat())
 
     def winners(n_ticks: int) -> set[int]:
         best: dict[int, tuple[int, int]] = {}

@@ -15,13 +15,15 @@ an order-insensitive multiset of normalized values.  Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script lives in, wherever it is run from
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from azuredatalakeindexer_spark.sources.fixtures import TABLES
